@@ -1,3 +1,3 @@
-from chronon_spark.aggregators.kernels import EventColumns, compute_parts
+from chronon_spark.aggregators.kernels import MultiKeyEventColumns, compute_parts_multikey
 
-__all__ = ["EventColumns", "compute_parts"]
+__all__ = ["MultiKeyEventColumns", "compute_parts_multikey"]

@@ -75,10 +75,12 @@ _D = "__decd"  # double-upcast variant suffix
 
 
 def _rescale_sql(src: str, scale: int) -> str:
-    """Exact unscaled-long -> DECIMAL(38, scale) SQL fragment."""
+    """Exact unscaled-long -> DECIMAL(38, scale) SQL fragment. The dividend is
+    DECIMAL(19,0), just wide enough for any long: a DECIMAL(38,0) dividend
+    leaves the quotient no room and Spark clamps its scale to 6."""
     div = 10**scale
     return (
-        f"CAST(CAST({src} AS DECIMAL(38,0)) / CAST({div} AS DECIMAL({scale + 1},0)) "
+        f"CAST(CAST({src} AS DECIMAL(19,0)) / CAST({div} AS DECIMAL({scale + 1},0)) "
         f"AS DECIMAL(38,{scale}))"
     )
 

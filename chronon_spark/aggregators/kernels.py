@@ -1,14 +1,18 @@
 """Vectorized range-aggregation kernels for the sawtooth as-of operator.
 
-Given one entity's events sorted by (ts, tie_breakers) and Q query timestamps,
-compute every AggregationPart's value over the half-open window
-``[window_start(q), q)`` (strict ``ts' < ts`` — zero temporal leakage; the
-reference's inclusive batch boundary is available via ``include_equal``).
+Given the events of MANY entity keys and Q query timestamps that each carry
+their key's code, compute every AggregationPart's value over the half-open
+window ``[window_start(q), q)`` (strict ``ts' < ts`` — zero temporal leakage;
+the reference's inclusive batch boundary is available via ``include_equal``).
+Events live in one composite int64 index ``key_code * block + (ts − base)``
+(``MultiKeyEventColumns``, laid out by ``composite_layout``), so one
+``searchsorted`` resolves every key's windows at once; a single key is the
+all-zero-codes case.
 
 This replaces the reference's row-at-a-time JVM sawtooth
 (reference: aggregator/.../windowing/SawtoothAggregator.scala:165-243 — a
 sorted-merge two-pointer over queries × events) with numpy prefix scans +
-``searchsorted``: O((E+Q)·logE) per key, fully vectorized. It is the "head
+``searchsorted``: O((E+Q)·logE) per batch, fully vectorized. It is the "head
 exact" half of the sawtooth; tail hop rounding (Resolution.scala) is the
 optional ``sawtooth=True`` mode, and the tiled strategy
 (operators/tiles.py) bounds per-key state the way the reference's
@@ -36,9 +40,11 @@ import pandas as pd
 from chronon_spark.api import AggregationPart, Op
 from chronon_spark.resolution import tail_hop_millis
 
-__all__ = ["EventColumns", "MultiKeyEventColumns", "compute_parts", "compute_parts_multikey"]
+__all__ = ["MultiKeyEventColumns", "composite_layout", "compute_parts_multikey"]
 
 _US_D = 86_400_000_000  # one day in micros — the largest hop size
+# every composite index ``code * block + rel_ts`` stays below this bound
+COMPOSITE_LIMIT = 2**62
 
 
 def _is_integral(arr: np.ndarray) -> bool:
@@ -64,69 +70,19 @@ class _ColumnSeries:
         e = np.searchsorted(self.ts, q_ends_ts, side=side)
         return s, np.maximum(e, s)
 
-    def filtered(self, mask: np.ndarray) -> "_ColumnSeries":
-        return _ColumnSeries(self.ts[mask], self.vals[mask])
-
-
-class EventColumns:
-    """Per-group event store: sorted ts + per-column compacted series."""
-
-    def __init__(self, events: pd.DataFrame, ts_col: str, tie_breakers: list[str]):
-        if len(events):
-            order_cols = [ts_col] + [c for c in tie_breakers if c in events.columns]
-            events = events.sort_values(order_cols, kind="stable").reset_index(drop=True)
-        self.events = events
-        self.ts = events[ts_col].to_numpy(dtype=np.int64) if len(events) else np.empty(0, np.int64)
-        self._cols: dict[tuple[str, str | None], _ColumnSeries] = {}
-
-    def column(self, name: str, bucket: str | None = None) -> _ColumnSeries:
-        """Compact (drop nulls, explode arrays) one column; cached."""
-        key = (name, bucket)
-        if key in self._cols:
-            return self._cols[key]
-        if not len(self.events):
-            cs = _ColumnSeries(np.empty(0, np.int64), np.empty(0, object))
-        else:
-            s = self.events[name]
-            ts = self.ts
-            # array-typed columns yield a list in every non-null row (fixed
-            # schema), so inspecting the first non-null value suffices
-            nn = s.dropna()
-            if len(nn) and isinstance(nn.iloc[0], (list, np.ndarray)):
-                # auto-explode vector inputs (reference: row/ColumnAggregator.scala:225-246)
-                lens = s.map(lambda v: len(v) if isinstance(v, (list, np.ndarray)) else 0).to_numpy(np.int64)
-                ts = np.repeat(ts, lens)
-                flat = [x for v in s if isinstance(v, (list, np.ndarray)) for x in v]
-                vals = pd.Series(flat)
-            else:
-                vals = s
-                mask = vals.notna().to_numpy()
-                ts, vals = ts[mask], vals[mask]
-            arr = _to_numpy(vals)
-            if arr.dtype == object:
-                nn = pd.notna(arr)
-                ts, arr = ts[nn], arr[nn]
-            cs = _ColumnSeries(ts, arr)
-        self._cols[key] = cs
-        return cs
-
 
 class MultiKeyEventColumns:
     """Bucket-wide event store: EVERY key's events in one structure, sorted by
     (key_code, ts, tie_breakers), addressed through a composite int64 index
     ``key_code * block + (ts − base)``.
 
-    Why: the per-key wrapper costs one pandas groupby slice + EventColumns
-    sort + kernel dispatch PER KEY — ~100 µs/query at 160 rows/key, and it
-    dominates the flagship backfill. Every ``_kernel`` primitive (prefix
-    sums, sparse tables, flat-range gathers, per-query slice loops) is
-    range-local, so with per-query [s, e) ranges confined to their key's
-    segment the SAME kernels run unchanged across all keys of an Arrow batch
-    at once — one searchsorted for the whole bucket instead of one per key.
+    Every ``_kernel`` primitive (prefix sums, sparse tables, flat-range
+    gathers, per-query slice loops) is range-local, so with per-query [s, e)
+    ranges confined to their key's segment the SAME kernels run unchanged
+    across all keys of an Arrow batch at once — one searchsorted for the
+    whole batch instead of a pandas slice + sort + dispatch per key.
 
-    ``base`` is day-aligned so sawtooth hop rounding (1d/1h/5m all divide a
-    day) commutes with the rebasing; ``block`` exceeds every relative ts so
-    windows clamped to the block start never cross into another key.
+    ``base`` and ``block`` come from ``composite_layout``.
     """
 
     def __init__(
@@ -216,7 +172,7 @@ class MultiKeyEventColumns:
     def map_entries(self, name: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(comp_repeated, map_keys, vals) of every non-null map entry, in
         composite-ts order — the per-map-key ``_grouped_kernel`` input
-        (mirrors the flatten in ``compute_parts``'s map branch)."""
+        (reference: row/MapColumnAggregator.scala, output Map[key -> agg])."""
         from itertools import chain
 
         if not len(self._raw):
@@ -241,8 +197,20 @@ class MultiKeyEventColumns:
 
 
 class _MapInput(Exception):
-    """Raised when a column is map-typed — the multikey fast path defers to
-    the per-key wrapper (per-map-key grouping stays per key)."""
+    """Raised by ``MultiKeyEventColumns.column`` when a column is map-typed:
+    map parts aggregate per map key through ``_grouped_kernel`` instead."""
+
+
+def composite_layout(q_ts: np.ndarray, r_ts: np.ndarray) -> tuple[int, int]:
+    """(base, block) of the composite index ``code * block + (ts − base)``
+    over one batch's query and event timestamps. ``base`` is day-aligned so
+    sawtooth hop rounding (1d/1h/5m all divide a day) commutes with the
+    rebasing; ``block`` exceeds every relative ts so windows clamped to the
+    block start never cross into another key."""
+    lo = int(min(q_ts.min(), r_ts.min(initial=q_ts.min())))
+    hi = int(max(q_ts.max(), r_ts.max(initial=q_ts.max())))
+    base = (lo // _US_D) * _US_D
+    return base, (hi - base) + 2
 
 
 def compute_parts_multikey(
@@ -253,8 +221,10 @@ def compute_parts_multikey(
     include_equal: bool = False,
     sawtooth: bool = False,
 ) -> dict[str, np.ndarray]:
-    """compute_parts over MANY keys at once: queries carry their key code;
-    window ranges are resolved in composite space. Bucketed and map-typed
+    """Compute every AggregationPart for Q query timestamps (int64 micros)
+    over MANY keys at once: queries carry their key code (< 0: null key,
+    empty windows); window ranges are resolved in composite space.
+    Returns {output_name: object ndarray of length Q}. Bucketed and map-typed
     parts run through ``_grouped_kernel`` on composite coordinates — the
     group slicing is per (bucket|map key) across ALL entity keys, and each
     query's range stays inside its key's segment."""
@@ -313,19 +283,19 @@ def _from_object_decimals(arr: np.ndarray) -> np.ndarray:
     DECIMAL(18,0) across the Arrow boundary ON PURPOSE: a nullable BIGINT
     would land in pandas as float64 and silently corrupt values above 2^53.
     Arrow surfaces decimals as boxed Decimals instead — here the null-free
-    compacted array converts integral decimals to int64 (exact; routes the
-    integral SUM kernel) and fractional ones to float64 (the reference's
-    bigDecimalToDouble upcast). Arrays containing nulls or non-decimals pass
-    through unchanged.
+    compacted array converts to int64 when EVERY value is integral (exact;
+    routes the integral SUM kernel) and to float64 otherwise (the
+    reference's bigDecimalToDouble upcast). Arrays containing nulls or
+    non-decimals pass through unchanged.
     """
     import decimal as _dec
 
     if not len(arr) or not isinstance(arr[0], _dec.Decimal):
         return arr
     try:
-        if arr[0].as_tuple().exponent >= 0:
-            return arr.astype(np.int64)  # int(Decimal) per element — exact
-        return arr.astype(np.float64)
+        ints = arr.astype(np.int64)  # int(Decimal) per element: truncates
+        # every element decides: one fractional value makes the array float
+        return ints if (ints == arr).all() else arr.astype(np.float64)
     except (TypeError, ValueError, OverflowError, _dec.InvalidOperation):
         return arr
 
@@ -645,81 +615,6 @@ def _tail_desc(vals: np.ndarray, off: np.ndarray, lens: np.ndarray, k: int) -> n
     offs = np.repeat(np.cumsum(klens) - klens, klens)
     idx = np.repeat(off + lens - 1, klens) - (np.arange(total, dtype=np.int64) - offs)
     return _obj_array(_split_lists(vals[idx], klens))
-
-
-def compute_parts(
-    ec: EventColumns,
-    parts: list[AggregationPart],
-    q_ts: np.ndarray,
-    include_equal: bool = False,
-    sawtooth: bool = False,
-) -> dict[str, np.ndarray]:
-    """Compute every AggregationPart for Q query timestamps (int64 micros).
-
-    Returns {output_name: object ndarray of length Q}.
-    """
-    side = "right" if include_equal else "left"
-    out: dict[str, np.ndarray] = {}
-    for part in parts:
-        w_us = None if part.window.millis is None else part.window.millis * 1000
-        if w_us is None:
-            q_starts = np.full(len(q_ts), np.iinfo(np.int64).min, np.int64)
-        else:
-            q_starts = q_ts - w_us
-            if sawtooth:
-                hop_us = tail_hop_millis(part.window.millis) * 1000
-                q_starts = (q_starts // hop_us) * hop_us
-        if part.bucket is None:
-            col_full = ec.events[part.input_column] if len(ec.events) else pd.Series([], dtype=object)
-            nn = col_full.dropna()
-            if len(nn) and isinstance(nn.iloc[0], dict):
-                # map input: aggregate PER MAP KEY (reference:
-                # row/MapColumnAggregator.scala) — output Map[key -> agg].
-                # Flatten via chain + np.repeat: one C-level pass over the
-                # entries instead of a per-entry python append loop
-                from itertools import chain
-
-                mask = col_full.notna().to_numpy()
-                sub = col_full[mask]
-                lens = np.fromiter((len(d) for d in sub), np.int64, count=len(sub))
-                flat = list(chain.from_iterable(d.items() for d in sub))
-                ts_rep = np.repeat(ec.ts[mask], lens)
-                if flat:
-                    ks, vs = zip(*flat)
-                    keep = np.fromiter((v is not None for v in vs), bool, count=len(vs))
-                    mkeys = np.fromiter((str(k) for k in ks), object, count=len(ks))[keep]
-                    ts_rep = ts_rep[keep]
-                    mvals = _to_numpy(pd.Series([v for v, ok in zip(vs, keep) if ok]))
-                else:
-                    mkeys = np.empty(0, object)
-                    mvals = _to_numpy(pd.Series([], dtype=object))
-                out[part.output_name] = _grouped_kernel(
-                    part, ts_rep, mkeys, mvals, q_starts, q_ts, side
-                )
-                continue
-            cs = ec.column(part.input_column)
-            s, e = cs.bounds(q_starts, q_ts, side)
-            out[part.output_name] = _kernel(part, cs, s, e)
-        else:
-            # bucketed: map<bucket_value, aggregate> (reference:
-            # row/BucketedColumnAggregator.scala)
-            if not len(ec.events):
-                out[part.output_name] = np.full(len(q_ts), None, object)
-                continue
-            bvals_full = ec.events[part.bucket]
-            col_full = ec.events[part.input_column]
-            mask = col_full.notna().to_numpy() & bvals_full.notna().to_numpy()
-            out[part.output_name] = _grouped_kernel(
-                part,
-                ec.ts[mask],
-                bvals_full[mask].astype(str).to_numpy(),
-                _to_numpy(col_full[mask]),
-                q_starts,
-                q_ts,
-                side,
-            )
-            continue
-    return out
 
 
 def _grouped_kernel(

@@ -112,7 +112,13 @@ def analyze_group_by(right: DataFrame, gb: GroupBy, where: str = "group_by") -> 
             # histogram/frequent family has no Decimal branch
             from chronon_spark.aggregators.decimal import DOUBLE_OPS, EXACT_OPS
 
-            if edt.precision > 18:
+            if edt is not dt:
+                errors.append(
+                    f"{where}: {c!r} is {dt.simpleString()} — nested fractional decimals "
+                    "have no exact kernel path (and no reference dispatch branch); project "
+                    "the elements to DOUBLE or DECIMAL(p,0) in the source query"
+                )
+            elif edt.precision > 18:
                 errors.append(
                     f"{where}: {c!r} is {edt.simpleString()} — precision > 18 does not fit "
                     "the int64 unscaled representation the kernels use; project to DOUBLE "

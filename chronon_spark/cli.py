@@ -233,6 +233,8 @@ def cmd_table_maintain(args) -> int:
 
 
 def main(argv=None) -> int:
+    from chronon_spark.operators.asof_join import STRATEGIES
+
     ap = argparse.ArgumentParser(prog="chronon_spark", description=__doc__)
     sub = ap.add_subparsers(dest="verb", required=True)
 
@@ -246,9 +248,7 @@ def main(argv=None) -> int:
             p.add_argument("--join", dest="join_spec", required=True)
         else:
             p.add_argument("--group-by", required=False, default=None)
-            p.add_argument(
-                "--strategy", default="plain", choices=["plain", "tiled", "sliced", "skew"]
-            )
+            p.add_argument("--strategy", default="plain", choices=list(STRATEGIES))
         _add_common(p)
         p.set_defaults(fn=cmd_backfill)
 

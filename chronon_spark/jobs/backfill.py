@@ -104,6 +104,8 @@ DEFAULT_GB = json.dumps(
 
 
 def main(argv=None) -> int:
+    from chronon_spark.operators.asof_join import STRATEGIES
+
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--events", required=True)
     ap.add_argument("--queries", required=True)
@@ -114,7 +116,7 @@ def main(argv=None) -> int:
     ap.add_argument(
         "--strategy",
         default="plain",
-        choices=["plain", "tiled", "sliced", "skew"],
+        choices=list(STRATEGIES),
         help="physical as-of plan for --group-by runs (tiled needs sawtooth:true)",
     )
     ap.add_argument("--master", default=None)

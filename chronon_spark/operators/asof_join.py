@@ -23,16 +23,17 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import importlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from chronon_spark.aggregators.kernels import (
     _US_D,
-    EventColumns,
+    COMPOSITE_LIMIT,
     MultiKeyEventColumns,
-    _MapInput,
-    compute_parts,
+    composite_layout,
     compute_parts_multikey,
 )
 from chronon_spark.api import Accuracy, GroupBy, Join, JoinPart
@@ -152,14 +153,14 @@ def asof_join(
     AggregationPart. Exactly one output row per left row (the reference's
     cardinality invariant, UnionJoinTest.scala:79-81).
 
-    ``coarse_buckets=N`` cogroups on ``hash(keys) % N`` instead of the raw
-    keys, and inside each Arrow batch the whole-bucket vectorized kernel
-    (compute_parts_multikey) resolves every key's windows in one pass —
+    Inside each Arrow batch the whole-batch vectorized kernel
+    (compute_parts_multikey) resolves every key's windows in one pass.
+    ``coarse_buckets`` picks the cogroup grouping (see ``cogroup_apply``):
+    ``N`` cogroups on ``hash(keys) % N`` so one batch carries many keys —
     measured 2× end-to-end over per-key cogroup even where the per-key
-    grouping could reuse an upstream exchange, and 10× in the kernel itself.
-    ``"auto"`` (default) sizes N to 4× the session's shuffle partitions;
-    ``None`` forces one cogroup group per key (exchange-reuse-friendly,
-    per-key kernels).
+    grouping could reuse an upstream exchange; ``"auto"`` (default) sizes N
+    to 4× the session's shuffle partitions; ``None`` forces one cogroup
+    group per key (exchange-reuse-friendly).
     """
     key_mapping = key_mapping or {k: k for k in gb.keys}
     left_keys = list(key_mapping.keys())
@@ -181,13 +182,6 @@ def asof_join(
         return apply_derivations(dec_post(out, prefix), gb.derivations)
     if prefilter:
         right = prefilter_right_keys(left, right, key_mapping, mode=prefilter)
-    if coarse_buckets == "auto":
-        try:
-            sp = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-        except ValueError:  # conf can be the string "auto" under AQE-managed envs
-            sp = left.sparkSession.sparkContext.defaultParallelism or 64
-        coarse_buckets = max(sp * 4, 64)
-
     parts = gb.parts()
     right_types = {f.name: f.dataType for f in right.schema.fields}
     feat_fields = []
@@ -216,26 +210,52 @@ def asof_join(
     feat_names = [f.name for f in feat_fields]
     part_list = list(parts)
 
-    def one_key(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        ec = EventColumns(rpdf, _TS_US, tie)
+    def batch_kernel(lpdf, rpdf, lcodes, rcodes, base, block) -> pd.DataFrame:
         q_ts = lpdf[_TS_US].to_numpy("int64")
-        feats = compute_parts(ec, part_list, q_ts, include_equal, sawtooth)
+        r_ts = rpdf[_TS_US].to_numpy("int64") if len(rpdf) else np.empty(0, "int64")
+        mec = MultiKeyEventColumns(rpdf, rcodes, r_ts, tie, base, block)
+        feats = compute_parts_multikey(mec, part_list, lcodes, q_ts, include_equal, sawtooth)
         out = lpdf[left_cols].copy()
         for p, fname in zip(part_list, feat_names):
             out[fname] = feats[p.output_name]
         return out
 
+    out = cogroup_apply(l, r, left_keys, right_keys, coarse_buckets, out_schema, batch_kernel)
+    return apply_derivations(out, gb.derivations)
+
+
+def cogroup_apply(
+    l: DataFrame,
+    r: DataFrame,
+    left_keys: list[str],
+    right_keys: list[str],
+    coarse_buckets: int | str | None,
+    out_schema: T.StructType,
+    batch_kernel,
+) -> DataFrame:
+    """Cogroup the queries ``l`` with the ``__r_``-aliased right side ``r``
+    and run ``batch_kernel(lpdf, rpdf, lcodes, rcodes, base, block)`` on
+    each Arrow batch in composite-index space (``composite_apply``).
+
+    ``coarse_buckets=N`` cogroups on ``hash(keys) % N`` and factorizes the
+    keys of each batch into codes; ``"auto"`` sizes N to 4× the session's
+    shuffle partitions; ``None`` cogroups on the raw keys, one code per
+    group."""
+    if coarse_buckets == "auto":
+        try:
+            sp = int(l.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
+        except ValueError:  # conf can be the string "auto" under AQE-managed envs
+            sp = l.sparkSession.sparkContext.defaultParallelism or 64
+        coarse_buckets = max(sp * 4, 64)
+    out_cols = out_schema.names
+
     def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if not len(lpdf):
-            return pd.DataFrame(columns=left_cols + feat_names)
+            return pd.DataFrame(columns=out_cols)
         rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
-        return one_key(lpdf, rpdf)
-
-    def fn_multikey(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        """Whole-bucket vectorized path: one composite-index searchsorted
-        resolves every query's window across ALL keys in the Arrow batch —
-        no per-key pandas slicing (5-10x on many-small-keys workloads)."""
-        if len(left_keys) == 1:
+        if not coarse_buckets:
+            codes = np.zeros(len(lpdf) + len(rpdf), np.int64)
+        elif len(left_keys) == 1:
             joint = pd.concat([lpdf[left_keys[0]], rpdf[right_keys[0]]], ignore_index=True)
             codes = pd.factorize(joint, use_na_sentinel=True)[0]
         else:
@@ -245,58 +265,68 @@ def asof_join(
             ]
             codes = pd.MultiIndex.from_arrays(arrays).factorize()[0]
         lcodes, rcodes = codes[: len(lpdf)], codes[len(lpdf) :]
-        q_ts = lpdf[_TS_US].to_numpy("int64")
-        r_ts = rpdf[_TS_US].to_numpy("int64") if len(rpdf) else np.empty(0, "int64")
-        lo = int(min(q_ts.min(), r_ts.min())) if len(r_ts) else int(q_ts.min())
-        hi = int(max(q_ts.max(), r_ts.max())) if len(r_ts) else int(q_ts.max())
-        base = (lo // _US_D) * _US_D  # day-aligned: sawtooth rounding commutes
-        block = (hi - base) + 2
-        if (int(codes.max(initial=0)) + 2) * block > 2**62:
-            raise _MapInput("composite-index overflow")  # fall back per-key
-        mec = MultiKeyEventColumns(rpdf, rcodes, r_ts, tie, base, block)
-        feats = compute_parts_multikey(mec, part_list, lcodes, q_ts, include_equal, sawtooth)
-        out = lpdf[left_cols].copy()
-        for p, fname in zip(part_list, feat_names):
-            out[fname] = feats[p.output_name]
-        return out
-
-    def fn_bucketed(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        """One Arrow batch holds MANY keys: the composite-index kernel covers
-        scalar, bucketed, AND map-typed parts; only composite overflow
-        (pathological ts span × key count) falls back to per-key kernels."""
-        if not len(lpdf):
-            return pd.DataFrame(columns=left_cols + feat_names)
-        rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
-        try:
-            return fn_multikey(lpdf, rpdf)
-        except _MapInput:
-            pass
-
-        def norm(k):
-            return k if isinstance(k, tuple) else (k,)
-
-        r_groups = (
-            {norm(k): df for k, df in rpdf.groupby(right_keys, sort=False)} if len(rpdf) else {}
-        )
-        empty_r = rpdf.iloc[0:0]
-        pieces = []
-        # dropna=False: left rows with null keys must still emit (with null
-        # features) — the one-row-per-left-row invariant
-        for k, lsub in lpdf.groupby(left_keys, sort=False, dropna=False):
-            pieces.append(one_key(lsub, r_groups.get(norm(k), empty_r)))
-        return pd.concat(pieces, ignore_index=False)
+        return composite_apply(lpdf, rpdf, lcodes, rcodes, batch_kernel)
 
     if coarse_buckets:
         lb = l.withColumn("__b", F.pmod(F.xxhash64(*left_keys), F.lit(coarse_buckets)))
         rb = r.withColumn("__r___b", F.pmod(F.xxhash64(*[f"__r_{c}" for c in right_keys]), F.lit(coarse_buckets)))
         grouped = lb.groupby(F.col("__b")).cogroup(rb.groupby(F.col("__r___b")))
-        out = grouped.applyInPandas(fn_bucketed, schema=out_schema)
     else:
         grouped = l.groupby(*[F.col(c) for c in left_keys]).cogroup(
             r.groupby(*[F.col(f"__r_{c}") for c in right_keys])
         )
-        out = grouped.applyInPandas(fn, schema=out_schema)
-    return apply_derivations(out, gb.derivations)
+    return grouped.applyInPandas(fn, schema=out_schema)
+
+
+def composite_apply(lpdf, rpdf, lcodes, rcodes, batch_kernel) -> pd.DataFrame:
+    """Run ``batch_kernel`` over one batch laid out by
+    ``kernels.composite_layout``. When ``(n_codes + 2) * block`` exceeds
+    ``COMPOSITE_LIMIT`` (many keys over a very wide ts span) the batch is
+    cut into runs of key codes that fit, each renumbered from 0 and run
+    through the same kernel; null-key queries (code < 0) ride with the
+    first run. The common case is one run and no copy."""
+    q_ts = lpdf[_TS_US].to_numpy(np.int64)
+    r_ts = rpdf[_TS_US].to_numpy(np.int64) if len(rpdf) else np.empty(0, np.int64)
+    base, block = composite_layout(q_ts, r_ts)
+    n_codes = int(max(lcodes.max(initial=-1), rcodes.max(initial=-1))) + 1
+    per_run = COMPOSITE_LIMIT // block - 2
+    if n_codes <= per_run:
+        return batch_kernel(lpdf, rpdf, lcodes, rcodes, base, block)
+    if per_run < 1:
+        raise OverflowError(f"a {block} µs time span does not fit the composite index")
+    lrun = np.where(lcodes < 0, 0, lcodes // per_run)
+    rrun = np.where(rcodes < 0, 0, rcodes // per_run)
+    pieces = []
+    for run in np.unique(lrun):
+        lsel, rsel = lrun == run, rrun == run
+        lc, rc = lcodes[lsel], rcodes[rsel]
+        shift = int(run) * per_run
+        pieces.append(
+            batch_kernel(
+                lpdf[lsel], rpdf[rsel], np.where(lc < 0, lc, lc - shift),
+                np.where(rc < 0, rc, rc - shift), base, block,
+            )
+        )
+    return pd.concat(pieces)
+
+
+# strategy name -> (module, as-of join function), imported on lookup because
+# tiles and slicing import this module; every function takes (left, right,
+# gb, left_time_column=, key_mapping=, prefix=, prefilter=)
+STRATEGIES = {
+    "plain": ("chronon_spark.operators.asof_join", "asof_join"),
+    "tiled": ("chronon_spark.operators.tiles", "tiled_sawtooth_asof_join"),
+    "sliced": ("chronon_spark.operators.slicing", "sliced_asof_join"),
+    "skew": ("chronon_spark.operators.slicing", "skew_split_asof_join"),
+}
+
+
+def strategy_join(name: str):
+    """The as-of join function of physical strategy ``name``."""
+    if name not in STRATEGIES:
+        raise ValueError(f"unknown strategy {name!r} ({'/'.join(STRATEGIES)})")
+    module, fn = STRATEGIES[name]
+    return getattr(importlib.import_module(module), fn)
 
 
 def compute_join(left: DataFrame, join: Join, prefilter: str | None = None) -> DataFrame:
@@ -327,40 +357,11 @@ def compute_join(left: DataFrame, join: Join, prefilter: str | None = None) -> D
                 snap, F.timestamp_micros(F.expr(f"(__snap_us div {_US_D}) * {_US_D}"))
             ).drop("__snap_us")
             tc = snap
-        strategy = getattr(jp, "strategy", "plain") or "plain"
-        if strategy == "tiled":
-            from chronon_spark.operators.tiles import tiled_sawtooth_asof_join
-
-            out = tiled_sawtooth_asof_join(
-                out, right, jp.group_by, left_time_column=tc,
-                key_mapping=jp.key_mapping, prefix=jp.prefix, prefilter=prefilter,
-            )
-        elif strategy == "sliced":
-            from chronon_spark.operators.slicing import sliced_asof_join
-
-            out = sliced_asof_join(
-                out, right, jp.group_by, left_time_column=tc,
-                key_mapping=jp.key_mapping, prefix=jp.prefix, prefilter=prefilter,
-            )
-        elif strategy == "skew":
-            from chronon_spark.operators.slicing import skew_split_asof_join
-
-            out = skew_split_asof_join(
-                out, right, jp.group_by, left_time_column=tc,
-                key_mapping=jp.key_mapping, prefix=jp.prefix, prefilter=prefilter,
-            )
-        elif strategy == "plain":
-            out = asof_join(
-                out,
-                right,
-                jp.group_by,
-                left_time_column=tc,
-                key_mapping=jp.key_mapping,
-                prefix=jp.prefix,
-                prefilter=prefilter,
-            )
-        else:
-            raise ValueError(f"unknown part strategy {strategy!r} (plain/tiled/sliced/skew)")
+        join_fn = strategy_join(jp.strategy or "plain")
+        out = join_fn(
+            out, right, jp.group_by, left_time_column=tc,
+            key_mapping=jp.key_mapping, prefix=jp.prefix, prefilter=prefilter,
+        )
         if tc == "__snapshot_ts":
             out = out.drop(tc)
     out = apply_derivations(out, join.derivations)

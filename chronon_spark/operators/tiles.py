@@ -99,7 +99,7 @@ from chronon_spark.aggregators.kernels import (
     hist_finalize,
 )
 from chronon_spark.api import AggregationPart, GroupBy, Op
-from chronon_spark.operators.asof_join import apply_derivations, ensure_ts_us
+from chronon_spark.operators.asof_join import _TS_US, apply_derivations, cogroup_apply, ensure_ts_us
 from chronon_spark.resolution import tail_hop_millis
 from chronon_spark.types import part_output_type
 
@@ -118,8 +118,6 @@ TILED_OPS = (
 # (tail event volume) / QSK_K; 512 keeps a 13d x 1d-hop window under ~0.2%%
 # rank error per 100k-event tail while a tile row stays ~4 KB
 QSK_K = 512
-
-_TS_US = "__ts_us"
 
 
 def _op_family(op: Op) -> str | None:
@@ -648,22 +646,14 @@ def tiled_sawtooth_asof_join(
     part_list = list(parts)
     n_ties = len(tie_cols)
 
-    def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame, lcodes: np.ndarray, rcodes: np.ndarray) -> pd.DataFrame:
+    def kernel(lpdf, rpdf, lcodes, rcodes, base, block) -> pd.DataFrame:
         """Whole-batch kernel in composite-index space: code·block + (ts−base)
         makes every searchsorted resolve ALL keys of the Arrow batch at once
-        (same trick as kernels.MultiKeyEventColumns; per-key grouping is the
-        all-zero-codes special case). base is day-aligned so the sawtooth hop
-        rounding commutes with rebasing; clamping window offsets to [0, block)
+        (same layout as kernels.MultiKeyEventColumns, from
+        kernels.composite_layout); clamping window offsets to [0, block)
         keeps ranges inside their key's segment."""
         q_ts = lpdf[_TS_US].to_numpy(np.int64)
         r_ts = rpdf[_TS_US].to_numpy(np.int64) if len(rpdf) else np.empty(0, np.int64)
-        lo = int(min(q_ts.min(), r_ts.min())) if len(r_ts) else int(q_ts.min())
-        hi = int(max(q_ts.max(), r_ts.max())) if len(r_ts) else int(q_ts.max())
-        base = (lo // 86_400_000_000) * 86_400_000_000
-        block = (hi - base) + 2
-        if (int(max(lcodes.max(initial=0), rcodes.max(initial=0))) + 2) * block > 2**62:
-            raise OverflowError("composite-index overflow")
-
         is_tile = rpdf["__is_tile"].to_numpy(bool) if len(rpdf) else np.empty(0, bool)
         rcomp = rcodes.astype(np.int64) * block + (r_ts - base)
         tcomp_all, tiles_pdf = rcomp[is_tile], rpdf[is_tile]
@@ -1163,56 +1153,8 @@ def tiled_sawtooth_asof_join(
                 out[fname] = _hist2(evals, ewts, es, ee, hcs.vals, hs, he, k)
         return out
 
-    def fn_perkey(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf):
-            return pd.DataFrame(columns=left_cols + feat_names)
-        rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
-        return kernel(lpdf, rpdf, np.zeros(len(lpdf), np.int64), np.zeros(len(rpdf), np.int64))
-
-    def fn_bucketed(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf):
-            return pd.DataFrame(columns=left_cols + feat_names)
-        rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
-        if len(left_keys) == 1:
-            joint = pd.concat([lpdf[left_keys[0]], rpdf[right_keys[0]]], ignore_index=True)
-            codes = pd.factorize(joint, use_na_sentinel=True)[0]
-        else:
-            arrays = [
-                pd.concat([lpdf[lk], rpdf[rk]], ignore_index=True)
-                for lk, rk in zip(left_keys, right_keys)
-            ]
-            codes = pd.MultiIndex.from_arrays(arrays).factorize()[0]
-        lcodes, rcodes = codes[: len(lpdf)], codes[len(lpdf) :]
-        try:
-            return kernel(lpdf, rpdf, lcodes, rcodes)
-        except OverflowError:  # huge time span x many keys: per-key in-process
-            pieces = []
-            for k in np.unique(lcodes):
-                lsub = lpdf[lcodes == k]
-                rsub = rpdf[rcodes == k] if k >= 0 else rpdf.iloc[0:0]
-                pieces.append(
-                    kernel(lsub, rsub, np.zeros(len(lsub), np.int64), np.zeros(len(rsub), np.int64))
-                )
-            return pd.concat(pieces, ignore_index=False)
-
-    if coarse_buckets == "auto":
-        try:
-            sp = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-        except ValueError:
-            sp = left.sparkSession.sparkContext.defaultParallelism or 64
-        coarse_buckets = max(sp * 4, 64)
-
-    if coarse_buckets:
-        lb = l.withColumn("__b", F.pmod(F.xxhash64(*left_keys), F.lit(coarse_buckets)))
-        ub = union.withColumn(
-            "__r___b", F.pmod(F.xxhash64(*[f"__r_{c}" for c in right_keys]), F.lit(coarse_buckets))
-        )
-        grouped = lb.groupby(F.col("__b")).cogroup(ub.groupby(F.col("__r___b")))
-        return apply_derivations(grouped.applyInPandas(fn_bucketed, schema=out_schema), gb.derivations)
-    grouped = l.groupby(*[F.col(c) for c in left_keys]).cogroup(
-        union.groupby(*[F.col(f"__r_{c}") for c in right_keys])
-    )
-    return apply_derivations(grouped.applyInPandas(fn_perkey, schema=out_schema), gb.derivations)
+    out = cogroup_apply(l, union, left_keys, right_keys, coarse_buckets, out_schema, kernel)
+    return apply_derivations(out, gb.derivations)
 
 
 def _distinct2(

@@ -19,7 +19,9 @@ import time
 from pyspark.sql import SparkSession, functions as F
 
 from chronon_spark.api import GroupBy
-from chronon_spark.operators.asof_join import asof_join
+# asof_join stays importable from here: perfbench/worker.py's traced runs
+# look it up on this module
+from chronon_spark.operators.asof_join import asof_join, compute_join, strategy_join  # noqa: F401
 from chronon_spark.plans.table_lifecycle import ManagedTable, managed_table
 
 ENGINE_VERSION = "0.1.0"
@@ -225,11 +227,13 @@ def run_partitioned_backfill(
             ],
             "derivations": meta_join.derivations,
         }
-    if gb is not None and strategy == "tiled":
+    if gb is not None:
         # fail the strategy contract BEFORE the first partition, like analyze()
-        from chronon_spark.operators.tiles import validate_tiled_spec
+        join_fn = strategy_join(strategy)
+        if strategy == "tiled":
+            from chronon_spark.operators.tiles import validate_tiled_spec
 
-        validate_tiled_spec(gb)
+            validate_tiled_spec(gb)
     todo = unfilled_partitions(all_parts, checkpoint_dir, gb_hash)
     skipped = len(all_parts) - len(todo)
     # sink backend by ref shape: a path gets the parquet+JSON ManagedTable,
@@ -257,25 +261,8 @@ def run_partitioned_backfill(
         hi = F.date_add(F.to_timestamp(F.lit(ds_hi)), 1).cast("timestamp")
         ev = time_range_filter(events, time_col, lo_ts=lo, hi_ts=hi)
         if gb is not None:
-            if strategy == "tiled":
-                from chronon_spark.operators.tiles import tiled_sawtooth_asof_join
-
-                out = tiled_sawtooth_asof_join(q_part, ev, gb, left_time_column=left_time_column)
-            elif strategy == "sliced":
-                from chronon_spark.operators.slicing import sliced_asof_join
-
-                out = sliced_asof_join(q_part, ev, gb, left_time_column=left_time_column)
-            elif strategy == "skew":
-                from chronon_spark.operators.slicing import skew_split_asof_join
-
-                out = skew_split_asof_join(q_part, ev, gb, left_time_column=left_time_column)
-            elif strategy == "plain":
-                out = asof_join(q_part, ev, gb, left_time_column=left_time_column)
-            else:
-                raise ValueError(f"unknown strategy {strategy!r} (plain/tiled/sliced/skew)")
+            out = join_fn(q_part, ev, gb, left_time_column=left_time_column)
         else:
-            from chronon_spark.operators.asof_join import compute_join
-
             out = compute_join(q_part, join_builder(ev))
         # lifecycle-managed sink: dynamic partition overwrite + auto-expand +
         # archive when the spec hash changes (table_lifecycle.ManagedTable);

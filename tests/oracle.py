@@ -58,6 +58,8 @@ def _agg_slice(part: AggregationPart, vals: pd.Series) -> object:
         return list(pd.Series(v).sort_values().head(part.k))
     if op in (Op.UNIQUE_COUNT, Op.APPROX_UNIQUE_COUNT):
         return int(pd.Series(v).nunique())
+    if op == Op.UNIQUE_TOP_K:
+        return list(pd.Series(v).drop_duplicates().sort_values(ascending=False).head(part.k))
     if op == Op.HISTOGRAM:
         return {str(k): int(c) for k, c in pd.Series(v).astype(str).value_counts().items()}
     if op == Op.APPROX_PERCENTILE:

@@ -64,6 +64,15 @@ def test_bucket_must_be_string(spark, data):
     assert any("must be string" in e for e in rep.errors)
 
 
+def test_nested_fractional_decimal_rejected(spark, data):
+    """array<decimal(18,2)> passes no exact kernel path at runtime
+    (aggregators/decimal.py), so the pre-flight rejects it too."""
+    nested = data.withColumn("amts", F.array(F.col("n_chars").cast("decimal(18,2)")))
+    gb = _gb(aggregations=[Aggregation("amts", Op.SUM, windows=("7d",))])
+    rep = analyze_group_by(nested, gb)
+    assert any("nested fractional decimals" in e for e in rep.errors)
+
+
 def test_bad_derivation_syntax(spark, data):
     gb = _gb(derivations={"*": "*", "bad": "SELECT FROM WHERE"})
     rep = analyze_group_by(data, gb)

@@ -156,6 +156,18 @@ def test_decimal_snapshot_and_derivations(spark, frames):
     assert out["a"]["cents"] == int(want * 100)
 
 
+@pytest.mark.parametrize("scale", range(19))
+def test_rescale_exact_every_scale(spark, scale):
+    """Unscaled long -> DECIMAL(38, scale) keeps every digit at every scale
+    the int64 rewrite admits, including the ±(2^63 - 1) extremes."""
+    from chronon_spark.aggregators.decimal import _rescale_sql
+
+    unscaled = [0, 1, -1, 12345678901234567, -12345678901234567, 2**63 - 1, -(2**63 - 1)]
+    df = spark.createDataFrame([(u,) for u in unscaled], "u bigint")
+    got = [r[0] for r in df.selectExpr(f"{_rescale_sql('u', scale)} AS d").collect()]
+    assert got == [Decimal(u).scaleb(-scale) for u in unscaled]
+
+
 def test_decimal_guards(spark):
     ev = spark.createDataFrame(
         [("a", pd.Timestamp("2024-01-01").to_pydatetime(), Decimal("1.5"))],

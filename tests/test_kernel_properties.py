@@ -14,7 +14,12 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from chronon_spark.aggregators.kernels import EventColumns, compute_parts
+from chronon_spark.aggregators.kernels import (
+    MultiKeyEventColumns,
+    _from_object_decimals,
+    composite_layout,
+    compute_parts_multikey,
+)
 from chronon_spark.api import Aggregation, GroupBy, Op
 from tests.oracle import _agg_slice
 from chronon_spark.resolution import tail_hop_millis
@@ -60,6 +65,15 @@ def stream(draw):
     )
 
 
+def _compute(events, parts, q_ts, include_equal, sawtooth):
+    """The composite-index kernel on one key: all-zero key codes."""
+    r_ts = events["__ts_us"].to_numpy(np.int64)
+    base, block = composite_layout(q_ts, r_ts)
+    mec = MultiKeyEventColumns(events, np.zeros(len(r_ts), np.int64), r_ts, [], base, block)
+    q_codes = np.zeros(len(q_ts), np.int64)
+    return compute_parts_multikey(mec, parts, q_codes, q_ts, include_equal, sawtooth)
+
+
 def _oracle(part, ev_ts, vals, q, include_equal, sawtooth):
     m = ev_ts <= q if include_equal else ev_ts < q
     if part.window.millis is not None:
@@ -76,10 +90,9 @@ def _oracle(part, ev_ts, vals, q, include_equal, sawtooth):
 def test_kernels_match_bruteforce(data, include_equal, sawtooth):
     ev_ts, q_ts, vals = data
     events = pd.DataFrame({"__ts_us": ev_ts, "v": pd.Series(vals, dtype="float64")})
-    ec = EventColumns(events, "__ts_us", [])
     gb = GroupBy(keys=["k"], aggregations=OPS, include_equal=include_equal, sawtooth=sawtooth)
     parts = gb.parts()
-    got = compute_parts(ec, parts, q_ts, include_equal, sawtooth)
+    got = _compute(events, parts, q_ts, include_equal, sawtooth)
     for part in parts:
         for i, q in enumerate(q_ts):
             want = _oracle(part, ev_ts, vals, q, include_equal, sawtooth)
@@ -141,10 +154,9 @@ def test_integral_decimal_kernels_exact(data, include_equal):
     A float64 anywhere in the pipeline fails this by construction."""
     ev_ts, q_ts, vals = data
     events = pd.DataFrame({"__ts_us": ev_ts, "v": pd.Series(vals, dtype=object)})
-    ec = EventColumns(events, "__ts_us", [])
     gb = GroupBy(keys=["k"], aggregations=_DEC_OPS, include_equal=include_equal)
     parts = gb.parts()
-    got = compute_parts(ec, parts, q_ts, include_equal, sawtooth=False)
+    got = _compute(events, parts, q_ts, include_equal, sawtooth=False)
     for part in parts:
         for i, q in enumerate(q_ts):
             m = ev_ts <= q if include_equal else ev_ts < q
@@ -170,3 +182,16 @@ def test_integral_decimal_kernels_exact(data, include_equal):
                 assert int(g) == len(set(window)), name
             elif part.op == Op.COUNT:
                 assert int(g) == len(window), name
+
+
+def test_mixed_exponent_decimals_not_truncated():
+    """Every element decides the boxed-Decimal conversion: one fractional
+    value makes the array float64, whatever the first element's exponent."""
+    from decimal import Decimal
+
+    arr = np.array([Decimal("5"), Decimal("2.75")], object)
+    assert _from_object_decimals(arr).tolist() == [5.0, 2.75]
+    events = pd.DataFrame({"__ts_us": np.array([0, 1], np.int64), "v": pd.Series(list(arr), dtype=object)})
+    parts = GroupBy(keys=["k"], aggregations=[Aggregation("v", Op.SUM)]).parts()
+    got = _compute(events, parts, np.array([2], np.int64), False, False)
+    assert got[parts[0].output_name][0] == 7.75

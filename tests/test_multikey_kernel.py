@@ -1,6 +1,7 @@
-"""Multikey (whole-bucket vectorized) kernel vs the per-key path: identical
-results for every op, both boundary modes, sawtooth on/off, nulls, duplicate
-timestamps, vector inputs, and keys present on only one side."""
+"""Composite-index (multikey) kernel vs the brute-force oracle
+(tests/oracle.py): every op, both boundary modes, sawtooth on/off, nulls,
+duplicate timestamps, vector inputs, keys present on only one side, and
+batches whose keys do not fit one composite index (the overflow split)."""
 
 from __future__ import annotations
 
@@ -10,13 +11,15 @@ import pytest
 
 from chronon_spark.aggregators.kernels import (
     _US_D,
-    EventColumns,
+    COMPOSITE_LIMIT,
     MultiKeyEventColumns,
-    compute_parts,
+    composite_layout,
     compute_parts_multikey,
 )
 from chronon_spark.api import Aggregation, GroupBy, Op
+from chronon_spark.operators.asof_join import composite_apply
 from chronon_spark.sources.synth import synth_queries, synth_transcripts
+from tests.oracle import _agg_slice, naive_features
 
 ALL_OPS_GB = GroupBy(
     keys=["conv_id"],
@@ -44,64 +47,71 @@ ALL_OPS_GB = GroupBy(
 )
 
 
-def _perkey(ev, q, parts, include_equal, sawtooth):
-    r_groups = {k: df for k, df in ev.groupby("conv_id", sort=False)}
-    res = {p.output_name: {} for p in parts}
-    for k, lsub in q.groupby("conv_id", sort=False):
-        ec = EventColumns(r_groups.get(k, ev.iloc[0:0]), "tus", ["turn_idx"])
-        feats = compute_parts(ec, parts, lsub["tus"].to_numpy("int64"), include_equal, sawtooth)
-        for p in parts:
-            res[p.output_name].update(dict(zip(lsub.index, feats[p.output_name])))
-    return res
-
-
 def _multikey(ev, q, parts, include_equal, sawtooth):
     joint = pd.concat([q["conv_id"], ev["conv_id"]], ignore_index=True)
     codes = pd.factorize(joint)[0]
     lcodes, rcodes = codes[: len(q)], codes[len(q) :]
     q_ts = q["tus"].to_numpy("int64")
     r_ts = ev["tus"].to_numpy("int64")
-    base = (int(min(q_ts.min(), r_ts.min())) // _US_D) * _US_D
-    block = int(max(q_ts.max(), r_ts.max())) - base + 2
+    base, block = composite_layout(q_ts, r_ts)
     mec = MultiKeyEventColumns(ev, rcodes, r_ts, ["turn_idx"], base, block)
     return compute_parts_multikey(mec, parts, lcodes, q_ts, include_equal, sawtooth)
 
 
+def _null(x):
+    return x is None or (isinstance(x, float) and np.isnan(x))
+
+
 def _eq(a, b):
-    if isinstance(a, (list, dict)) or isinstance(b, (list, dict)):
-        return a == b
-    if a is None or b is None:
-        return a is None and b is None
+    if isinstance(a, dict) or isinstance(b, dict):
+        return isinstance(a, dict) and isinstance(b, dict) and a.keys() == b.keys() and all(
+            _eq(a[k], b[k]) for k in b
+        )
+    if isinstance(a, list) or isinstance(b, list):
+        return (
+            isinstance(a, list) and isinstance(b, list) and len(a) == len(b)
+            and all(_eq(x, y) for x, y in zip(a, b))
+        )
+    if _null(a) or _null(b):
+        return _null(a) and _null(b)
     if isinstance(a, str) or isinstance(b, str):
         return a == b
     fa, fb = float(a), float(b)
-    if np.isnan(fa) or np.isnan(fb):
-        return np.isnan(fa) and np.isnan(fb)
     return abs(fa - fb) <= 1e-7 + 1e-7 * abs(fb)
 
 
 @pytest.mark.parametrize("include_equal,sawtooth", [(False, False), (True, False), (False, True)])
 def test_multikey_equals_perkey_all_ops(include_equal, sawtooth):
+    """Every op against the per-key brute-force replay
+    (tests/oracle.naive_features)."""
     ev = synth_transcripts(n_rows=3000, n_convs=40)
     ev["tus"] = ev["ts"].astype("int64")
     q = synth_queries(ev, n_queries=400)
     q["tus"] = q["ts"].astype("int64")
     # include queries for a key with no events at all
     q = pd.concat(
-        [q, pd.DataFrame([{"conv_id": "conv_never", "tus": int(ev["tus"].iloc[0])}])],
+        [q, pd.DataFrame([{"conv_id": "conv_never", "ts": ev["ts"].iloc[0], "tus": int(ev["tus"].iloc[0])}])],
         ignore_index=True,
     )
-    parts = ALL_OPS_GB.parts()
-    want = _perkey(ev, q, parts, include_equal, sawtooth)
+    gb = GroupBy(
+        keys=ALL_OPS_GB.keys,
+        aggregations=ALL_OPS_GB.aggregations,
+        tie_breakers=ALL_OPS_GB.tie_breakers,
+        include_equal=include_equal,
+        sawtooth=sawtooth,
+    )
+    parts = gb.parts()
+    want = naive_features(ev, q[["conv_id", "ts"]], gb)
     got = _multikey(ev, q, parts, include_equal, sawtooth)
     for p in parts:
         for i in range(len(q)):
-            a, b = got[p.output_name][i], want[p.output_name][i]
-            assert _eq(a, b), f"{p.output_name} row {i}: multikey={a!r} perkey={b!r}"
+            a, b = got[p.output_name][i], want[p.output_name].iloc[i]
+            assert _eq(a, b), f"{p.output_name} row {i}: multikey={a!r} oracle={b!r}"
 
 
 def test_multikey_vector_inputs():
-    """Array-typed input columns auto-explode identically on both paths."""
+    """Array-typed input columns auto-explode: every element of every
+    in-window array is one input value."""
     rng = np.random.default_rng(5)
     n = 600
     base = pd.Timestamp("2024-01-01").value // 1000
@@ -127,8 +137,73 @@ def test_multikey_vector_inputs():
         time_column="tus",
     )
     parts = gb.parts()
-    want = _perkey(ev, q, parts, False, False)
     got = _multikey(ev, q, parts, False, False)
     for p in parts:
-        for i in range(len(q)):
-            assert _eq(got[p.output_name][i], want[p.output_name][i]), (p.output_name, i)
+        for i, (key, t) in enumerate(zip(q["conv_id"], q["tus"])):
+            m = (ev["conv_id"] == key) & (ev["tus"] < t) & (ev["tus"] >= t - p.window.millis * 1000)
+            flat = [x for v in ev.loc[m, "vals"] if v is not None for x in v]
+            want = _agg_slice(p, pd.Series(flat, dtype="float64"))
+            assert _eq(got[p.output_name][i], want), (p.output_name, i)
+
+
+SPLIT_GB = GroupBy(
+    keys=["k"],
+    aggregations=[
+        Aggregation("v", Op.COUNT, windows=(None,)),
+        Aggregation("v", Op.SUM, windows=("30d", None)),
+        Aggregation("v", Op.MIN, windows=(None,)),
+        Aggregation("v", Op.LAST_K, windows=(None,), k=2),
+    ],
+)
+
+
+def test_overflow_split_matches_oracle():
+    """40 keys whose events and queries span ~4,750 years: (40 + 2) * block
+    passes COMPOSITE_LIMIT, so composite_apply cuts the batch into runs of
+    key codes that fit and runs the same kernel on each. Null-key queries
+    ride with the first run and get empty windows."""
+    rng = np.random.default_rng(11)
+    span = 150_000_000_000_000_000  # µs, ~4,750 years
+    n_keys = 40
+    ev = pd.DataFrame(
+        {
+            "k": np.repeat([f"k{i}" for i in range(n_keys)], 6),
+            "__ts_us": rng.integers(0, span, n_keys * 6),
+            "v": rng.integers(-50, 50, n_keys * 6),
+        }
+    ).sort_values("__ts_us", ignore_index=True)  # the oracle reads windows in ts order
+    q = pd.DataFrame(
+        {
+            "k": [f"k{i}" for i in rng.integers(0, n_keys + 3, 120)] + [None, None],
+            "__ts_us": np.concatenate([rng.integers(0, span, 120), [span // 2, span]]),
+        }
+    )
+    joint = pd.concat([q["k"], ev["k"]], ignore_index=True)
+    codes = pd.factorize(joint, use_na_sentinel=True)[0]
+    lcodes, rcodes = codes[: len(q)], codes[len(q) :]
+    _, block = composite_layout(q["__ts_us"].to_numpy(), ev["__ts_us"].to_numpy())
+    assert (codes.max() + 1 + 2) * block > COMPOSITE_LIMIT  # the split is exercised
+    parts = SPLIT_GB.parts()
+    calls = []
+
+    def batch_kernel(lpdf, rpdf, lc, rc, base, block):
+        assert (max(lc.max(initial=0), rc.max(initial=0)) + 2) * block <= COMPOSITE_LIMIT
+        calls.append(len(lpdf))
+        r_ts = rpdf["__ts_us"].to_numpy(np.int64)
+        mec = MultiKeyEventColumns(rpdf, rc, r_ts, [], base, block)
+        feats = compute_parts_multikey(mec, parts, lc, lpdf["__ts_us"].to_numpy(np.int64))
+        out = lpdf.copy()
+        for p in parts:
+            out[p.output_name] = feats[p.output_name]
+        return out
+
+    got = composite_apply(q, ev, lcodes, rcodes, batch_kernel)
+    assert len(calls) > 1 and sum(calls) == len(q)
+    assert sorted(got.index) == list(range(len(q)))
+    for i, row in q.iterrows():
+        for p in parts:
+            m = (ev["k"] == row["k"]) & (ev["__ts_us"] < row["__ts_us"])
+            if p.window.millis is not None:
+                m &= ev["__ts_us"] >= row["__ts_us"] - p.window.millis * 1000
+            want = _agg_slice(p, ev.loc[m, "v"])
+            assert _eq(got.at[i, p.output_name], want), (p.output_name, i)

@@ -426,7 +426,7 @@ def test_join_part_strategy_dispatch(spark, tdf):
     assert base.equals(mixed[base.columns])
     import pytest as _pt
 
-    with _pt.raises(ValueError, match="unknown part strategy"):
+    with _pt.raises(ValueError, match="unknown strategy"):
         run("bogus", "plain")
 
 
@@ -443,3 +443,82 @@ def test_tiled_requires_sawtooth(spark, tdf):
     )
     with pytest.raises(ValueError, match="sawtooth"):
         tiled_sawtooth_asof_join(left, tdf, gb)
+
+
+def test_composite_overflow_split_plain_and_tiled(spark):
+    """One cogroup batch (coarse_buckets=1) of 600 keys whose epoch-millis
+    events span ~280 years: (600 + 2) * block passes the composite index's
+    2**62 bound, so both operators cut the batch into runs of key codes that
+    fit. Both must still match a brute-force replay, null keys included."""
+    import numpy as np
+
+    from chronon_spark.resolution import tail_hop_millis
+
+    rng = np.random.default_rng(3)
+    day_ms = 86_400_000
+    n_keys, per_key = 600, 4
+    span_ms = 280 * 365 * day_ms
+    centers = rng.integers(0, span_ms - 60 * day_ms, n_keys)
+    ev = pd.DataFrame(
+        {
+            "k": np.repeat([f"k{i}" for i in range(n_keys)], per_key),
+            "t": np.repeat(centers, per_key) + rng.integers(0, 40 * day_ms, n_keys * per_key),
+            "v": rng.integers(-100, 100, n_keys * per_key),
+        }
+    ).sort_values("t", ignore_index=True)
+    ev["seq"] = np.arange(len(ev))  # tie-breaker: the replay's ts order
+    # null-key queries sit inside every key's windows: whichever key gets
+    # code 0 in the batch, a null key must not read its events
+    keys = [f"k{i}" for i in rng.integers(0, n_keys, 900)] + ["k_none"] + [None] * n_keys
+    q = pd.DataFrame(
+        {
+            "qid": np.arange(len(keys)),
+            "k": keys,
+            "t": np.concatenate(
+                [centers[[int(k[1:]) for k in keys[:900]]] + rng.integers(0, 60 * day_ms, 900),
+                 [5], centers + 35 * day_ms]
+            ),
+        }
+    )
+    gb = GroupBy(
+        keys=["k"],
+        aggregations=[
+            Aggregation("v", Op.COUNT, windows=("30d", "7d")),
+            Aggregation("v", Op.SUM, windows=("30d",)),
+            Aggregation("v", Op.MAX, windows=("7d",)),
+            Aggregation("v", Op.LAST_K, windows=("30d",), k=2),
+        ],
+        time_column="t",
+        tie_breakers=["seq"],
+        sawtooth=True,
+    )
+    ev_df = spark.createDataFrame(ev, "k string, t bigint, v bigint, seq bigint")
+    q_df = spark.createDataFrame(q, "qid bigint, k string, t bigint")
+    parts = gb.parts()
+    by_key = {k: g for k, g in ev.groupby("k")}
+    want = {}
+    for qid, k, t in q.itertuples(index=False):
+        g = by_key.get(k, ev.iloc[0:0])
+        for p in parts:
+            hop = tail_hop_millis(p.window.millis)
+            start = (t - p.window.millis) // hop * hop
+            vals = g["v"][(g["t"] >= start) & (g["t"] < t)]
+            want[(qid, p.output_name)] = (
+                None if not len(vals)
+                else len(vals) if p.op == Op.COUNT
+                else int(vals.sum()) if p.op == Op.SUM
+                else int(vals.max()) if p.op == Op.MAX
+                else [int(x) for x in vals[::-1][: p.k]]
+            )
+    for join in (asof_join, tiled_sawtooth_asof_join):
+        out = join(q_df, ev_df, gb, left_time_column="t", coarse_buckets=1).toPandas()
+        assert sorted(out["qid"]) == list(q["qid"])
+        for row in out.itertuples(index=False):
+            for p in parts:
+                got = getattr(row, p.output_name)
+                got = None if got is None or (isinstance(got, float) and np.isnan(got)) else got
+                if isinstance(got, np.ndarray):
+                    got = [int(x) for x in got]
+                elif got is not None:
+                    got = int(got)
+                assert got == want[(row.qid, p.output_name)], (join.__name__, row.qid, p.output_name)

@@ -9,7 +9,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from chronon_spark.aggregators.kernels import EventColumns, compute_parts
+from chronon_spark.aggregators.kernels import (
+    MultiKeyEventColumns,
+    composite_layout,
+    compute_parts_multikey,
+)
 from chronon_spark.aggregators.twostack import compute_parts_twostack
 from chronon_spark.api import Aggregation, GroupBy, Op
 
@@ -46,8 +50,10 @@ def _parts():
 def test_twostack_matches_kernels(include_equal, sawtooth):
     ts, vals, q = _fixture()
     parts = _parts()
-    ec = EventColumns(pd.DataFrame({"__ts": ts, "v": vals}), "__ts", [])
-    want = compute_parts(ec, parts, q, include_equal, sawtooth)
+    # the composite-index kernel on one key: all-zero key codes
+    base, block = composite_layout(q, ts)
+    mec = MultiKeyEventColumns(pd.DataFrame({"v": vals}), np.zeros(len(ts), np.int64), ts, [], base, block)
+    want = compute_parts_multikey(mec, parts, np.zeros(len(q), np.int64), q, include_equal, sawtooth)
     got = compute_parts_twostack(ts, {"v": vals}, parts, q, include_equal, sawtooth)
     for p in parts:
         a, b = got[p.output_name], want[p.output_name]
