@@ -531,10 +531,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # whose latest green row is r03 (parked behind the r4 cap) — they ride in
 # front; (c) the 12 remaining slots go to r4-green queries whose CODE changed
 # this round: conf_backfill_resume (stepDays range chunking), the tiled
-# family + stream_stats_tiles (integral tile-SUM partials now cross Arrow as
-# DECIMAL(20,0) and merge in int64), entity_state_cdc (mutations feed the new
-# CDC fetch), and the load-bearing as-of quartet (the kernels' _to_numpy
-# gained the object-Decimal recovery path). Everything parked is r4-green
+# family + stream_stats_tiles (integral tile-SUM partials merge in int64),
+# entity_state_cdc (mutations feed the new CDC fetch), and the load-bearing
+# as-of quartet (the kernels' Arrow column reads). Everything parked is r4-green
 # with behaviorally-inert diffs and keeps its equivalence pytest.
 _FRONT_50 = [
     # (a) NEW this round

@@ -13,7 +13,7 @@ A from-scratch rebuild of the capabilities of cceasy/chronon (reference at
 
 Architecture: declarative DataFrame plans optimized by Catalyst everywhere
 possible; the as-of sawtooth aggregation runs inside vectorized Arrow
-``cogroup().applyInPandas`` kernels (numpy prefix-scan / searchsorted), never
+``cogroup().applyInArrow`` kernels (numpy prefix-scan / searchsorted), never
 per-row Python.
 """
 

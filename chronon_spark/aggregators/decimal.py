@@ -9,8 +9,9 @@ SKEW / KURTOSIS (bigDecimalToDouble) and to Float for the percentile sketch
 branch (mismatchException).
 
 The numpy kernels are long/double-based, so the equivalent Spark-first shape
-is a JVM-side rewrite BEFORE the applyInPandas boundary — no per-row Python,
-and the casts ride whole-stage codegen:
+is a JVM-side rewrite BEFORE the applyInArrow boundary — no per-row Python,
+no ``decimal128`` column reaches a kernel, and the casts ride whole-stage
+codegen:
 
 - exact ops: scale to the unscaled integer representation
   (``value * 10^s AS BIGINT`` — exact decimal arithmetic; precision <= 18 so
@@ -19,20 +20,17 @@ and the casts ride whole-stage codegen:
   declared ``DECIMAL(s+1, 0)`` so Spark's quotient scale ``max(6, s+2)``
   always covers the true scale — no rounding anywhere);
 - moment/percentile ops: ``CAST(value AS DOUBLE)``, the reference's
-  documented upcast.
+  documented upcast;
+- scale-0 inputs with precision <= 18 (top-level, or the elements of an
+  array/map input) are cast to BIGINT in place: already integral, so no
+  rescale is needed and the output types stay long
+  (``types.part_output_type``).
 
 Exactness bound (documented divergence): SUM is exact while the windowed
 UNSCALED sum fits int64 (|sum| < 9.2e18 / 10^s in value terms — e.g.
 ~9.2e16 for DECIMAL(18,2) money); the reference's BigDecimal sum is
 unbounded. Precision > 18 is rejected with a clear message instead of a
 silent double cast.
-
-Related known limitation OUTSIDE the decimal path: a plain NULLABLE BIGINT
-aggregation input whose values exceed 2^53 loses exactness in the plain
-as-of head (the Arrow->pandas float64 conversion for int-with-null columns,
-the same mechanism this module routes around). Real agg inputs that large
-are rare (epoch-micros is ~1.8e15); project such a column to
-DECIMAL(18,0) to opt into the exact boxed path.
 """
 
 from __future__ import annotations
@@ -85,6 +83,28 @@ def _rescale_sql(src: str, scale: int) -> str:
     )
 
 
+def _value_type(t: T.DataType) -> T.DataType:
+    """The type an aggregation reads from ``t``: the element of an array
+    (auto-exploded), the value of a map (per-key), else ``t`` itself."""
+    if isinstance(t, T.ArrayType):
+        return t.elementType
+    if isinstance(t, T.MapType):
+        return t.valueType
+    return t
+
+
+def _integral_decimal(t: T.DataType) -> bool:
+    return isinstance(t, T.DecimalType) and t.scale == 0 and t.precision <= 18
+
+
+def _to_bigint(col, t: T.DataType):
+    if isinstance(t, T.ArrayType):
+        return F.transform(col, lambda x: x.cast("bigint"))
+    if isinstance(t, T.MapType):
+        return F.transform_values(col, lambda _, v: v.cast("bigint"))
+    return col.cast("bigint")
+
+
 def rewrite_decimal_inputs(
     right: DataFrame, gb: GroupBy
 ) -> tuple[DataFrame, GroupBy, Callable[[DataFrame, str | None], DataFrame] | None]:
@@ -93,8 +113,9 @@ def rewrite_decimal_inputs(
     variants, ``gb'`` aggregates them (derivations stripped — the caller
     re-applies the ORIGINAL derivations after ``post``), and
     ``post(df, prefix)`` renames/rescales the kernel outputs back to the
-    original names and decimal types. Returns ``(right, gb, None)`` when no
-    rewrite is needed (the overwhelmingly common case costs one schema scan).
+    original names and decimal types. ``post`` is None when no output needs
+    renaming: no decimal inputs (the overwhelmingly common case costs one
+    schema scan) or only scale-0 ones, cast to BIGINT in ``right'``.
     """
     dec = {
         f.name: f.dataType
@@ -106,28 +127,25 @@ def rewrite_decimal_inputs(
     # have no exact rewrite here and no reference dispatch branch either —
     # refuse loudly instead of silently upcasting elements to float64
     for f in right.schema.fields:
-        if f.name not in used:
+        elem = _value_type(f.dataType)
+        if f.name not in used or elem is f.dataType:
             continue
-        elem = (
-            f.dataType.elementType
-            if isinstance(f.dataType, T.ArrayType)
-            else f.dataType.valueType if isinstance(f.dataType, T.MapType) else None
-        )
-        if isinstance(elem, T.DecimalType) and not (elem.scale == 0 and elem.precision <= 18):
+        if isinstance(elem, T.DecimalType) and not _integral_decimal(elem):
             raise ValueError(
                 f"aggregation input {f.name!r} is {f.dataType.simpleString()}: nested "
                 "fractional decimals have no exact kernel path (and no reference dispatch "
                 "branch) — project the elements to DOUBLE or DECIMAL(p,0) in the source query"
             )
-    # scale-0 decimals with precision <= 18 are already kernel-native: the
-    # type layer reads them as int64 (types.part_output_type + kernels.
-    # _from_object_decimals), values are exact, and no rescale is needed —
-    # also the fixpoint that terminates this rewrite (the derived __decu
-    # columns are themselves DECIMAL(18,0))
-    targets = {
-        c: t for c, t in dec.items()
-        if c in used and not (t.scale == 0 and t.precision <= 18)
-    }
+    # scale-0 decimals with precision <= 18 are already integral: they cast
+    # to BIGINT in place (keys excepted — their type decides the cogroup
+    # hash) and need no rescale
+    integral = sorted(
+        f.name for f in right.schema.fields
+        if f.name in used and f.name not in gb.keys and _integral_decimal(_value_type(f.dataType))
+    )
+    for c in integral:
+        right = right.withColumn(c, _to_bigint(F.col(c), right.schema[c].dataType))
+    targets = {c: t for c, t in dec.items() if c in used and not _integral_decimal(t)}
     for a in gb.aggregations:
         for b in a.buckets:
             if b in dec:
@@ -170,12 +188,9 @@ def rewrite_decimal_inputs(
     for c in sorted(add_long):
         s = targets[c].scale
         # decimal * integer literal is exact decimal arithmetic; p <= 18
-        # guarantees the unscaled value fits int64. The column stays
-        # DECIMAL(18,0) — NOT BIGINT — deliberately: a nullable bigint
-        # crosses Arrow->pandas as float64 and silently corrupts unscaled
-        # values above 2^53, while a decimal crosses as exact boxed Decimals
-        # that the kernels convert losslessly (_from_object_decimals)
-        r = r.withColumn(c + _U, F.expr(f"CAST(`{c}` * {10**s} AS DECIMAL(18,0))"))
+        # guarantees the unscaled value fits int64, and BIGINT crosses the
+        # Arrow boundary as int64 with a validity bitmap — exact above 2^53
+        r = r.withColumn(c + _U, F.expr(f"CAST(`{c}` * {10**s} AS BIGINT)"))
     for c in sorted(add_dbl):
         r = r.withColumn(c + _D, F.col(c).cast("double"))
 

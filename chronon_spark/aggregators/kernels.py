@@ -36,6 +36,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from chronon_spark.api import AggregationPart, Op
 from chronon_spark.resolution import tail_hop_millis
@@ -80,14 +82,15 @@ class MultiKeyEventColumns:
     gathers, per-query slice loops) is range-local, so with per-query [s, e)
     ranges confined to their key's segment the SAME kernels run unchanged
     across all keys of an Arrow batch at once — one searchsorted for the
-    whole batch instead of a pandas slice + sort + dispatch per key.
+    whole batch instead of a slice + sort + dispatch per key.
 
-    ``base`` and ``block`` come from ``composite_layout``.
+    ``events`` is the batch's ``pa.Table``; ``base`` and ``block`` come from
+    ``composite_layout``.
     """
 
     def __init__(
         self,
-        events: pd.DataFrame,
+        events: pa.Table,
         key_codes: np.ndarray,
         ts_us: np.ndarray,
         tie_breakers: list[str],
@@ -96,62 +99,30 @@ class MultiKeyEventColumns:
     ):
         self.base = base_ts_us
         self.block = block_us
-        # Columns are gathered lazily and per-column: a full-frame
-        # events.iloc[order] copies every column (including heavy text/object
-        # payloads the parts never read) and pays pandas index-take overhead —
-        # measured 9-13 s on an 800k-row hot-key group vs <1 s lazy.
+        # Columns are gathered lazily and per-column: a whole-table take
+        # would copy every column, including heavy text payloads the parts
+        # never read.
         self._raw = events
-        if len(events):
-            rel = ts_us - base_ts_us
-            comp = key_codes.astype(np.int64) * block_us + rel
-            ties = [events[c].to_numpy() for c in tie_breakers if c in events.columns]
-            self._order = np.lexsort(tuple(reversed([comp] + ties)))
-            self.comp = comp[self._order]
-        else:
-            self._order = np.empty(0, np.int64)
-            self.comp = np.empty(0, np.int64)
+        comp = key_codes.astype(np.int64) * block_us + (ts_us - base_ts_us)
+        ties = [_numpy(events.column(c)) for c in tie_breakers if c in events.column_names]
+        self._order = np.lexsort(tuple(reversed([comp] + ties)))
+        self.comp = comp[self._order]
         self._cols: dict[str, _ColumnSeries] = {}
+
+    def _take(self, name: str) -> pa.Array:
+        return self._raw.column(name).take(self._order).combine_chunks()
+
+    def is_map(self, name: str) -> bool:
+        return pa.types.is_map(self._raw.schema.field(name).type)
 
     def column(self, name: str) -> _ColumnSeries:
         """Compacted (non-null, arrays exploded) series keyed by composite ts."""
-        if name in self._cols:
-            return self._cols[name]
-        if not len(self._raw):
-            cs = _ColumnSeries(np.empty(0, np.int64), np.empty(0, object))
-        else:
-            s = self._raw[name]
-            # plain dtypes: zero-copy view then one numpy gather; extension
-            # (nullable) dtypes: convert via _to_numpy FIRST so NA handling
-            # matches the Series path, then gather
-            if s.dtype == object or s.dtype.kind in ("i", "u", "f", "b", "M", "m"):
-                arr = s.to_numpy()[self._order]
-            else:
-                arr = _to_numpy(s)[self._order]
-            comp = self.comp
-            valid = pd.notna(arr)
-            nzi = valid.nonzero()[0] if arr.dtype == object else None
-            first = arr[nzi[0]] if nzi is not None and len(nzi) else None
-            if isinstance(first, dict):
-                raise _MapInput(name)
-            if isinstance(first, (list, np.ndarray)):
-                lens = np.fromiter(
-                    (len(v) if isinstance(v, (list, np.ndarray)) else 0 for v in arr),
-                    np.int64,
-                    len(arr),
-                )
-                comp = np.repeat(comp, lens)
-                flat = [x for v in arr if isinstance(v, (list, np.ndarray)) for x in v]
-                arr = _to_numpy(pd.Series(flat))
-                if arr.dtype == object:
-                    keep = pd.notna(arr)
-                    comp, arr = comp[keep], arr[keep]
-            else:
-                if not valid.all():
-                    comp, arr = comp[valid], arr[valid]
-                arr = _to_numpy(arr)
-            cs = _ColumnSeries(comp, arr)
-        self._cols[name] = cs
-        return cs
+        if name not in self._cols:
+            arr, comp = self._take(name), self.comp
+            if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
+                arr, comp = _explode(arr, comp)
+            self._cols[name] = _ColumnSeries(*valid_values(arr, comp))
+        return self._cols[name]
 
     def pair(self, name: str, bucket: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(comp, bucket_strs, vals) where BOTH value and bucket are non-null,
@@ -159,46 +130,48 @@ class MultiKeyEventColumns:
         per-bucket kernels are range-local like everything else, so grouping
         by bucket across ALL keys at once is safe: each query's [s, e) range
         stays inside its key's composite segment."""
-        if not len(self._raw):
-            z = np.empty(0, np.int64)
-            return z, np.empty(0, object), np.empty(0, object)
-        col = self._raw[name].to_numpy()[self._order]
-        bk = self._raw[bucket].to_numpy()[self._order]
-        mask = pd.notna(col) & pd.notna(bk)
-        vals = _to_numpy(pd.Series(col[mask]))
-        bks = np.fromiter((str(x) for x in bk[mask]), object, count=int(mask.sum()))
-        return self.comp[mask], bks, vals
+        col, bk = self._take(name), self._take(bucket)
+        mask = _is_valid(col) & _is_valid(bk)
+        keep = pa.array(mask)
+        return self.comp[mask], _numpy(bk.filter(keep).cast(pa.string())), _numpy(col.filter(keep))
 
     def map_entries(self, name: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(comp_repeated, map_keys, vals) of every non-null map entry, in
         composite-ts order — the per-map-key ``_grouped_kernel`` input
         (reference: row/MapColumnAggregator.scala, output Map[key -> agg])."""
-        from itertools import chain
-
-        if not len(self._raw):
-            z = np.empty(0, np.int64)
-            return z, np.empty(0, object), np.empty(0, object)
-        col = self._raw[name].to_numpy()[self._order]
-        mask = pd.notna(col)
-        sub = col[mask]
-        lens = np.fromiter((len(d) for d in sub), np.int64, count=len(sub))
-        comp_rep = np.repeat(self.comp[mask], lens)
-        flat = list(chain.from_iterable(d.items() for d in sub))
-        if flat:
-            ks, vs = zip(*flat)
-            keep = np.fromiter((v is not None for v in vs), bool, count=len(vs))
-            mkeys = np.fromiter((str(k) for k in ks), object, count=len(ks))[keep]
-            comp_rep = comp_rep[keep]
-            mvals = _to_numpy(pd.Series([v for v, ok in zip(vs, keep) if ok]))
-        else:
-            mkeys = np.empty(0, object)
-            mvals = _to_numpy(pd.Series([], dtype=object))
-        return comp_rep, mkeys, mvals
+        entries, comp = _explode(self._take(name), self.comp)
+        keys, vals = entries.field(0), entries.field(1)
+        mask = _is_valid(vals)
+        keep = pa.array(mask)
+        return comp[mask], _numpy(keys.filter(keep).cast(pa.string())), _numpy(vals.filter(keep))
 
 
-class _MapInput(Exception):
-    """Raised by ``MultiKeyEventColumns.column`` when a column is map-typed:
-    map parts aggregate per map key through ``_grouped_kernel`` instead."""
+def _numpy(arr) -> np.ndarray:
+    """numpy values of an Arrow array (strings and nested values -> object)."""
+    return arr.to_numpy(zero_copy_only=False)
+
+
+def _is_valid(arr: pa.Array) -> np.ndarray:
+    if not arr.null_count:
+        return np.ones(len(arr), bool)
+    return _numpy(arr.is_valid())
+
+
+def valid_values(arr: pa.Array, comp: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(comp, values) of the non-null entries of ``arr``, read from its
+    validity bitmap."""
+    if arr.null_count:
+        comp, arr = comp[_is_valid(arr)], arr.drop_null()
+    return comp, _numpy(arr)
+
+
+def _explode(arr: pa.Array, comp: np.ndarray) -> tuple[pa.Array, np.ndarray]:
+    """Flatten a list column (a map column into its key/value structs),
+    repeating each row's composite ts once per element."""
+    if pa.types.is_map(arr.type):
+        arr = arr.cast(pa.list_(pa.struct([arr.type.key_field, arr.type.item_field])))
+    lens = _numpy(pc.list_value_length(arr).fill_null(0))
+    return pc.list_flatten(arr), np.repeat(comp, lens)
 
 
 def composite_layout(q_ts: np.ndarray, r_ts: np.ndarray) -> tuple[int, int]:
@@ -252,52 +225,14 @@ def compute_parts_multikey(
             comp_e, bks, bvals = mec.pair(part.input_column, part.bucket)
             out[part.output_name] = _grouped_kernel(part, comp_e, bks, bvals, comp_start, comp_q, side)
             continue
-        try:
-            cs = mec.column(part.input_column)
-        except _MapInput:
+        if mec.is_map(part.input_column):
             comp_rep, mkeys, mvals = mec.map_entries(part.input_column)
             out[part.output_name] = _grouped_kernel(part, comp_rep, mkeys, mvals, comp_start, comp_q, side)
             continue
+        cs = mec.column(part.input_column)
         s, e = cs.bounds(comp_start, comp_q, side)
         out[part.output_name] = _kernel(part, cs, s, e)
     return out
-
-
-def _to_numpy(s: pd.Series) -> np.ndarray:
-    if isinstance(s, np.ndarray):
-        return _from_object_decimals(s) if s.dtype == object else s
-    if s.dtype.kind in ("i", "u", "f", "b", "M"):
-        return s.to_numpy()
-    # nullable extension or object
-    try:
-        out = s.to_numpy(dtype=np.float64, na_value=np.nan) if s.dtype.kind not in ("O", "S", "U") else s.to_numpy()
-    except (TypeError, ValueError):
-        out = s.to_numpy()
-    return _from_object_decimals(out) if out.dtype == object else out
-
-
-def _from_object_decimals(arr: np.ndarray) -> np.ndarray:
-    """Exact numeric recovery for object arrays of ``decimal.Decimal``.
-
-    The Decimal rewrite (aggregators/decimal.py) keeps its unscaled columns
-    DECIMAL(18,0) across the Arrow boundary ON PURPOSE: a nullable BIGINT
-    would land in pandas as float64 and silently corrupt values above 2^53.
-    Arrow surfaces decimals as boxed Decimals instead — here the null-free
-    compacted array converts to int64 when EVERY value is integral (exact;
-    routes the integral SUM kernel) and to float64 otherwise (the
-    reference's bigDecimalToDouble upcast). Arrays containing nulls or
-    non-decimals pass through unchanged.
-    """
-    import decimal as _dec
-
-    if not len(arr) or not isinstance(arr[0], _dec.Decimal):
-        return arr
-    try:
-        ints = arr.astype(np.int64)  # int(Decimal) per element: truncates
-        # every element decides: one fractional value makes the array float
-        return ints if (ints == arr).all() else arr.astype(np.float64)
-    except (TypeError, ValueError, OverflowError, _dec.InvalidOperation):
-        return arr
 
 
 # ---------------------------------------------------------------- kernels

@@ -415,13 +415,14 @@ def run_conf_backfill(
 
     from chronon_spark.operators.asof_join import compute_join
     from chronon_spark.plans.manifest import (
-        ENGINE_VERSION,
+        commit_range_manifests,
+        contiguous_ranges,
         ds_of,
         join_semantic_hash,
         time_range_filter,
         unfilled_partitions,
     )
-    from chronon_spark.plans.table_lifecycle import ManagedTable, managed_table
+    from chronon_spark.plans.table_lifecycle import managed_table
 
     conf = load_conf(path)
     if not isinstance(conf, LoadedJoin):
@@ -473,8 +474,6 @@ def run_conf_backfill(
     # TableUtils.scala:403-499 + JoinBase.scala:347-368): one Spark job per
     # contiguous run of up to step_days partitions; manifests stay per-ds so
     # resume granularity is unchanged.
-    from chronon_spark.plans.manifest import _parquet_rows, contiguous_ranges
-
     spec_meta = {
         "join_parts": [
             {"prefix": jp.prefix, "parts": [jp.out_name(p) for p in jp.group_by.parts()]}
@@ -500,46 +499,10 @@ def run_conf_backfill(
             parts.append(replace(jp, right_df=rdf))
         out = compute_join(q_part, replace(join, join_parts=parts))
         sink.insert_partitions(out, auto_expand=True, semantic_hash=gb_hash)
-        range_wall = round(_time.time() - t0, 3)
-        if isinstance(sink, ManagedTable):
-            # read-back validation from parquet footers — no Spark job
-            ds_out = {ds: _parquet_rows(os.path.join(out_path, f"ds={ds}")) for ds in ds_range}
-            part_paths = {ds: os.path.join(out_path, f"ds={ds}") for ds in ds_range}
-        else:
-            ds_out = {
-                r[0]: r[1]
-                for r in sink.read()
-                .where(F.col("ds").between(ds_lo, ds_hi))
-                .groupBy("ds")
-                .count()
-                .collect()
-            }
-            part_paths = {ds: f"{out_path}/ds={ds}" for ds in ds_range}
-        # manifests land only after the whole range's write committed
-        for ds in ds_range:
-            n_out = ds_out.get(ds, 0)
-            total_out += n_out
-            manifest = {
-                "ds": ds,
-                "engine_version": ENGINE_VERSION,
-                "semantic_hash": gb_hash,
-                "inputs": {
-                    "conf": {"path": path, "name": conf.name},
-                    "left_rows": ds_counts[ds],
-                },
-                "output": {"path": part_paths[ds], "rows": n_out},
-                "spec": spec_meta,
-                "stage_metrics": {
-                    "wall_sec": range_wall,
-                    "range": [ds_lo, ds_hi],
-                    "range_days": len(ds_range),
-                },
-                "completed_at_unix": int(_time.time()),
-            }
-            tmp = os.path.join(checkpoint_dir, f".{ds}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, os.path.join(checkpoint_dir, f"{ds}.json"))
+        total_out += commit_range_manifests(
+            sink, out_path, checkpoint_dir, ds_range, _time.time() - t0, gb_hash, spec_meta,
+            lambda ds: {"conf": {"path": path, "name": conf.name}, "left_rows": ds_counts[ds]},
+        )
     return {
         "partitions_total": len(all_ds),
         "partitions_computed": len(todo),

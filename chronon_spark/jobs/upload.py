@@ -55,7 +55,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from chronon_spark.api import GroupBy, Op
-from chronon_spark.operators.asof_join import ensure_ts_us
+from chronon_spark.operators.asof_join import coarse_bucket_count, ensure_ts_us, hash_bucket
 from chronon_spark.resolution import tail_hop_millis
 from chronon_spark.types import part_output_type
 
@@ -872,13 +872,9 @@ def fetch_features(
     # coarse-bucket cogroup: one Arrow batch carries MANY keys (serving key
     # counts make per-key cogroup groups overhead-bound — the same lesson as
     # asof_join's coarse_buckets), per-key merge runs in-process above
-    try:
-        sp = int(l.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-    except ValueError:  # "auto" under AQE-managed envs
-        sp = l.sparkSession.sparkContext.defaultParallelism or 64
-    n_buckets = max(sp * 4, 64)
-    lb = l.withColumn("__fb", F.pmod(F.xxhash64(*gb.keys), F.lit(n_buckets)))
-    rb = union.withColumn("__r___fb", F.pmod(F.xxhash64(*[f"__r_{c}" for c in gb.keys]), F.lit(n_buckets)))
+    n_buckets = coarse_bucket_count(l.sparkSession)
+    lb = hash_bucket(l, gb.keys, n_buckets, "__fb")
+    rb = hash_bucket(union, [f"__r_{c}" for c in gb.keys], n_buckets, "__r___fb")
     grouped = lb.groupby(F.col("__fb")).cogroup(rb.groupby(F.col("__r___fb")))
     return grouped.applyInPandas(fn, schema=out_schema)
 

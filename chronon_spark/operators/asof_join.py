@@ -6,9 +6,11 @@ shuffle ONCE on the entity keys, then each key's (queries, events) meet inside
 a single vectorized kernel — no row explosion on skewed keys, no per-query
 probe join. Where the reference unions null-mated structs +
 collect_list + mapPartitions, we use the idiomatic PySpark equivalent:
-``left.groupby(keys).cogroup(right.groupby(keys)).applyInPandas(...)`` — Arrow
-moves each co-group into numpy, and kernels.py runs the sawtooth
-(searchsorted + prefix scans, reference SawtoothAggregator.scala:165-243).
+``left.groupby(keys).cogroup(right.groupby(keys)).applyInArrow(...)`` — each
+co-group arrives as two ``pyarrow`` tables whose columns are read into numpy
+through their validity bitmaps (nullable BIGINT stays int64, exact above
+2^53), and kernels.py runs the sawtooth (searchsorted + prefix scans,
+reference SawtoothAggregator.scala:165-243).
 
 Scale notes (100 TB / 1000 executors):
 - one shuffle per join part, partitioned by entity key; AQE skew-join and
@@ -27,7 +29,9 @@ import importlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from chronon_spark.aggregators.kernels import (
     _US_D,
@@ -172,10 +176,10 @@ def asof_join(
     # Decimal dispatch), then rescale the outputs back — see aggregators/decimal.py
     from chronon_spark.aggregators.decimal import rewrite_decimal_inputs
 
-    right_dec, gb_dec, dec_post = rewrite_decimal_inputs(right, gb)
+    right, gb_dec, dec_post = rewrite_decimal_inputs(right, gb)
     if dec_post is not None:
         out = asof_join(
-            left, right_dec, gb_dec, left_time_column=left_time_column,
+            left, right, gb_dec, left_time_column=left_time_column,
             key_mapping=key_mapping, prefix=prefix,
             coarse_buckets=coarse_buckets, prefilter=prefilter,
         )
@@ -204,24 +208,65 @@ def asof_join(
     r = r.select(*[F.col(c).alias(f"__r_{c}") for c in r.columns])
     l = ensure_ts_us(left, left_time_column)
 
-    left_cols = [f.name for f in left.schema.fields]
     tie = list(gb.tie_breakers)
     include_equal, sawtooth = gb.include_equal, gb.sawtooth
-    feat_names = [f.name for f in feat_fields]
     part_list = list(parts)
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def batch_kernel(lpdf, rpdf, lcodes, rcodes, base, block) -> pd.DataFrame:
-        q_ts = lpdf[_TS_US].to_numpy("int64")
-        r_ts = rpdf[_TS_US].to_numpy("int64") if len(rpdf) else np.empty(0, "int64")
-        mec = MultiKeyEventColumns(rpdf, rcodes, r_ts, tie, base, block)
+    def batch_kernel(lt: pa.Table, rt: pa.Table, lcodes, rcodes, base, block) -> pa.Table:
+        q_ts = lt.column(_TS_US).to_numpy()
+        r_ts = rt.column(_TS_US).to_numpy()
+        mec = MultiKeyEventColumns(rt, rcodes, r_ts, tie, base, block)
         feats = compute_parts_multikey(mec, part_list, lcodes, q_ts, include_equal, sawtooth)
-        out = lpdf[left_cols].copy()
-        for p, fname in zip(part_list, feat_names):
-            out[fname] = feats[p.output_name]
-        return out
+        return kernel_output(lt, [feats[p.output_name] for p in part_list], arrow_schema)
 
     out = cogroup_apply(l, r, left_keys, right_keys, coarse_buckets, out_schema, batch_kernel)
     return apply_derivations(out, gb.derivations)
+
+
+def kernel_output(lt: pa.Table, feats: list, schema: pa.Schema) -> pa.Table:
+    """The batch result: the left columns of ``schema`` passed through from
+    ``lt``, then one Arrow column per feature built from the kernel's values
+    (NaN -> NULL, as Spark's pandas conversion did)."""
+    fields = list(schema)
+    n_left = len(fields) - len(feats)
+    cols = [lt.column(f.name).cast(f.type) for f in fields[:n_left]]
+    cols += [pa.array(v, type=f.type, from_pandas=True) for v, f in zip(feats, fields[n_left:])]
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def coarse_bucket_count(session) -> int:
+    """``"auto"`` coarse-bucket count: 4× the session's shuffle partitions
+    (at least 64), so one Arrow batch carries many keys."""
+    try:
+        sp = int(session.conf.get("spark.sql.shuffle.partitions", "64"))
+    except ValueError:  # conf can be the string "auto" under AQE-managed envs
+        sp = session.sparkContext.defaultParallelism or 64
+    return max(sp * 4, 64)
+
+
+def hash_bucket(df: DataFrame, keys: list[str], n_buckets: int, name: str) -> DataFrame:
+    """``df`` plus column ``name`` = ``hash(keys) % n_buckets``, the coarse
+    cogroup grouping."""
+    return df.withColumn(name, F.pmod(F.xxhash64(*keys), F.lit(n_buckets)))
+
+
+def _key_codes(lt: pa.Table, rt: pa.Table, left_keys: list[str], right_keys: list[str]) -> np.ndarray:
+    """Dense codes of the batch's key tuples, queries first then events;
+    a query with any null key component gets -1 (it matches no event)."""
+    codes = None
+    for lk, rk in zip(left_keys, right_keys):
+        lcol = lt.column(lk).combine_chunks()
+        joint = pa.concat_arrays([lcol, rt.column(rk).combine_chunks().cast(lcol.type)])
+        enc = joint.dictionary_encode()
+        c = enc.indices.fill_null(-1).to_numpy().astype(np.int64)
+        if codes is None:
+            codes = c
+        else:
+            null = (codes < 0) | (c < 0)
+            codes = pd.factorize(codes * len(enc.dictionary) + c)[0]
+            codes[null] = -1
+    return codes
 
 
 def cogroup_apply(
@@ -234,64 +279,55 @@ def cogroup_apply(
     batch_kernel,
 ) -> DataFrame:
     """Cogroup the queries ``l`` with the ``__r_``-aliased right side ``r``
-    and run ``batch_kernel(lpdf, rpdf, lcodes, rcodes, base, block)`` on
-    each Arrow batch in composite-index space (``composite_apply``).
+    and run ``batch_kernel(lt, rt, lcodes, rcodes, base, block)`` on each
+    batch's ``pyarrow`` tables in composite-index space
+    (``composite_apply``); the kernel returns a ``pa.Table`` of
+    ``out_schema``.
 
     ``coarse_buckets=N`` cogroups on ``hash(keys) % N`` and factorizes the
-    keys of each batch into codes; ``"auto"`` sizes N to 4× the session's
-    shuffle partitions; ``None`` cogroups on the raw keys, one code per
+    keys of each batch into codes; ``"auto"`` sizes N with
+    ``coarse_bucket_count``; ``None`` cogroups on the raw keys, one code per
     group."""
     if coarse_buckets == "auto":
-        try:
-            sp = int(l.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-        except ValueError:  # conf can be the string "auto" under AQE-managed envs
-            sp = l.sparkSession.sparkContext.defaultParallelism or 64
-        coarse_buckets = max(sp * 4, 64)
-    out_cols = out_schema.names
+        coarse_buckets = coarse_bucket_count(l.sparkSession)
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf):
-            return pd.DataFrame(columns=out_cols)
-        rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
-        if not coarse_buckets:
-            codes = np.zeros(len(lpdf) + len(rpdf), np.int64)
-        elif len(left_keys) == 1:
-            joint = pd.concat([lpdf[left_keys[0]], rpdf[right_keys[0]]], ignore_index=True)
-            codes = pd.factorize(joint, use_na_sentinel=True)[0]
+    def fn(lt: pa.Table, rt: pa.Table) -> pa.Table:
+        if not lt.num_rows:
+            return arrow_schema.empty_table()
+        rt = rt.rename_columns([c[4:] if c.startswith("__r_") else c for c in rt.column_names])
+        if coarse_buckets:
+            codes = _key_codes(lt, rt, left_keys, right_keys)
         else:
-            arrays = [
-                pd.concat([lpdf[lk], rpdf[rk]], ignore_index=True)
-                for lk, rk in zip(left_keys, right_keys)
-            ]
-            codes = pd.MultiIndex.from_arrays(arrays).factorize()[0]
-        lcodes, rcodes = codes[: len(lpdf)], codes[len(lpdf) :]
-        return composite_apply(lpdf, rpdf, lcodes, rcodes, batch_kernel)
+            codes = np.zeros(lt.num_rows + rt.num_rows, np.int64)
+        lcodes, rcodes = codes[: lt.num_rows], codes[lt.num_rows :]
+        return composite_apply(lt, rt, lcodes, rcodes, batch_kernel)
 
     if coarse_buckets:
-        lb = l.withColumn("__b", F.pmod(F.xxhash64(*left_keys), F.lit(coarse_buckets)))
-        rb = r.withColumn("__r___b", F.pmod(F.xxhash64(*[f"__r_{c}" for c in right_keys]), F.lit(coarse_buckets)))
+        lb = hash_bucket(l, left_keys, coarse_buckets, "__b")
+        rb = hash_bucket(r, [f"__r_{c}" for c in right_keys], coarse_buckets, "__r___b")
         grouped = lb.groupby(F.col("__b")).cogroup(rb.groupby(F.col("__r___b")))
     else:
         grouped = l.groupby(*[F.col(c) for c in left_keys]).cogroup(
             r.groupby(*[F.col(f"__r_{c}") for c in right_keys])
         )
-    return grouped.applyInPandas(fn, schema=out_schema)
+    return grouped.applyInArrow(fn, schema=out_schema)
 
 
-def composite_apply(lpdf, rpdf, lcodes, rcodes, batch_kernel) -> pd.DataFrame:
+def composite_apply(lt: pa.Table, rt: pa.Table, lcodes, rcodes, batch_kernel) -> pa.Table:
     """Run ``batch_kernel`` over one batch laid out by
     ``kernels.composite_layout``. When ``(n_codes + 2) * block`` exceeds
     ``COMPOSITE_LIMIT`` (many keys over a very wide ts span) the batch is
     cut into runs of key codes that fit, each renumbered from 0 and run
     through the same kernel; null-key queries (code < 0) ride with the
     first run. The common case is one run and no copy."""
-    q_ts = lpdf[_TS_US].to_numpy(np.int64)
-    r_ts = rpdf[_TS_US].to_numpy(np.int64) if len(rpdf) else np.empty(0, np.int64)
+    q_ts = lt.column(_TS_US).to_numpy()
+    r_ts = rt.column(_TS_US).to_numpy()
     base, block = composite_layout(q_ts, r_ts)
     n_codes = int(max(lcodes.max(initial=-1), rcodes.max(initial=-1))) + 1
     per_run = COMPOSITE_LIMIT // block - 2
     if n_codes <= per_run:
-        return batch_kernel(lpdf, rpdf, lcodes, rcodes, base, block)
+        return batch_kernel(lt, rt, lcodes, rcodes, base, block)
     if per_run < 1:
         raise OverflowError(f"a {block} µs time span does not fit the composite index")
     lrun = np.where(lcodes < 0, 0, lcodes // per_run)
@@ -303,11 +339,11 @@ def composite_apply(lpdf, rpdf, lcodes, rcodes, batch_kernel) -> pd.DataFrame:
         shift = int(run) * per_run
         pieces.append(
             batch_kernel(
-                lpdf[lsel], rpdf[rsel], np.where(lc < 0, lc, lc - shift),
+                lt.filter(lsel), rt.filter(rsel), np.where(lc < 0, lc, lc - shift),
                 np.where(rc < 0, rc, rc - shift), base, block,
             )
         )
-    return pd.concat(pieces)
+    return pa.concat_tables(pieces)
 
 
 # strategy name -> (module, as-of join function), imported on lookup because

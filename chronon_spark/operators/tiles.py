@@ -83,23 +83,33 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from chronon_spark.aggregators.kernels import (
+    MultiKeyEventColumns,
     _ColumnSeries,
     _flat_ranges,
-    _is_integral,
     _kernel,
+    _numpy,
     _prefix,
     _query_chunks,
     _run_starts,
     _sparse_query,
     _sparse_table,
-    _to_numpy,
     hist_finalize,
+    valid_values,
 )
 from chronon_spark.api import AggregationPart, GroupBy, Op
-from chronon_spark.operators.asof_join import _TS_US, apply_derivations, cogroup_apply, ensure_ts_us
+from chronon_spark.operators.asof_join import (
+    _TS_US,
+    apply_derivations,
+    cogroup_apply,
+    ensure_ts_us,
+    kernel_output,
+)
 from chronon_spark.resolution import tail_hop_millis
 from chronon_spark.types import part_output_type
 
@@ -257,26 +267,8 @@ def validate_tiled_spec(gb: GroupBy) -> list:
     return parts
 
 
-def integral_tile_cols(df: DataFrame) -> frozenset[str]:
-    """Columns whose tile SUM partial should stay exact-integer: integer
-    types and the Decimal rewrite's scale-0 decimals (aggregators/decimal.py).
-    Their ``__sum`` partials are cast DECIMAL(20,0) so they cross the
-    Arrow->pandas boundary as exact boxed Decimals — a nullable BIGINT would
-    arrive as float64 and corrupt unscaled values above 2^53."""
-    out = set()
-    for f in df.schema.fields:
-        t = f.dataType
-        if isinstance(t, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-            out.add(f.name)
-        elif isinstance(t, T.DecimalType) and t.scale == 0 and t.precision <= 18:
-            out.add(f.name)
-    return frozenset(out)
-
-
 def tile_agg_exprs(
-    need: dict[str, dict[str, int | None]],
-    tie_cols: list[str],
-    integral_sum_cols: frozenset[str] = frozenset(),
+    need: dict[str, dict[str, int | None]], tie_cols: list[str]
 ) -> tuple[list, list[str]]:
     """Per-column tile aggregation expressions over a frame that carries
     ``__ts_us`` + the input/tie columns. Shared by the batch tile builder and
@@ -299,13 +291,7 @@ def tile_agg_exprs(
         if "cnt" in stats:
             aggs.append(F.count(c).alias(f"{c}__cnt"))
         if "sum" in stats:
-            if c in integral_sum_cols:
-                # DECIMAL(20,0) on purpose — exact across Arrow (see
-                # integral_tile_cols); the merge's integral branch reads it
-                # back as int64 losslessly
-                aggs.append(F.sum(c).cast("decimal(20,0)").alias(f"{c}__sum"))
-            else:
-                aggs.append(F.sum(c).alias(f"{c}__sum"))
+            aggs.append(F.sum(c).alias(f"{c}__sum"))
         if "min" in stats:
             aggs.append(F.min(c).alias(f"{c}__min"))
         if "max" in stats:
@@ -360,7 +346,7 @@ def build_hop_tiles(
     tie_cols = [t for t in gb.tie_breakers if t in events.columns and t not in keys]
     head_cols = sorted(need) + [t for t in tie_cols if t not in need]
     hop_col = (F.col(_TS_US) / F.lit(hop_us)).cast("long")
-    aggs, hist_cols = tile_agg_exprs(need, tie_cols, integral_tile_cols(r))
+    aggs, hist_cols = tile_agg_exprs(need, tie_cols)
     if not aggs:  # every part bucketed/hist: keep a row-count anchor per tile
         aggs = [F.count(F.lit(1)).alias("__tile_rows")]
     tiles = (
@@ -398,11 +384,9 @@ def build_hop_tiles(
         # into the array<struct> IR column; collection IRs flatten into
         # SEPARATE per-family columns of array<struct<__b, ...>> — each
         # element tagged with its bucket. Nesting stays at list<struct>
-        # depth: list<struct<list<struct>>> payloads segfault pyarrow's
-        # arrow_to_pandas on some batch shapes (observed under spark-submit),
-        # and the flat layout is what the kernel's per-bucket slicing wants
-        # anyway. The flatten(collect_list(transform(...))) runs JVM-side —
-        # the nested intermediate never crosses Arrow.
+        # depth, the layout the kernel's per-bucket slicing reads with one
+        # list_flatten per column. The flatten(collect_list(transform(...)))
+        # runs JVM-side — the nested intermediate never crosses Arrow.
         agg2 = [F.count(c).alias("cnt")]
         struct_fields = ["__b", "cnt"]
         if "sm" in st:
@@ -548,7 +532,7 @@ def tiled_sawtooth_asof_join(
     # build (see aggregators/decimal.py), rescaled back after
     from chronon_spark.aggregators.decimal import rewrite_decimal_inputs
 
-    right_dec, gb_dec, dec_post = rewrite_decimal_inputs(right, gb)
+    right, gb_dec, dec_post = rewrite_decimal_inputs(right, gb)
     if dec_post is not None:
         from chronon_spark.aggregators.decimal import EXACT_OPS, _U
 
@@ -567,7 +551,7 @@ def tiled_sawtooth_asof_join(
                 "plain, sliced, or skew strategy, which keep them exact"
             )
         out = tiled_sawtooth_asof_join(
-            left, right_dec, gb_dec, left_time_column=left_time_column,
+            left, right, gb_dec, left_time_column=left_time_column,
             key_mapping=key_mapping, prefix=prefix,
             coarse_buckets=coarse_buckets, prefilter=prefilter,
         )
@@ -641,46 +625,39 @@ def tiled_sawtooth_asof_join(
         name = f"{prefix}_{p.output_name}" if prefix else p.output_name
         feat_fields.append(T.StructField(name, part_output_type(p, right_types[p.input_column]), True))
     out_schema = T.StructType(list(left.schema.fields) + feat_fields)
-    left_cols = [f.name for f in left.schema.fields]
     feat_names = [f.name for f in feat_fields]
     part_list = list(parts)
     n_ties = len(tie_cols)
 
-    def kernel(lpdf, rpdf, lcodes, rcodes, base, block) -> pd.DataFrame:
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def kernel(lt: pa.Table, rt: pa.Table, lcodes, rcodes, base, block) -> pa.Table:
         """Whole-batch kernel in composite-index space: code·block + (ts−base)
         makes every searchsorted resolve ALL keys of the Arrow batch at once
         (same layout as kernels.MultiKeyEventColumns, from
         kernels.composite_layout); clamping window offsets to [0, block)
         keeps ranges inside their key's segment."""
-        q_ts = lpdf[_TS_US].to_numpy(np.int64)
-        r_ts = rpdf[_TS_US].to_numpy(np.int64) if len(rpdf) else np.empty(0, np.int64)
-        is_tile = rpdf["__is_tile"].to_numpy(bool) if len(rpdf) else np.empty(0, bool)
-        rcomp = rcodes.astype(np.int64) * block + (r_ts - base)
-        tcomp_all, tiles_pdf = rcomp[is_tile], rpdf[is_tile]
+        q_ts = lt.column(_TS_US).to_numpy()
+        r_ts = rt.column(_TS_US).to_numpy()
+        is_tile = _numpy(rt.column("__is_tile"))
+        tcomp_all = rcodes[is_tile].astype(np.int64) * block + (r_ts[is_tile] - base)
         torder = np.argsort(tcomp_all, kind="stable")
-        tiles_pdf, tcomp_all = tiles_pdf.iloc[torder], tcomp_all[torder]
-        hcomp_all, heads_pdf = rcomp[~is_tile], rpdf[~is_tile]
-        # heads sorted by (comp, tie_breakers): identical to the raw kernel's
-        # event order so first/last(_k) heads match the plain path exactly
-        htie_arrays = [heads_pdf[t].to_numpy() for t in tie_cols] if len(heads_pdf) else []
-        horder = (
-            np.lexsort(tuple(reversed([hcomp_all] + htie_arrays)))
-            if htie_arrays
-            else np.argsort(hcomp_all, kind="stable")
+        tile_rows, tcomp_all = rt.filter(is_tile).take(torder), tcomp_all[torder]
+        # head events in the raw kernel's event store, ordered by (comp,
+        # tie_breakers), so first/last(_k) heads match the plain path exactly
+        head_events = MultiKeyEventColumns(
+            rt.filter(~is_tile), rcodes[~is_tile], r_ts[~is_tile], tie_cols, base, block
         )
-        heads_pdf, hcomp_all = heads_pdf.iloc[horder], hcomp_all[horder]
         tile_code_base = (tcomp_all // block) * block
 
-        head_cache: dict[str, _ColumnSeries] = {}
+        def filled(stat_col: str) -> np.ndarray:
+            """One tile partial per tile; NULL (no value in the tile) reads 0."""
+            return _numpy(tile_rows.column(stat_col).fill_null(0))
 
-        def head_series(c: str) -> _ColumnSeries:
-            if c not in head_cache:
-                if len(heads_pdf):
-                    mask = heads_pdf[c].notna().to_numpy()
-                    head_cache[c] = _ColumnSeries(hcomp_all[mask], _to_numpy(heads_pdf[c][mask]))
-                else:
-                    head_cache[c] = _ColumnSeries(np.empty(0, np.int64), np.empty(0, object))
-            return head_cache[c]
+        def flat_lists(stat_col: str) -> tuple[np.ndarray, pa.Array]:
+            """(per-tile entry counts, flattened entries) of a list IR column."""
+            col = tile_rows.column(stat_col).combine_chunks()
+            return _numpy(pc.list_value_length(col).fill_null(0)), pc.list_flatten(col)
 
         entry_cache: dict[str, tuple] = {}
 
@@ -690,66 +667,31 @@ def tiled_sawtooth_asof_join(
             kind='ts'    -> (comp_by_orig_ts, values) ordered by (ts, ties)
             kind='value' -> (tile_comp, values)
             kind='hist'  -> (tile_comp, values, weights)
+            kind='qsk'   -> (tile_comp, samples, weights)
             Entry-level ts bounds equal tile-level inclusion because window
             starts are hop multiples (module docstring)."""
             if stat_col in entry_cache:
                 return entry_cache[stat_col]
-            empty: tuple
-            if kind in ("hist", "qsk"):
-                empty = (np.empty(0, np.int64), np.empty(0, np.float64 if kind == "qsk" else object), np.empty(0, np.float64 if kind == "qsk" else np.int64))
-            else:
-                empty = (np.empty(0, np.int64), np.empty(0, object))
-            if not len(tiles_pdf):
-                entry_cache[stat_col] = empty
-                return empty
-            lists = tiles_pdf[stat_col].to_numpy()
             if kind == "qsk":
                 # struct{s: sorted samples, w: per-sample weight} per tile
-                lens = np.fromiter(
-                    (len(v["s"]) if isinstance(v, dict) else 0 for v in lists), np.int64, len(lists)
+                s_arr, w_arr = tile_rows.column(stat_col).combine_chunks().flatten()
+                lens = _numpy(pc.list_value_length(s_arr).fill_null(0))
+                out = (
+                    np.repeat(tcomp_all, lens),
+                    _numpy(pc.list_flatten(s_arr)).astype(np.float64),
+                    np.repeat(_numpy(w_arr.fill_null(0)), lens),
                 )
-                total = int(lens.sum())
-                if not total:
-                    entry_cache[stat_col] = empty
-                    return empty
-                comp = np.repeat(tcomp_all, lens)
-                vals = np.fromiter(
-                    (x for v in lists if isinstance(v, dict) for x in v["s"]), np.float64, total
-                )
-                wts = np.repeat(
-                    np.fromiter((v["w"] for v in lists if isinstance(v, dict)), np.float64),
-                    lens[lens > 0],
-                )
-                out = (comp, vals, wts)
-                entry_cache[stat_col] = out
-                return out
-            lens = np.fromiter(
-                (len(v) if isinstance(v, (list, np.ndarray)) else 0 for v in lists), np.int64, len(lists)
-            )
-            total = int(lens.sum())
-            if not total:
-                entry_cache[stat_col] = empty
-                return empty
-            flat = [e for v in lists if isinstance(v, (list, np.ndarray)) for e in v]
-            if kind == "ts":
-                ets = np.fromiter((e["t"] for e in flat), np.int64, total)
-                comp = np.repeat(tile_code_base, lens) + (ets - base)
-                vals = _to_numpy(pd.Series([e["v"] for e in flat]))
-                tie_arrs = [_to_numpy(pd.Series([e[f"b{i}"] for e in flat])) for i in range(n_ties)]
-                order = (
-                    np.lexsort(tuple(reversed([comp] + tie_arrs)))
-                    if tie_arrs
-                    else np.argsort(comp, kind="stable")
-                )
-                out = (comp[order], vals[order])
-            elif kind == "hist":
-                comp = np.repeat(tcomp_all, lens)
-                vals = np.fromiter((e["__v"] for e in flat), object, total)
-                wts = np.fromiter((e["__c"] for e in flat), np.int64, total)
-                out = (comp, vals, wts)  # comp already ascending (tiles sorted)
-            else:  # value entries: bound by the tile's own comp
-                comp = np.repeat(tcomp_all, lens)
-                out = (comp, _to_numpy(pd.Series(flat)))
+            else:
+                lens, flat = flat_lists(stat_col)
+                if kind == "ts":
+                    comp = np.repeat(tile_code_base, lens) + (_numpy(flat.field("t")) - base)
+                    ties = [_numpy(flat.field(f"b{i}")) for i in range(n_ties)]
+                    order = np.lexsort(tuple(reversed([comp] + ties)))
+                    out = (comp[order], _numpy(flat.field("v"))[order])
+                elif kind == "hist":  # comp already ascending (tiles sorted)
+                    out = (np.repeat(tcomp_all, lens), _numpy(flat.field("__v")), _numpy(flat.field("__c")))
+                else:  # value entries: bound by the tile's own comp
+                    out = (np.repeat(tcomp_all, lens), _numpy(flat))
             entry_cache[stat_col] = out
             return out
 
@@ -762,51 +704,23 @@ def tiled_sawtooth_asof_join(
             ck = (c, b)
             if ck in bucket_cache:
                 return bucket_cache[ck]
-            col_name = f"{c}__bk__{b}"
-            if len(tiles_pdf):
-                lists = tiles_pdf[col_name].to_numpy()
-                lens = np.fromiter(
-                    (len(v) if isinstance(v, (list, np.ndarray)) else 0 for v in lists), np.int64, len(lists)
-                )
-                total = int(lens.sum())
-                flat = [e for v in lists if isinstance(v, (list, np.ndarray)) for e in v]
-                tcomp_e = np.repeat(tcomp_all, lens)
-            else:
-                total, flat, tcomp_e = 0, [], np.empty(0, np.int64)
-            tb = np.fromiter((e["__b"] for e in flat), object, total)
-            if len(heads_pdf):
-                hmask = heads_pdf[c].notna().to_numpy() & heads_pdf[b].notna().to_numpy()
-                hcomp_b = hcomp_all[hmask]
-                hvals_b = _to_numpy(heads_pdf[c][hmask])
-                hb = heads_pdf[b][hmask].astype(str).to_numpy()
-            else:
-                hcomp_b = np.empty(0, np.int64)
-                hvals_b = np.empty(0, object)
-                hb = np.empty(0, object)
-            if total + len(hb):
-                codes, uniques = pd.factorize(np.concatenate([tb, hb]))
-            else:
-                codes, uniques = np.empty(0, np.int64), np.empty(0, object)
-            tcd, hcd = codes[:total], codes[total:]
-            tord = np.lexsort((tcomp_e, tcd)) if total else np.empty(0, np.int64)
+            lens, flat = flat_lists(f"{c}__bk__{b}")
+            tcomp_e = np.repeat(tcomp_all, lens)
+            tb = _numpy(flat.field("__b"))
+            hcomp_b, hb, hvals_b = head_events.pair(c, b)
+            codes, uniques = pd.factorize(np.concatenate([tb, hb]))
+            tcd, hcd = codes[: len(tb)], codes[len(tb) :]
+            tord = np.lexsort((tcomp_e, tcd))
             tcomp_e, tcd = tcomp_e[tord], tcd[tord]
-            stats = {}
-            for nm in ("cnt", "sm", "mn", "mx"):
-                if flat and nm in flat[0]:
-                    stats[nm] = np.fromiter((e.get(nm) for e in flat), object, total)[tord]
-            # heads sorted by (bucket, comp, tie_breakers): within a bucket
-            # this is the raw kernel's exact event order, so per-bucket
-            # first/last(_k) match the plain grouped path
-            hties = (
-                [heads_pdf[t][hmask].to_numpy() for t in tie_cols]
-                if len(heads_pdf) and tie_cols
-                else []
-            )
-            hord = (
-                np.lexsort(tuple(reversed([hcd, hcomp_b] + hties)))
-                if len(hb)
-                else np.empty(0, np.int64)
-            )
+            stats = {
+                nm: _numpy(flat.field(nm))[tord]
+                for nm in ("cnt", "sm", "mn", "mx")
+                if flat.type.get_field_index(nm) >= 0
+            }
+            # heads come in (comp, tie_breakers) order, so a stable sort on
+            # the bucket gives the raw kernel's exact event order per bucket:
+            # per-bucket first/last(_k) match the plain grouped path
+            hord = np.argsort(hcd, kind="stable")
             hcomp_b, hvals_b, hcd = hcomp_b[hord], hvals_b[hord], hcd[hord]
             nb = len(uniques)
             tlo = np.searchsorted(tcd, np.arange(nb + 1))
@@ -828,53 +742,25 @@ def tiled_sawtooth_asof_join(
             if ck in bucket_entry_cache:
                 return bucket_entry_cache[ck]
             uniques = bucket_series(c, b)[0]
-            nb = len(uniques)
-            code = {u: g for g, u in enumerate(uniques)}
             field = {"set": "vset"}.get(fam, fam)
-            col_name = f"{c}__bk_{field}__{b}"
-            if len(tiles_pdf):
-                lists = tiles_pdf[col_name].to_numpy()
-                lens = np.fromiter(
-                    (len(v) if isinstance(v, (list, np.ndarray)) else 0 for v in lists),
-                    np.int64,
-                    len(lists),
-                )
-                total = int(lens.sum())
-                flat_e = [x for v in lists if isinstance(v, (list, np.ndarray)) for x in v]
-                tcomp_rep = np.repeat(tcomp_all, lens)
-                tcb_rep = np.repeat(tile_code_base, lens)
-            else:
-                total, flat_e = 0, []
-                tcomp_rep = tcb_rep = np.empty(0, np.int64)
+            lens, flat = flat_lists(f"{c}__bk_{field}__{b}")
+            tcomp_rep = np.repeat(tcomp_all, lens)
             # a bucket present in any collection entry always has tile rows
             # in the scalar IR column (cnt is collected unconditionally at
             # the same grain), so factorize covered it
-            ebkt = np.fromiter((code[x["__b"]] for x in flat_e), np.int64, total)
+            ebkt = pd.Index(uniques).get_indexer(_numpy(flat.field("__b")))
             if kind == "ts":
-                if total:
-                    ets = np.fromiter((x["t"] for x in flat_e), np.int64, total)
-                    comp = tcb_rep + (ets - base)
-                    vals = _to_numpy(pd.Series([x["v"] for x in flat_e]))
-                    ties = [
-                        _to_numpy(pd.Series([x[f"b{i}"] for x in flat_e])) for i in range(n_ties)
-                    ]
-                    order = np.lexsort(tuple(reversed([ebkt, comp] + ties)))
-                    comp, vals, ebkt = comp[order], vals[order], ebkt[order]
-                else:
-                    comp, vals = np.empty(0, np.int64), np.empty(0, object)
-                out_t: tuple = (comp, vals)
-            elif kind == "hist":
-                vals = np.fromiter((x["__v"] for x in flat_e), object, total)
-                wts = np.fromiter((x["__c"] for x in flat_e), np.int64, total)
-                order = np.lexsort((tcomp_rep, ebkt)) if total else np.empty(0, np.int64)
-                ebkt = ebkt[order]
-                out_t = (tcomp_rep[order], vals[order], wts[order])
-            else:  # plain value entries, bound by their tile's comp
-                vals = _to_numpy(pd.Series([x["v"] for x in flat_e]))
-                order = np.lexsort((tcomp_rep, ebkt)) if total else np.empty(0, np.int64)
-                ebkt = ebkt[order]
-                out_t = (tcomp_rep[order], vals[order])
-            elo = np.searchsorted(ebkt, np.arange(nb + 1))
+                comp = np.repeat(tile_code_base, lens) + (_numpy(flat.field("t")) - base)
+                ties = [_numpy(flat.field(f"b{i}")) for i in range(n_ties)]
+                order = np.lexsort(tuple(reversed([ebkt, comp] + ties)))
+                out_t: tuple = (comp[order], _numpy(flat.field("v"))[order])
+            else:
+                order = np.lexsort((tcomp_rep, ebkt))
+                if kind == "hist":
+                    out_t = (tcomp_rep[order], _numpy(flat.field("__v"))[order], _numpy(flat.field("__c"))[order])
+                else:  # plain value entries, bound by their tile's comp
+                    out_t = (tcomp_rep[order], _numpy(flat.field("v"))[order])
+            elo = np.searchsorted(ebkt[order], np.arange(len(uniques) + 1))
             res = (elo, *out_t)
             bucket_entry_cache[ck] = res
             return res
@@ -885,7 +771,7 @@ def tiled_sawtooth_asof_join(
         comp_q = np.where(nullkey, np.int64(-1), kbase + (q_ts - base))
         comp_h = np.where(nullkey, np.int64(0), kbase + np.clip(head_start - base, 0, block - 1))
 
-        out = lpdf[left_cols].copy()
+        out: dict[str, object] = {}
         for p, fname in zip(part_list, feat_names):
             w_us = p.window.millis * 1000
             p_hop_us = tail_hop_millis(p.window.millis) * 1000
@@ -999,7 +885,7 @@ def tiled_sawtooth_asof_join(
                 out[fname] = res
                 continue
 
-            hcs = head_series(c)
+            hcs = head_events.column(c)
             hs = np.searchsorted(hcs.ts, comp_h, side="left")
             he = np.maximum(np.searchsorted(hcs.ts, comp_q, side="left"), hs)
 
@@ -1007,55 +893,27 @@ def tiled_sawtooth_asof_join(
                 # tail: tiles fully inside [wstart, head_start)
                 ts_idx_s = np.searchsorted(tcomp_all, comp_w, side="left")
                 ts_idx_e = np.maximum(np.searchsorted(tcomp_all, comp_h, side="left"), ts_idx_s)
-                cnt_t = _range_sum(tiles_pdf[f"{c}__cnt"].to_numpy(np.float64), ts_idx_s, ts_idx_e)
+                cnt_t = _range_sum(filled(f"{c}__cnt"), ts_idx_s, ts_idx_e)
                 n = cnt_t + (he - hs)  # non-null values in window
                 if p.op == Op.COUNT:
                     out[fname] = [None if v <= 0 else int(v) for v in n]
                     continue
-                if p.op == Op.SUM:
-                    integral = isinstance(part_output_type(p, right_types[c]), T.LongType)
-                    # exact int64 path: tile partials arrive as boxed Decimals
-                    # (integral_tile_cols cast) and heads as int64 — no float64
-                    # round-trip, so >2^53 sums (incl. the Decimal rewrite's
-                    # unscaled values) stay exact
-                    t_raw = tiles_pdf[f"{c}__sum"] if len(tiles_pdf) else None
-                    t_obj = t_raw is None or t_raw.dtype == object
-                    h_int = not len(hcs.vals) or _is_integral(hcs.vals)
-                    if integral and t_obj and h_int:
-                        if t_raw is not None:
-                            tl = np.fromiter(
-                                (0 if v is None else int(v) for v in t_raw.to_numpy()),
-                                np.int64,
-                                len(t_raw),
-                            )
-                        else:
-                            tl = np.empty(0, np.int64)
-                        pt = np.concatenate(([0], np.cumsum(tl)))
-                        ph = np.concatenate(
-                            ([0], np.cumsum(hcs.vals.astype(np.int64)))
-                        ) if len(hcs.vals) else np.zeros(1, np.int64)
-                        total_i = (pt[ts_idx_e] - pt[ts_idx_s]) + (ph[he] - ph[hs])
-                        out[fname] = [
-                            None if nv <= 0 else int(v) for v, nv in zip(total_i, n)
-                        ]
-                        continue
-                hvals = hcs.vals.astype(np.float64) if len(hcs.vals) else np.empty(0, np.float64)
-                t_sum_np = tiles_pdf[f"{c}__sum"].to_numpy() if len(tiles_pdf) else np.empty(0, object)
-                if t_sum_np.dtype == object:  # boxed decimals on the float path
-                    t_sum_np = np.array(
-                        [0.0 if v is None else float(v) for v in t_sum_np], np.float64
-                    )
-                else:
-                    t_sum_np = np.nan_to_num(t_sum_np.astype(np.float64))
+                if p.op == Op.SUM and isinstance(part_output_type(p, right_types[c]), T.LongType):
+                    # exact int64 path: integral tile partials and heads both
+                    # arrive as int64, so >2^53 sums (incl. the Decimal
+                    # rewrite's unscaled values) never round through float64
+                    pt = np.concatenate(([0], np.cumsum(filled(f"{c}__sum").astype(np.int64))))
+                    ph = np.concatenate(([0], np.cumsum(hcs.vals.astype(np.int64))))
+                    total_i = (pt[ts_idx_e] - pt[ts_idx_s]) + (ph[he] - ph[hs])
+                    out[fname] = [None if nv <= 0 else int(v) for v, nv in zip(total_i, n)]
+                    continue
+                hvals = hcs.vals.astype(np.float64)
+                t_sum_np = filled(f"{c}__sum").astype(np.float64)
                 sum_t = _range_sum(t_sum_np, ts_idx_s, ts_idx_e)
                 sum_h = _range_sum(hvals, hs, he)
                 total = sum_t + sum_h
                 if p.op == Op.SUM:
-                    integral = isinstance(part_output_type(p, right_types[c]), T.LongType)
-                    out[fname] = [
-                        None if nv <= 0 else (int(round(v)) if integral else float(v))
-                        for v, nv in zip(total, n)
-                    ]
+                    out[fname] = [None if nv <= 0 else float(v) for v, nv in zip(total, n)]
                     continue
                 if p.op == Op.AVERAGE:
                     with np.errstate(invalid="ignore", divide="ignore"):
@@ -1067,9 +925,7 @@ def tiled_sawtooth_asof_join(
                 upto = 2 if p.op == Op.VARIANCE else (3 if p.op == Op.SKEW else 4)
                 S = {1: total}
                 for pw in range(2, upto + 1):
-                    s_t = _range_sum(
-                        np.nan_to_num(tiles_pdf[f"{c}__pow{pw}"].to_numpy(np.float64)), ts_idx_s, ts_idx_e
-                    )
+                    s_t = _range_sum(filled(f"{c}__pow{pw}"), ts_idx_s, ts_idx_e)
                     p_h = _prefix(hvals, pw)
                     S[pw] = s_t + (p_h[he] - p_h[hs])
                 with np.errstate(invalid="ignore", divide="ignore"):
@@ -1091,10 +947,7 @@ def tiled_sawtooth_asof_join(
             elif p.op in (Op.MIN, Op.MAX):
                 take_min = p.op == Op.MIN
                 tcol = f"{c}__{'min' if take_min else 'max'}"
-                tmask = tiles_pdf[tcol].notna().to_numpy() if len(tiles_pdf) else np.empty(0, bool)
-                # _to_numpy recovers exact int64 from boxed-Decimal tile
-                # partials (the Decimal rewrite's DECIMAL(18,0) columns)
-                tt, tv = tcomp_all[tmask], _to_numpy(tiles_pdf[tcol].to_numpy()[tmask])
+                tt, tv = valid_values(tile_rows.column(tcol).combine_chunks(), tcomp_all)
                 s2 = np.searchsorted(tt, comp_w, side="left")
                 e2 = np.maximum(np.searchsorted(tt, comp_h, side="left"), s2)
                 part_t = _range_minmax(tv, s2, e2, take_min)
@@ -1151,7 +1004,7 @@ def tiled_sawtooth_asof_join(
                 ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
                 k = p.k if (p.k or p.op != Op.HISTOGRAM) else None
                 out[fname] = _hist2(evals, ewts, es, ee, hcs.vals, hs, he, k)
-        return out
+        return kernel_output(lt, [out[f] for f in feat_names], arrow_schema)
 
     out = cogroup_apply(l, union, left_keys, right_keys, coarse_buckets, out_schema, kernel)
     return apply_derivations(out, gb.derivations)

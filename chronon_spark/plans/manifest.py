@@ -163,6 +163,58 @@ def _parquet_rows(part_dir: str) -> int:
     return total
 
 
+def commit_range_manifests(
+    sink, out_path: str, checkpoint_dir: str, ds_range: list[str], range_wall: float,
+    semantic_hash: str, spec_meta: dict, inputs,
+) -> int:
+    """After one range job's write committed: read back each ds's row count
+    and write its manifest (output-before-manifest = commit marker). Shared
+    by the GroupBy/Join backfill and the conf backfill; ``inputs(ds)`` gives
+    each manifest's input lineage. ``wall_sec`` is the ds's share of the
+    range wall, so sums over manifests equal the job wall; ``range_wall_sec``
+    is the whole job's. Returns the rows written over the range."""
+    if isinstance(sink, ManagedTable):
+        # read-back validation from parquet footers: proves the committed
+        # files exist and are readable without a per-partition Spark job
+        ds_out = {ds: _parquet_rows(os.path.join(out_path, f"ds={ds}")) for ds in ds_range}
+        part_paths = {ds: os.path.join(out_path, f"ds={ds}") for ds in ds_range}
+    else:
+        # one count job per RANGE (not per partition)
+        ds_out = {
+            r[0]: r[1]
+            for r in sink.read()
+            .where(F.col("ds").between(ds_range[0], ds_range[-1]))
+            .groupBy("ds")
+            .count()
+            .collect()
+        }
+        part_paths = {ds: f"{out_path}/ds={ds}" for ds in ds_range}  # logical refs
+    total = 0
+    for ds in ds_range:
+        n_out = ds_out.get(ds, 0)
+        total += n_out
+        manifest = {
+            "ds": ds,
+            "engine_version": ENGINE_VERSION,
+            "semantic_hash": semantic_hash,
+            "inputs": inputs(ds),
+            "output": {"path": part_paths[ds], "rows": n_out},
+            "spec": spec_meta,
+            "stage_metrics": {
+                "wall_sec": round(range_wall / len(ds_range), 3),
+                "range_wall_sec": round(range_wall, 3),
+                "range": [ds_range[0], ds_range[-1]],
+                "range_days": len(ds_range),
+            },
+            "completed_at_unix": int(time.time()),
+        }
+        tmp = os.path.join(checkpoint_dir, f".{ds}.json.tmp")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, os.path.join(checkpoint_dir, f"{ds}.json"))
+    return total
+
+
 def run_partitioned_backfill(
     spark: SparkSession,
     events_path: str,
@@ -268,52 +320,15 @@ def run_partitioned_backfill(
         # archive when the spec hash changes (table_lifecycle.ManagedTable);
         # one write commits every partition in the range
         sink.insert_partitions(out, auto_expand=True, semantic_hash=gb_hash)
-        range_wall = round(time.time() - t0, 3)
-        if isinstance(sink, ManagedTable):
-            # read-back validation from parquet footers: proves the committed
-            # files exist and are readable without a per-partition Spark job
-            ds_out = {ds: _parquet_rows(os.path.join(out_path, f"ds={ds}")) for ds in ds_range}
-            part_paths = {ds: os.path.join(out_path, f"ds={ds}") for ds in ds_range}
-        else:
-            # one count job per RANGE (not per partition)
-            ds_out = {
-                r[0]: r[1]
-                for r in sink.read()
-                .where(F.col("ds").between(ds_lo, ds_hi))
-                .groupBy("ds")
-                .count()
-                .collect()
-            }
-            part_paths = {ds: f"{out_path}/ds={ds}" for ds in ds_range}  # logical refs
-        # manifests land only after the WHOLE range's write committed
-        # (output-before-manifest = commit marker, same as the per-ds form)
-        for ds in ds_range:
-            n_out = ds_out.get(ds, 0)
-            total_out += n_out
-            manifest = {
-                "ds": ds,
-                "engine_version": ENGINE_VERSION,
-                "semantic_hash": gb_hash,
-                "inputs": {
-                    "events": {"path": events_path, "scan_max_exclusive": f"{ds}+1d",
-                               "rewind_ms": mw_ms},
-                    "queries": {"path": queries_path, "rows": ds_counts[ds]},
-                },
-                "output": {"path": part_paths[ds], "rows": n_out},
-                "spec": spec_meta,
-                "stage_metrics": {
-                    # wall_sec is the RANGE's job wall (shared by its days) —
-                    # field kept so partition_stats and older manifests agree
-                    "wall_sec": range_wall,
-                    "range": [ds_lo, ds_hi],
-                    "range_days": len(ds_range),
-                },
-                "completed_at_unix": int(time.time()),
-            }
-            tmp = os.path.join(checkpoint_dir, f".{ds}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, os.path.join(checkpoint_dir, f"{ds}.json"))
+        total_out += commit_range_manifests(
+            sink, out_path, checkpoint_dir, ds_range, time.time() - t0, gb_hash, spec_meta,
+            lambda ds: {
+                # the range job scanned events up to the END of the range
+                "events": {"path": events_path, "scan_max_exclusive": f"{ds_hi}+1d",
+                           "rewind_ms": mw_ms},
+                "queries": {"path": queries_path, "rows": ds_counts[ds]},
+            },
+        )
     return {
         "partitions_total": len(all_parts),
         "partitions_computed": len(todo),

@@ -86,9 +86,7 @@ def stream_hop_tiles(
     need = _tile_stats_needed(gb)
     bucket_stats = _tile_bucket_stats(gb, scalar_only=True)  # streaming fold is scalar-only
     tie_cols = [t for t in gb.tie_breakers if t in stream.columns and t not in gb.keys]
-    from chronon_spark.operators.tiles import integral_tile_cols
-
-    aggs, hist_cols = tile_agg_exprs(need, tie_cols, integral_tile_cols(stream))
+    aggs, hist_cols = tile_agg_exprs(need, tie_cols)
     hist_aggs = [
         F.collect_list(F.col(c).cast("string")).alias(f"{c}__histraw") for c in hist_cols
     ]

@@ -275,3 +275,42 @@ def test_per_turn_text_stable_under_repartition(spark):
         for r in t2.select("conv_id", "turn_idx", "text").collect()
     }
     assert got == base
+
+
+def test_nullable_bigint_above_2_53_exact(spark):
+    """A nullable BIGINT above 2^53 stays exact across the Arrow boundary:
+    SUM, MIN, MAX and LAST on the plain and the tiled path equal a
+    Python-int replay (a float64 anywhere rounds 2^53+1 to 2^53)."""
+    from chronon_spark.operators.tiles import tiled_sawtooth_asof_join
+
+    big = 2**53
+    t0 = pd.Timestamp("2024-01-01")
+    rows = [
+        ("a", t0, 0, big + 3),
+        ("a", t0 + pd.Timedelta(hours=1), 1, None),
+        ("a", t0 + pd.Timedelta(days=1), 2, big + 1),
+        ("a", t0 + pd.Timedelta(days=1, hours=1), 3, 7),
+    ]
+    ev = spark.createDataFrame(
+        [(k, t.to_pydatetime(), i, v) for k, t, i, v in rows],
+        "conv_id string, ts timestamp, turn_idx int, v bigint",
+    )
+    # the first query's window sits in tiles only; the later ones add head events
+    q_ts = [t0 + pd.Timedelta(days=1, minutes=m) for m in (30, 90, 24 * 60)]
+    q = spark.createDataFrame(
+        [("a", t.to_pydatetime(), i) for i, t in enumerate(q_ts)], "conv_id string, ts timestamp, qi int"
+    )
+    ops = {"sum": Op.SUM, "min": Op.MIN, "max": Op.MAX, "last": Op.LAST}
+    gb = GroupBy(
+        keys=["conv_id"],
+        aggregations=[Aggregation("v", op, windows=("30d",)) for op in ops.values()],
+        tie_breakers=["turn_idx"],
+        sawtooth=True,
+    )
+    for join in (asof_join, tiled_sawtooth_asof_join):
+        got = {r["qi"]: r for r in join(q, ev, gb).collect()}
+        for i, qt in enumerate(q_ts):
+            window = [v for _, t, _, v in rows if t < qt and v is not None]
+            want = {"sum": sum(window), "min": min(window), "max": max(window), "last": window[-1]}
+            for name, w in want.items():
+                assert got[i][f"v_{name}_30d"] == w, (join.__name__, i, name)

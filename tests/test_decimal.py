@@ -64,6 +64,16 @@ def _expected(rows, key, qts, hours, op):
 
 def test_decimal_exact_and_upcast_ops(spark, frames):
     ev, q, rows = frames
+    # key "c": values of different magnitude whose fractional part must
+    # survive (5.00 + 2.75 = 7.75, not 7)
+    ev = ev.union(spark.createDataFrame(
+        [("c", pd.Timestamp("2024-01-01 00:00").to_pydatetime(), 0, Decimal("5.00")),
+         ("c", pd.Timestamp("2024-01-01 01:00").to_pydatetime(), 1, Decimal("2.75"))],
+        _SCHEMA,
+    ))
+    q = q.union(spark.createDataFrame(
+        [("c", pd.Timestamp("2024-01-01 02:00").to_pydatetime())], "conv_id string, ts timestamp"
+    ))
     gb = GroupBy(
         keys=["conv_id"],
         aggregations=[
@@ -109,6 +119,7 @@ def test_decimal_exact_and_upcast_ops(spark, frames):
     )
     assert lk == [r[3] for r in reversed(in_3h)][:2]
     assert out["a"]["amount_unique_count_3h"] == len({r[3] for r in in_3h})
+    assert out["c"]["amount_sum_3h"] == Decimal("7.75")
 
 
 def test_decimal_tiled_matches_plain(spark, frames):

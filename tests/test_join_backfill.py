@@ -266,9 +266,14 @@ def test_step_days_chunking_equality_and_resume(spark, paths):
     for fn in manifests:
         with open(root / "ckpt_d30" / fn) as f:
             m = json.load(f)
-        assert m["stage_metrics"]["range_days"] == 2
-        assert m["stage_metrics"]["range"][0] <= m["ds"] <= m["stage_metrics"]["range"][1]
+        sm = m["stage_metrics"]
+        assert sm["range_days"] == 2
+        assert sm["range"][0] <= m["ds"] <= sm["range"][1]
         assert m["output"]["rows"] > 0
+        # each ds carries its share of the range wall, so the shares sum to
+        # the job wall; the scan bound is the range's, not the ds's
+        assert abs(sm["wall_sec"] * 2 - sm["range_wall_sec"]) <= 2e-3
+        assert m["inputs"]["events"]["scan_max_exclusive"] == f"{sm['range'][1]}+1d"
     # kill/rerun: dropping ONE manifest recomputes exactly that partition
     os.remove(root / "ckpt_d30" / manifests[0])
     again = run_partitioned_backfill(

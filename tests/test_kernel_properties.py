@@ -10,13 +10,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from chronon_spark.aggregators.kernels import (
     MultiKeyEventColumns,
-    _from_object_decimals,
     composite_layout,
     compute_parts_multikey,
 )
@@ -66,8 +66,9 @@ def stream(draw):
 
 
 def _compute(events, parts, q_ts, include_equal, sawtooth):
-    """The composite-index kernel on one key: all-zero key codes."""
-    r_ts = events["__ts_us"].to_numpy(np.int64)
+    """The composite-index kernel on one key (``events`` a ``pa.Table``):
+    all-zero key codes."""
+    r_ts = events.column("__ts_us").to_numpy()
     base, block = composite_layout(q_ts, r_ts)
     mec = MultiKeyEventColumns(events, np.zeros(len(r_ts), np.int64), r_ts, [], base, block)
     q_codes = np.zeros(len(q_ts), np.int64)
@@ -89,7 +90,7 @@ def _oracle(part, ev_ts, vals, q, include_equal, sawtooth):
 @settings(max_examples=120, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 def test_kernels_match_bruteforce(data, include_equal, sawtooth):
     ev_ts, q_ts, vals = data
-    events = pd.DataFrame({"__ts_us": ev_ts, "v": pd.Series(vals, dtype="float64")})
+    events = pa.table({"__ts_us": ev_ts, "v": pa.array(vals, pa.float64())})
     gb = GroupBy(keys=["k"], aggregations=OPS, include_equal=include_equal, sawtooth=sawtooth)
     parts = gb.parts()
     got = _compute(events, parts, q_ts, include_equal, sawtooth)
@@ -111,10 +112,9 @@ def test_kernels_match_bruteforce(data, include_equal, sawtooth):
 
 @st.composite
 def decimal_stream(draw):
-    """Integral decimals ABOVE 2^53 — the unscaled form aggregators/decimal.py
-    feeds the kernels; a float64 round-trip provably corrupts these values."""
-    from decimal import Decimal
-
+    """Nullable integers ABOVE 2^53 — the unscaled BIGINT form
+    aggregators/decimal.py feeds the kernels; a float64 round-trip provably
+    corrupts these values."""
     n_ev = draw(st.integers(1, 40))
     n_q = draw(st.integers(1, 12))
     grid = 600_000_000
@@ -122,7 +122,7 @@ def decimal_stream(draw):
     base = 12_345_678_901_234_567  # odd, > 2^53: float64 cannot hold it
     vals = draw(
         st.lists(
-            st.one_of(st.none(), st.integers(-500, 500).map(lambda d: Decimal(base + d))),
+            st.one_of(st.none(), st.integers(-500, 500).map(lambda d: base + d)),
             min_size=n_ev,
             max_size=n_ev,
         )
@@ -149,11 +149,11 @@ _DEC_OPS = [
 @given(data=decimal_stream(), include_equal=st.booleans())
 @settings(max_examples=80, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 def test_integral_decimal_kernels_exact(data, include_equal):
-    """The boxed-Decimal recovery path (kernels._from_object_decimals) must be
-    EXACT above 2^53: every op compared to an arbitrary-precision int replay.
-    A float64 anywhere in the pipeline fails this by construction."""
+    """A nullable int64 column (the Decimal rewrite's unscaled values) must
+    stay EXACT above 2^53: every op compared to an arbitrary-precision int
+    replay. A float64 anywhere in the pipeline fails this by construction."""
     ev_ts, q_ts, vals = data
-    events = pd.DataFrame({"__ts_us": ev_ts, "v": pd.Series(vals, dtype=object)})
+    events = pa.table({"__ts_us": ev_ts, "v": pa.array(vals, pa.int64())})
     gb = GroupBy(keys=["k"], aggregations=_DEC_OPS, include_equal=include_equal)
     parts = gb.parts()
     got = _compute(events, parts, q_ts, include_equal, sawtooth=False)
@@ -182,16 +182,3 @@ def test_integral_decimal_kernels_exact(data, include_equal):
                 assert int(g) == len(set(window)), name
             elif part.op == Op.COUNT:
                 assert int(g) == len(window), name
-
-
-def test_mixed_exponent_decimals_not_truncated():
-    """Every element decides the boxed-Decimal conversion: one fractional
-    value makes the array float64, whatever the first element's exponent."""
-    from decimal import Decimal
-
-    arr = np.array([Decimal("5"), Decimal("2.75")], object)
-    assert _from_object_decimals(arr).tolist() == [5.0, 2.75]
-    events = pd.DataFrame({"__ts_us": np.array([0, 1], np.int64), "v": pd.Series(list(arr), dtype=object)})
-    parts = GroupBy(keys=["k"], aggregations=[Aggregation("v", Op.SUM)]).parts()
-    got = _compute(events, parts, np.array([2], np.int64), False, False)
-    assert got[parts[0].output_name][0] == 7.75

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from chronon_spark.aggregators.kernels import (
@@ -48,13 +49,16 @@ ALL_OPS_GB = GroupBy(
 
 
 def _multikey(ev, q, parts, include_equal, sawtooth):
+    """The kernel over the events as a ``pa.Table`` (nulls in its validity
+    bitmaps), keys factorized across queries and events."""
     joint = pd.concat([q["conv_id"], ev["conv_id"]], ignore_index=True)
     codes = pd.factorize(joint)[0]
     lcodes, rcodes = codes[: len(q)], codes[len(q) :]
     q_ts = q["tus"].to_numpy("int64")
     r_ts = ev["tus"].to_numpy("int64")
     base, block = composite_layout(q_ts, r_ts)
-    mec = MultiKeyEventColumns(ev, rcodes, r_ts, ["turn_idx"], base, block)
+    events = pa.Table.from_pandas(ev, preserve_index=False)
+    mec = MultiKeyEventColumns(events, rcodes, r_ts, ["turn_idx"], base, block)
     return compute_parts_multikey(mec, parts, lcodes, q_ts, include_equal, sawtooth)
 
 
@@ -178,6 +182,7 @@ def test_overflow_split_matches_oracle():
             "__ts_us": np.concatenate([rng.integers(0, span, 120), [span // 2, span]]),
         }
     )
+    q["qi"] = np.arange(len(q))
     joint = pd.concat([q["k"], ev["k"]], ignore_index=True)
     codes = pd.factorize(joint, use_na_sentinel=True)[0]
     lcodes, rcodes = codes[: len(q)], codes[len(q) :]
@@ -186,18 +191,18 @@ def test_overflow_split_matches_oracle():
     parts = SPLIT_GB.parts()
     calls = []
 
-    def batch_kernel(lpdf, rpdf, lc, rc, base, block):
+    def batch_kernel(lt, rt, lc, rc, base, block):
         assert (max(lc.max(initial=0), rc.max(initial=0)) + 2) * block <= COMPOSITE_LIMIT
-        calls.append(len(lpdf))
-        r_ts = rpdf["__ts_us"].to_numpy(np.int64)
-        mec = MultiKeyEventColumns(rpdf, rc, r_ts, [], base, block)
-        feats = compute_parts_multikey(mec, parts, lc, lpdf["__ts_us"].to_numpy(np.int64))
-        out = lpdf.copy()
+        calls.append(lt.num_rows)
+        mec = MultiKeyEventColumns(rt, rc, rt.column("__ts_us").to_numpy(), [], base, block)
+        feats = compute_parts_multikey(mec, parts, lc, lt.column("__ts_us").to_numpy())
         for p in parts:
-            out[p.output_name] = feats[p.output_name]
-        return out
+            lt = lt.append_column(p.output_name, pa.array(feats[p.output_name], from_pandas=True))
+        return lt
 
-    got = composite_apply(q, ev, lcodes, rcodes, batch_kernel)
+    lt = pa.Table.from_pandas(q, preserve_index=False)
+    rt = pa.Table.from_pandas(ev, preserve_index=False)
+    got = composite_apply(lt, rt, lcodes, rcodes, batch_kernel).to_pandas().set_index("qi")
     assert len(calls) > 1 and sum(calls) == len(q)
     assert sorted(got.index) == list(range(len(q)))
     for i, row in q.iterrows():
@@ -206,4 +211,5 @@ def test_overflow_split_matches_oracle():
             if p.window.millis is not None:
                 m &= ev["__ts_us"] >= row["__ts_us"] - p.window.millis * 1000
             want = _agg_slice(p, ev.loc[m, "v"])
-            assert _eq(got.at[i, p.output_name], want), (p.output_name, i)
+            g = got.at[i, p.output_name]
+            assert _eq(g.tolist() if isinstance(g, np.ndarray) else g, want), (p.output_name, i)

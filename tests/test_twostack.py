@@ -6,7 +6,7 @@ exact and sawtooth tails."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from chronon_spark.aggregators.kernels import (
@@ -52,7 +52,9 @@ def test_twostack_matches_kernels(include_equal, sawtooth):
     parts = _parts()
     # the composite-index kernel on one key: all-zero key codes
     base, block = composite_layout(q, ts)
-    mec = MultiKeyEventColumns(pd.DataFrame({"v": vals}), np.zeros(len(ts), np.int64), ts, [], base, block)
+    # NaN marks a null value for the twostack evaluator; Arrow reads it as null
+    events = pa.table({"v": pa.array(vals, from_pandas=True)})
+    mec = MultiKeyEventColumns(events, np.zeros(len(ts), np.int64), ts, [], base, block)
     want = compute_parts_multikey(mec, parts, np.zeros(len(q), np.int64), q, include_equal, sawtooth)
     got = compute_parts_twostack(ts, {"v": vals}, parts, q, include_equal, sawtooth)
     for p in parts:
