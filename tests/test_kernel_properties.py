@@ -182,3 +182,25 @@ def test_integral_decimal_kernels_exact(data, include_equal):
                 assert int(g) == len(set(window)), name
             elif part.op == Op.COUNT:
                 assert int(g) == len(window), name
+
+
+def test_mixed_exponent_decimals_not_truncated():
+    """Decimals of mixed exponent (5 and 2.75) reach the kernels as the
+    Decimal rewrite's unscaled int64 at the column's scale, so the integral
+    value cannot decide the representation and drop the fraction of the
+    other: SUM/MIN/MAX/LAST stay exact, and rescaling gives 7.75, not 7."""
+    from decimal import Decimal
+
+    scale = 2
+    raw = [Decimal("5"), Decimal("2.75")]
+    unscaled = [int(d.scaleb(scale)) for d in raw]
+    assert unscaled == [500, 275]
+    events = pa.table({"__ts_us": np.array([0, 1], np.int64), "v": pa.array(unscaled, pa.int64())})
+    aggs = [Aggregation("v", op) for op in (Op.SUM, Op.MIN, Op.MAX, Op.LAST)]
+    parts = GroupBy(keys=["k"], aggregations=aggs).parts()
+    got = _compute(events, parts, np.array([2], np.int64), False, False)
+    want = {Op.SUM: Decimal("7.75"), Op.MIN: Decimal("2.75"), Op.MAX: Decimal("5"), Op.LAST: Decimal("2.75")}
+    for part in parts:
+        g = got[part.output_name][0]
+        assert isinstance(g, (int, np.integer)), (part.output_name, type(g))
+        assert Decimal(int(g)).scaleb(-scale) == want[part.op], (part.output_name, g)
