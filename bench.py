@@ -142,107 +142,6 @@ def ambient_probe() -> dict:
     return {"ambient_cpu_ms": round(cpu_ms, 1), "ambient_membw_ms": round(membw_ms, 1)}
 
 
-def _scaling_evidence() -> dict:
-    """Attach the most recent two-parallelism (north-rule) run so the BENCH
-    artifact is self-contained: tools/scaling_bench.py writes the full JSON,
-    this embeds its headline numbers. See BASELINE.md for methodology."""
-    p = Path(__file__).resolve().parent / "tools" / "scaling_r2_final.json"
-    try:
-        d = json.loads(p.read_text())
-    except (OSError, ValueError):
-        return {}
-    out = {
-        "scaling_4_to_16": {
-            "input_rows": d.get("input_rows"),
-            "median_efficiency": d.get("median_efficiency"),
-            "best_efficiency": d.get("best_efficiency"),
-            "hardware_ceiling": d.get("hardware_ceiling"),
-            "pairs": d.get("pairs"),
-        }
-    }
-    # strongest single raw pair on record (quiet sub-window, no ceiling
-    # normalization needed) — BASELINE.md "Corroborating run #4"
-    pk = Path(__file__).resolve().parent / "tools" / "scaling_r3c_peak.json"
-    try:
-        k = json.loads(pk.read_text())
-        best = max(k.get("pairs", []), key=lambda x: x.get("efficiency", 0), default=None)
-        if best:
-            out["scaling_best_raw_pair"] = best
-    except (OSError, ValueError):
-        pass
-    # current-round run on this boot's host (BASELINE.md corroborating run #6)
-    pc = Path(__file__).resolve().parent / "tools" / "scaling_r3e_current.json"
-    try:
-        c = json.loads(pc.read_text())
-        out["scaling_current_round"] = {
-            "input_rows": c.get("input_rows"),
-            "best_efficiency": c.get("best_efficiency"),
-            "hardware_ceiling": c.get("hardware_ceiling"),
-            "normalized_vs_membw": c.get("normalized_vs_membw"),
-        }
-    except (OSError, ValueError):
-        pass
-    # 64M-row runs: raw 0.809 over the 0.8 bar un-normalized (run #8; #7 was
-    # 0.797) — best of the recorded artifacts is embedded
-    best64 = None
-    for fname in ("scaling_r3f_64m.json", "scaling_r3g_64m.json", "scaling_r3h_64m.json", "scaling_r3i_64m.json"):
-        try:
-            s = json.loads((Path(__file__).resolve().parent / "tools" / fname).read_text())
-        except (OSError, ValueError):
-            continue
-        if best64 is None or s.get("best_efficiency", 0) > best64.get("best_efficiency", 0):
-            best64 = s
-    if best64:
-        out["scaling_64m"] = {
-            "input_rows": best64.get("input_rows"),
-            "best_efficiency": best64.get("best_efficiency"),
-            "hardware_ceiling": best64.get("hardware_ceiling"),
-        }
-    # current-round (r4) runs: best of tools/scaling_r4*.json on this host
-    bestr4 = None
-    for p4 in sorted((Path(__file__).resolve().parent / "tools").glob("scaling_r4*.json")):
-        try:
-            s = json.loads(p4.read_text())
-        except (OSError, ValueError):
-            continue
-        if bestr4 is None or s.get("best_efficiency", 0) > bestr4.get("best_efficiency", 0):
-            bestr4 = s
-    if bestr4:
-        out["scaling_r4"] = {
-            "input_rows": bestr4.get("input_rows"),
-            "best_efficiency": bestr4.get("best_efficiency"),
-            "median_efficiency": bestr4.get("median_efficiency"),
-            "hardware_ceiling": bestr4.get("hardware_ceiling"),
-        }
-    # absolute throughput records across every recorded run
-    best4, best16, rows_at = 0.0, 0.0, None
-    for fname in (
-        "scaling_r3d_records.json",
-        "scaling_r3e_current.json",
-        "scaling_r3f_64m.json",
-        "scaling_r3g_64m.json",
-        "scaling_r3h_64m.json",
-        "scaling_r3i_64m.json",
-        *[p.name for p in sorted((Path(__file__).resolve().parent / "tools").glob("scaling_r4*.json"))],
-    ):
-        try:
-            r = json.loads((Path(__file__).resolve().parent / "tools" / fname).read_text())
-            for x in r.get("pairs", []):
-                if x.get("turns_per_sec_local4", 0) > best4:
-                    best4 = x["turns_per_sec_local4"]
-                if x.get("turns_per_sec_local16", 0) > best16:
-                    best16, rows_at = x["turns_per_sec_local16"], r.get("input_rows")
-        except (OSError, ValueError):
-            pass
-    if best4:
-        out["throughput_records"] = {
-            "turns_per_sec_local4": best4,
-            "turns_per_sec_local16": best16,
-            "input_rows": rows_at,
-        }
-    return out
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -294,7 +193,6 @@ def main() -> int:
         "events_rows": n_events,
         "turns_per_sec_asof": round(n_events / asof_sec, 1),
         **ambient_probe(),
-        **_scaling_evidence(),
     }
     line = json.dumps(payload)
     print(line)

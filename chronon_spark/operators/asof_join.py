@@ -277,6 +277,7 @@ def cogroup_apply(
     coarse_buckets: int | str | None,
     out_schema: T.StructType,
     batch_kernel,
+    lo_column: str | None = None,
 ) -> DataFrame:
     """Cogroup the queries ``l`` with the ``__r_``-aliased right side ``r``
     and run ``batch_kernel(lt, rt, lcodes, rcodes, base, block)`` on each
@@ -287,7 +288,8 @@ def cogroup_apply(
     ``coarse_buckets=N`` cogroups on ``hash(keys) % N`` and factorizes the
     keys of each batch into codes; ``"auto"`` sizes N with
     ``coarse_bucket_count``; ``None`` cogroups on the raw keys, one code per
-    group."""
+    group. ``lo_column`` names a right-side column of timestamps the layout
+    must also cover (events inside a row older than the row's own ts)."""
     if coarse_buckets == "auto":
         coarse_buckets = coarse_bucket_count(l.sparkSession)
     arrow_schema = to_arrow_schema(out_schema)
@@ -301,7 +303,7 @@ def cogroup_apply(
         else:
             codes = np.zeros(lt.num_rows + rt.num_rows, np.int64)
         lcodes, rcodes = codes[: lt.num_rows], codes[lt.num_rows :]
-        return composite_apply(lt, rt, lcodes, rcodes, batch_kernel)
+        return composite_apply(lt, rt, lcodes, rcodes, batch_kernel, lo_column)
 
     if coarse_buckets:
         lb = hash_bucket(l, left_keys, coarse_buckets, "__b")
@@ -314,15 +316,20 @@ def cogroup_apply(
     return grouped.applyInArrow(fn, schema=out_schema)
 
 
-def composite_apply(lt: pa.Table, rt: pa.Table, lcodes, rcodes, batch_kernel) -> pa.Table:
+def composite_apply(
+    lt: pa.Table, rt: pa.Table, lcodes, rcodes, batch_kernel, lo_column: str | None = None
+) -> pa.Table:
     """Run ``batch_kernel`` over one batch laid out by
-    ``kernels.composite_layout``. When ``(n_codes + 2) * block`` exceeds
+    ``kernels.composite_layout`` over the query, event and ``lo_column``
+    timestamps. When ``(n_codes + 2) * block`` exceeds
     ``COMPOSITE_LIMIT`` (many keys over a very wide ts span) the batch is
     cut into runs of key codes that fit, each renumbered from 0 and run
     through the same kernel; null-key queries (code < 0) ride with the
     first run. The common case is one run and no copy."""
     q_ts = lt.column(_TS_US).to_numpy()
     r_ts = rt.column(_TS_US).to_numpy()
+    if lo_column:
+        r_ts = np.concatenate([r_ts, rt.column(lo_column).drop_null().to_numpy()])
     base, block = composite_layout(q_ts, r_ts)
     n_codes = int(max(lcodes.max(initial=-1), rcodes.max(initial=-1))) + 1
     per_run = COMPOSITE_LIMIT // block - 2

@@ -37,6 +37,9 @@ Spark-first:
    the raw path (`aggregators/kernels._kernel`), then merged with the head's
    exact result per op — the reference's `lambdaAggregateIr` merge of
    collapsed IR + tail hops (SawtoothOnlineAggregator.scala:86-126).
+   ``ir_merge_kernel`` is the engine's one IR-merge kernel: the serving
+   fetch (jobs/upload.py) runs it too, with each key's batch IR reshaped
+   into tile rows (``ir_tile_column``) and its streaming rows as the head.
 
 Exactness: every supported op is EXACT and equal to `asof_join(...,
 sawtooth=True)` (asserted by tests/test_tiles_slicing.py), because
@@ -76,10 +79,14 @@ When to use which (measured, local[32]):
 - small inputs or queries dense in hops: plain wins (the tile/semi-join
   stages are fixed overhead and the head set approaches the full stream);
 - per-key event counts beyond Arrow-batch memory: tiled is the ONLY path
-  for decomposable ops (bounded per-key state), sliced for order ops.
+  for decomposable ops (bounded per-key state), sliced for order ops;
+- serving (batch IRs + streaming rows or stream tiles): the same kernel,
+  reached through jobs/upload.fetch_features(_tiled).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -322,6 +329,26 @@ def tile_agg_exprs(
         if "hist" in stats:
             hist_cols.append(c)
     return aggs, hist_cols
+
+
+# batch-IR field (jobs/upload.py) -> tile stat; the order/extreme families
+# and the bucket map take their names from the part
+_IR_TILE_STATS = {"cnt": "cnt", "sm": "sum", "mn": "min", "mx": "max", "st": "set", "qsk": "qsk"}
+
+
+def ir_tile_column(p: AggregationPart, field: str, col) -> tuple[str, object]:
+    """One batch-IR field of part ``p`` (a collapsed column or a tail-hop
+    struct field, jobs/upload.build_batch_irs) as ``(stat, expr)``: the tile
+    stat the IR-merge kernel reads and the value in the tile format above."""
+    if field == "hmap":  # value counts: __n -> __c
+        return "hist", F.transform(col, lambda e: F.struct(e["__v"].alias("__v"), e["__n"].alias("__c")))
+    if field == "bk":
+        return f"bk__{p.bucket}", col
+    if field in ("ent", "ext"):
+        return _op_family(p.op), col
+    if field.startswith("p"):  # power sums p{pw}
+        return f"pow{field[1:]}", col
+    return _IR_TILE_STATS[field], col
 
 
 def build_hop_tiles(
@@ -608,243 +635,296 @@ def tiled_sawtooth_asof_join(
     )
 
     # 3) union (null-mated) — the cogroup's right side
-    tile_stat_cols = [f.name for f in tiles.schema.fields if "__" in f.name and f.name not in (_TS_US, "__is_tile")]
-    heads_u = heads
-    for c in tile_stat_cols:
-        heads_u = heads_u.withColumn(c, F.lit(None).cast(dict(tiles.dtypes)[c]))
-    tiles_u = tiles
-    for c in head_cols:
-        tiles_u = tiles_u.withColumn(c, F.lit(None).cast(dict(r.dtypes)[c]))
-    cols_order = right_keys + [_TS_US, "__is_tile"] + head_cols + tile_stat_cols
-    union = tiles_u.select(*cols_order).unionByName(heads_u.select(*cols_order))
+    union = tiles.unionByName(heads, allowMissingColumns=True)
     union = union.select(*[F.col(c).alias(f"__r_{c}") for c in union.columns])
 
-    feat_fields = []
     right_types = {f.name: f.dataType for f in right.schema.fields}
-    for p in parts:
-        name = f"{prefix}_{p.output_name}" if prefix else p.output_name
-        feat_fields.append(T.StructField(name, part_output_type(p, right_types[p.input_column]), True))
+    feat_fields = [
+        T.StructField(
+            f"{prefix}_{p.output_name}" if prefix else p.output_name,
+            part_output_type(p, right_types[p.input_column]),
+            True,
+        )
+        for p in parts
+    ]
     out_schema = T.StructType(list(left.schema.fields) + feat_fields)
-    feat_names = [f.name for f in feat_fields]
-    part_list = list(parts)
+    kernel = functools.partial(
+        ir_merge_kernel,
+        parts=list(parts),
+        feat_names=[f.name for f in feat_fields],
+        stat_prefixes=[p.input_column for p in parts],
+        input_types=right_types,
+        tie_cols=tie_cols,
+        arrow_schema=to_arrow_schema(out_schema),
+        hop_us=hop_us,
+    )
+    out = cogroup_apply(l, union, left_keys, right_keys, coarse_buckets, out_schema, kernel)
+    return apply_derivations(out, gb.derivations)
+
+
+def _as_k(p: AggregationPart) -> AggregationPart:
+    """FIRST/LAST as their k=1 list ops, so the tail/head merge is uniform."""
+    if p.op not in (Op.FIRST, Op.LAST):
+        return p
+    return AggregationPart(p.input_column, Op.FIRST_K if p.op == Op.FIRST else Op.LAST_K, p.window, k=1)
+
+
+def _merge_order_k(p: AggregationPart, tail: list, head: list) -> list:
+    """``_merge_order`` of part ``p``; FIRST/LAST unwrap their k=1 lists."""
+    if p.op in (Op.FIRST, Op.LAST):
+        return [None if v is None else v[0] for v in _merge_order(_as_k(p).op, 1, tail, head)]
+    return _merge_order(p.op, p.k, tail, head)
+
+
+def _merge_minmax(tail, head, take_min: bool) -> list:
+    return [
+        h if t is None else (t if h is None else (min(t, h) if take_min else max(t, h)))
+        for t, h in zip(tail, head)
+    ]
+
+
+def ir_merge_kernel(
+    lt: pa.Table,
+    rt: pa.Table,
+    lcodes: np.ndarray,
+    rcodes: np.ndarray,
+    base: int,
+    block: int,
+    *,
+    parts: list[AggregationPart],
+    feat_names: list[str],
+    stat_prefixes: list[str],
+    input_types: dict[str, T.DataType],
+    tie_cols: list[str],
+    arrow_schema: pa.Schema,
+    hop_us: int | None = None,
+    head_start_us: int | None = None,
+) -> pa.Table:
+    """The one IR-merge kernel: per query, merge the tile rows in its window
+    tail with the exact head events — the reference's ``lambdaAggregateIr``
+    merge of collapsed IR + tail hops + streaming rows
+    (SawtoothOnlineAggregator.scala:86-126). A ``cogroup_apply`` batch kernel
+    for both the tiled backfill and the serving fetch (jobs/upload.py).
+
+    ``rt`` holds tile rows (``__is_tile``) and head events. Part ``i`` reads
+    its tile stats from ``{stat_prefixes[i]}__{stat}`` (the ``tile_agg_exprs``
+    names) and its head values from its input column. A part's tail is the
+    tile rows (and IR entries) in ``[wstart, head)``, its head the events in
+    ``[head, q)``, where ``head = max(head start, wstart)`` and the head
+    start is ``head_start_us`` when given, else the ``hop_us`` floor of the
+    query ts. Unbounded windows take every tile row of the key.
+
+    Whole-batch in composite-index space: code·block + (ts−base) makes every
+    searchsorted resolve ALL keys of the Arrow batch at once (same layout as
+    kernels.MultiKeyEventColumns, from kernels.composite_layout); clamping
+    window offsets to [0, block) keeps ranges inside their key's segment."""
+    q_ts = lt.column(_TS_US).to_numpy()
+    r_ts = rt.column(_TS_US).to_numpy()
+    is_tile = _numpy(rt.column("__is_tile"))
+    tcomp_all = rcodes[is_tile].astype(np.int64) * block + (r_ts[is_tile] - base)
+    torder = np.argsort(tcomp_all, kind="stable")
+    tile_rows, tcomp_all = rt.filter(is_tile).take(torder), tcomp_all[torder]
+    # head events in the raw kernel's event store, ordered by (comp,
+    # tie_breakers), so first/last(_k) heads match the plain path exactly
+    head_events = MultiKeyEventColumns(
+        rt.filter(~is_tile), rcodes[~is_tile], r_ts[~is_tile], tie_cols, base, block
+    )
+    tile_code_base = (tcomp_all // block) * block
     n_ties = len(tie_cols)
 
-    arrow_schema = to_arrow_schema(out_schema)
+    def filled(stat_col: str) -> np.ndarray:
+        """One tile partial per tile; NULL (no value in the tile) reads 0."""
+        return _numpy(tile_rows.column(stat_col).fill_null(0))
 
-    def kernel(lt: pa.Table, rt: pa.Table, lcodes, rcodes, base, block) -> pa.Table:
-        """Whole-batch kernel in composite-index space: code·block + (ts−base)
-        makes every searchsorted resolve ALL keys of the Arrow batch at once
-        (same layout as kernels.MultiKeyEventColumns, from
-        kernels.composite_layout); clamping window offsets to [0, block)
-        keeps ranges inside their key's segment."""
-        q_ts = lt.column(_TS_US).to_numpy()
-        r_ts = rt.column(_TS_US).to_numpy()
-        is_tile = _numpy(rt.column("__is_tile"))
-        tcomp_all = rcodes[is_tile].astype(np.int64) * block + (r_ts[is_tile] - base)
-        torder = np.argsort(tcomp_all, kind="stable")
-        tile_rows, tcomp_all = rt.filter(is_tile).take(torder), tcomp_all[torder]
-        # head events in the raw kernel's event store, ordered by (comp,
-        # tie_breakers), so first/last(_k) heads match the plain path exactly
-        head_events = MultiKeyEventColumns(
-            rt.filter(~is_tile), rcodes[~is_tile], r_ts[~is_tile], tie_cols, base, block
-        )
-        tile_code_base = (tcomp_all // block) * block
+    def flat_lists(stat_col: str) -> tuple[np.ndarray, pa.Array]:
+        """(per-tile entry counts, flattened entries) of a list IR column."""
+        col = tile_rows.column(stat_col).combine_chunks()
+        return _numpy(pc.list_value_length(col).fill_null(0)), pc.list_flatten(col)
 
-        def filled(stat_col: str) -> np.ndarray:
-            """One tile partial per tile; NULL (no value in the tile) reads 0."""
-            return _numpy(tile_rows.column(stat_col).fill_null(0))
+    entry_cache: dict[str, tuple] = {}
 
-        def flat_lists(stat_col: str) -> tuple[np.ndarray, pa.Array]:
-            """(per-tile entry counts, flattened entries) of a list IR column."""
-            col = tile_rows.column(stat_col).combine_chunks()
-            return _numpy(pc.list_value_length(col).fill_null(0)), pc.list_flatten(col)
+    def entries(stat_col: str, kind: str) -> tuple:
+        """Flatten one tile collection column into sorted entry arrays.
 
-        entry_cache: dict[str, tuple] = {}
-
-        def entries(stat_col: str, kind: str) -> tuple:
-            """Flatten one tile collection column into sorted entry arrays.
-
-            kind='ts'    -> (comp_by_orig_ts, values) ordered by (ts, ties)
-            kind='value' -> (tile_comp, values)
-            kind='hist'  -> (tile_comp, values, weights)
-            kind='qsk'   -> (tile_comp, samples, weights)
-            Entry-level ts bounds equal tile-level inclusion because window
-            starts are hop multiples (module docstring)."""
-            if stat_col in entry_cache:
-                return entry_cache[stat_col]
-            if kind == "qsk":
-                # struct{s: sorted samples, w: per-sample weight} per tile
-                s_arr, w_arr = tile_rows.column(stat_col).combine_chunks().flatten()
-                lens = _numpy(pc.list_value_length(s_arr).fill_null(0))
-                out = (
-                    np.repeat(tcomp_all, lens),
-                    _numpy(pc.list_flatten(s_arr)).astype(np.float64),
-                    np.repeat(_numpy(w_arr.fill_null(0)), lens),
-                )
-            else:
-                lens, flat = flat_lists(stat_col)
-                if kind == "ts":
-                    comp = np.repeat(tile_code_base, lens) + (_numpy(flat.field("t")) - base)
-                    ties = [_numpy(flat.field(f"b{i}")) for i in range(n_ties)]
-                    order = np.lexsort(tuple(reversed([comp] + ties)))
-                    out = (comp[order], _numpy(flat.field("v"))[order])
-                elif kind == "hist":  # comp already ascending (tiles sorted)
-                    out = (np.repeat(tcomp_all, lens), _numpy(flat.field("__v")), _numpy(flat.field("__c")))
-                else:  # value entries: bound by the tile's own comp
-                    out = (np.repeat(tcomp_all, lens), _numpy(flat))
-            entry_cache[stat_col] = out
-            return out
-
-        bucket_cache: dict = {}
-
-        def bucket_series(c: str, b: str):
-            """Flatten one per-bucket tile IR column + the bucket-masked head
-            events into per-bucket-code contiguous slices (stable sort on
-            (bucket_code, comp)); codes are shared between tiles and heads."""
-            ck = (c, b)
-            if ck in bucket_cache:
-                return bucket_cache[ck]
-            lens, flat = flat_lists(f"{c}__bk__{b}")
-            tcomp_e = np.repeat(tcomp_all, lens)
-            tb = _numpy(flat.field("__b"))
-            hcomp_b, hb, hvals_b = head_events.pair(c, b)
-            codes, uniques = pd.factorize(np.concatenate([tb, hb]))
-            tcd, hcd = codes[: len(tb)], codes[len(tb) :]
-            tord = np.lexsort((tcomp_e, tcd))
-            tcomp_e, tcd = tcomp_e[tord], tcd[tord]
-            stats = {
-                nm: _numpy(flat.field(nm))[tord]
-                for nm in ("cnt", "sm", "mn", "mx")
-                if flat.type.get_field_index(nm) >= 0
-            }
-            # heads come in (comp, tie_breakers) order, so a stable sort on
-            # the bucket gives the raw kernel's exact event order per bucket:
-            # per-bucket first/last(_k) match the plain grouped path
-            hord = np.argsort(hcd, kind="stable")
-            hcomp_b, hvals_b, hcd = hcomp_b[hord], hvals_b[hord], hcd[hord]
-            nb = len(uniques)
-            tlo = np.searchsorted(tcd, np.arange(nb + 1))
-            hlo = np.searchsorted(hcd, np.arange(nb + 1))
-            res = (uniques, tcomp_e, stats, tlo, hcomp_b, hvals_b, hlo)
-            bucket_cache[ck] = res
-            return res
-
-        bucket_entry_cache: dict = {}
-
-        def bucket_entries(c: str, b: str, fam: str, kind: str) -> tuple:
-            """Flatten one per-bucket collection IR column (each element
-            tagged with its bucket, `{c}__bk_{fam}__{b}`) into arrays laid
-            out bucket-contiguously (same layouts as `entries`, plus an
-            `elo` offset table indexing each bucket's slice). Bucket codes
-            come from bucket_series' factorize so slices line up with the
-            scalar IRs and the head slices."""
-            ck = (c, b, fam)
-            if ck in bucket_entry_cache:
-                return bucket_entry_cache[ck]
-            uniques = bucket_series(c, b)[0]
-            field = {"set": "vset"}.get(fam, fam)
-            lens, flat = flat_lists(f"{c}__bk_{field}__{b}")
-            tcomp_rep = np.repeat(tcomp_all, lens)
-            # a bucket present in any collection entry always has tile rows
-            # in the scalar IR column (cnt is collected unconditionally at
-            # the same grain), so factorize covered it
-            ebkt = pd.Index(uniques).get_indexer(_numpy(flat.field("__b")))
+        kind='ts'    -> (comp_by_orig_ts, values) ordered by (ts, ties)
+        kind='value' -> (tile_comp, values)
+        kind='hist'  -> (tile_comp, values, weights)
+        kind='qsk'   -> (tile_comp, samples, weights)
+        Entry-level ts bounds equal tile-level inclusion because window
+        starts are hop multiples (module docstring)."""
+        if stat_col in entry_cache:
+            return entry_cache[stat_col]
+        if kind == "qsk":
+            # struct{s: sorted samples, w: per-sample weight} per tile
+            s_arr, w_arr = tile_rows.column(stat_col).combine_chunks().flatten()
+            lens = _numpy(pc.list_value_length(s_arr).fill_null(0))
+            out = (
+                np.repeat(tcomp_all, lens),
+                _numpy(pc.list_flatten(s_arr)).astype(np.float64),
+                np.repeat(_numpy(w_arr.fill_null(0)), lens),
+            )
+        else:
+            lens, flat = flat_lists(stat_col)
             if kind == "ts":
                 comp = np.repeat(tile_code_base, lens) + (_numpy(flat.field("t")) - base)
                 ties = [_numpy(flat.field(f"b{i}")) for i in range(n_ties)]
-                order = np.lexsort(tuple(reversed([ebkt, comp] + ties)))
-                out_t: tuple = (comp[order], _numpy(flat.field("v"))[order])
-            else:
-                order = np.lexsort((tcomp_rep, ebkt))
-                if kind == "hist":
-                    out_t = (tcomp_rep[order], _numpy(flat.field("__v"))[order], _numpy(flat.field("__c"))[order])
-                else:  # plain value entries, bound by their tile's comp
-                    out_t = (tcomp_rep[order], _numpy(flat.field("v"))[order])
-            elo = np.searchsorted(ebkt[order], np.arange(len(uniques) + 1))
-            res = (elo, *out_t)
-            bucket_entry_cache[ck] = res
-            return res
+                order = np.lexsort(tuple(reversed([comp] + ties)))
+                out = (comp[order], _numpy(flat.field("v"))[order])
+            elif kind == "hist":  # comp already ascending (tiles sorted)
+                out = (np.repeat(tcomp_all, lens), _numpy(flat.field("__v")), _numpy(flat.field("__c")))
+            else:  # value entries: bound by the tile's own comp
+                out = (np.repeat(tcomp_all, lens), _numpy(flat))
+        entry_cache[stat_col] = out
+        return out
 
-        nullkey = lcodes < 0
+    bucket_cache: dict = {}
+
+    def bucket_series(pre: str, c: str, b: str):
+        """Flatten one per-bucket tile IR column + the bucket-masked head
+        events into per-bucket-code contiguous slices (stable sort on
+        (bucket_code, comp)); codes are shared between tiles and heads."""
+        ck = (pre, c, b)
+        if ck in bucket_cache:
+            return bucket_cache[ck]
+        lens, flat = flat_lists(f"{pre}__bk__{b}")
+        tcomp_e = np.repeat(tcomp_all, lens)
+        tb = _numpy(flat.field("__b"))
+        hcomp_b, hb, hvals_b = head_events.pair(c, b)
+        codes, uniques = pd.factorize(np.concatenate([tb, hb]))
+        tcd, hcd = codes[: len(tb)], codes[len(tb) :]
+        tord = np.lexsort((tcomp_e, tcd))
+        tcomp_e, tcd = tcomp_e[tord], tcd[tord]
+        stats = {
+            nm: _numpy(flat.field(nm))[tord]
+            for nm in ("cnt", "sm", "mn", "mx")
+            if flat.type.get_field_index(nm) >= 0
+        }
+        # heads come in (comp, tie_breakers) order, so a stable sort on
+        # the bucket gives the raw kernel's exact event order per bucket:
+        # per-bucket first/last(_k) match the plain grouped path
+        hord = np.argsort(hcd, kind="stable")
+        hcomp_b, hvals_b, hcd = hcomp_b[hord], hvals_b[hord], hcd[hord]
+        nb = len(uniques)
+        tlo = np.searchsorted(tcd, np.arange(nb + 1))
+        hlo = np.searchsorted(hcd, np.arange(nb + 1))
+        res = (uniques, tcomp_e, stats, tlo, hcomp_b, hvals_b, hlo)
+        bucket_cache[ck] = res
+        return res
+
+    bucket_entry_cache: dict = {}
+
+    def bucket_entries(pre: str, c: str, b: str, fam: str, kind: str) -> tuple:
+        """Flatten one per-bucket collection IR column (each element
+        tagged with its bucket, `{pre}__bk_{fam}__{b}`) into arrays laid
+        out bucket-contiguously (same layouts as `entries`, plus an
+        `elo` offset table indexing each bucket's slice). Bucket codes
+        come from bucket_series' factorize so slices line up with the
+        scalar IRs and the head slices."""
+        ck = (pre, b, fam)
+        if ck in bucket_entry_cache:
+            return bucket_entry_cache[ck]
+        uniques = bucket_series(pre, c, b)[0]
+        field = {"set": "vset"}.get(fam, fam)
+        lens, flat = flat_lists(f"{pre}__bk_{field}__{b}")
+        tcomp_rep = np.repeat(tcomp_all, lens)
+        # a bucket present in any collection entry always has tile rows
+        # in the scalar IR column (cnt is collected unconditionally at
+        # the same grain), so factorize covered it
+        ebkt = pd.Index(uniques).get_indexer(_numpy(flat.field("__b")))
+        if kind == "ts":
+            comp = np.repeat(tile_code_base, lens) + (_numpy(flat.field("t")) - base)
+            ties = [_numpy(flat.field(f"b{i}")) for i in range(n_ties)]
+            order = np.lexsort(tuple(reversed([ebkt, comp] + ties)))
+            out_t: tuple = (comp[order], _numpy(flat.field("v"))[order])
+        else:
+            order = np.lexsort((tcomp_rep, ebkt))
+            if kind == "hist":
+                out_t = (tcomp_rep[order], _numpy(flat.field("__v"))[order], _numpy(flat.field("__c"))[order])
+            else:  # plain value entries, bound by their tile's comp
+                out_t = (tcomp_rep[order], _numpy(flat.field("v"))[order])
+        elo = np.searchsorted(ebkt[order], np.arange(len(uniques) + 1))
+        res = (elo, *out_t)
+        bucket_entry_cache[ck] = res
+        return res
+
+    nullkey = lcodes < 0
+    kbase = lcodes.astype(np.int64) * block
+    comp_q = np.where(nullkey, np.int64(-1), kbase + (q_ts - base))
+    if head_start_us is None:
         head_start = (q_ts // hop_us) * hop_us
-        kbase = lcodes.astype(np.int64) * block
-        comp_q = np.where(nullkey, np.int64(-1), kbase + (q_ts - base))
-        comp_h = np.where(nullkey, np.int64(0), kbase + np.clip(head_start - base, 0, block - 1))
+    else:
+        head_start = np.full(len(q_ts), head_start_us, np.int64)
 
-        out: dict[str, object] = {}
-        for p, fname in zip(part_list, feat_names):
-            w_us = p.window.millis * 1000
+    def comp_at(ts: np.ndarray) -> np.ndarray:
+        return np.where(nullkey, np.int64(0), kbase + np.clip(ts - base, 0, block - 1))
+
+    out: dict[str, object] = {}
+    for p, fname, pre in zip(parts, feat_names, stat_prefixes):
+        if p.window.millis is None:  # unbounded: from the key's segment start
+            wstart = np.full(len(q_ts), base, np.int64)
+        else:
             p_hop_us = tail_hop_millis(p.window.millis) * 1000
-            wstart = ((q_ts - w_us) // p_hop_us) * p_hop_us
-            comp_w = np.where(nullkey, np.int64(0), kbase + np.clip(wstart - base, 0, block - 1))
-            c = p.input_column
+            wstart = ((q_ts - p.window.millis * 1000) // p_hop_us) * p_hop_us
+        comp_w = comp_at(wstart)
+        # a window that starts after the head start (a 90m window queried a
+        # day after batchEnd) reads head events only
+        comp_h = comp_at(np.maximum(head_start, wstart))
+        c = p.input_column
 
-            if p.bucket is not None:
-                # Map[bucket -> agg]: per-bucket tile IRs merged with
-                # bucket-masked head events; iteration is per BUCKET (each
-                # pass vectorized over all queries), the same shape as
-                # kernels._grouped_kernel. Scalars merge range partials;
-                # collection IRs reuse the SAME raw-path kernels per bucket.
-                uniques, tcomp_e, bstats, tlo, hcomp_b, hvals_b, hlo = bucket_series(c, p.bucket)
-                fam = _op_family(p.op)
-                integral = isinstance(part_output_type(p, right_types[c]).valueType, T.LongType)
-                acc: list = [None] * len(q_ts)
-                for g in range(len(uniques)):
-                    ts_g = tcomp_e[tlo[g] : tlo[g + 1]]
-                    s1 = np.searchsorted(ts_g, comp_w, side="left")
-                    e1 = np.maximum(np.searchsorted(ts_g, comp_h, side="left"), s1)
-                    hts_g = hcomp_b[hlo[g] : hlo[g + 1]]
-                    hv_g = hvals_b[hlo[g] : hlo[g + 1]]
-                    s2 = np.searchsorted(hts_g, comp_h, side="left")
-                    e2 = np.maximum(np.searchsorted(hts_g, comp_q, side="left"), s2)
-                    if fam is not None:
-                        kind = (
-                            "ts"
-                            if p.op in _ORDER_OPS
-                            else ("hist" if p.op in _HIST_OPS else "value")
-                        )
-                        ent = bucket_entries(c, p.bucket, fam, kind)
-                        elo, ecomp = ent[0], ent[1]
-                        arr = ecomp[elo[g] : elo[g + 1]]
-                        av = ent[2][elo[g] : elo[g + 1]]
-                        es = np.searchsorted(arr, comp_w, side="left")
-                        ee = np.maximum(np.searchsorted(arr, comp_h, side="left"), es)
-                        if p.op in _SET_OPS:
-                            vals_g = _distinct2(av, es, ee, hv_g, s2, e2)
-                        elif p.op in _HIST_OPS:
-                            aw = ent[3][elo[g] : elo[g + 1]]
-                            kk = p.k if (p.k or p.op != Op.HISTOGRAM) else None
-                            vals_g = _hist2(av, aw, es, ee, hv_g, s2, e2, kk)
-                        else:  # order / extreme: raw-path kernel both sides
-                            kp = p
-                            if p.op in (Op.FIRST, Op.LAST):
-                                kp = AggregationPart(
-                                    p.input_column,
-                                    Op.FIRST_K if p.op == Op.FIRST else Op.LAST_K,
-                                    p.window,
-                                    k=1,
-                                )
-                            tail_res = _kernel(kp, _ColumnSeries(arr, av), es, ee)
-                            head_res = _kernel(kp, _ColumnSeries(hts_g, hv_g), s2, e2)
-                            if p.op in (Op.FIRST, Op.LAST):
-                                merged_k = _merge_order(kp.op, 1, tail_res, head_res)
-                                vals_g = [None if v is None else v[0] for v in merged_k]
-                            else:
-                                vals_g = _merge_order(p.op, p.k, tail_res, head_res)
-                        bkey = str(uniques[g])
-                        for i in range(len(vals_g)):
-                            if vals_g[i] is not None:
-                                d0 = acc[i]
-                                if d0 is None:
-                                    d0 = acc[i] = {}
-                                d0[bkey] = vals_g[i]
-                        continue
+        if p.bucket is not None:
+            # Map[bucket -> agg]: per-bucket tile IRs merged with
+            # bucket-masked head events; iteration is per BUCKET (each
+            # pass vectorized over all queries), the same shape as
+            # kernels._grouped_kernel. Scalars merge range partials;
+            # collection IRs reuse the SAME raw-path kernels per bucket.
+            uniques, tcomp_e, bstats, tlo, hcomp_b, hvals_b, hlo = bucket_series(pre, c, p.bucket)
+            fam = _op_family(p.op)
+            integral = isinstance(part_output_type(p, input_types[c]).valueType, T.LongType)
+            acc: list = [None] * len(q_ts)
+            for g in range(len(uniques)):
+                ts_g = tcomp_e[tlo[g] : tlo[g + 1]]
+                s1 = np.searchsorted(ts_g, comp_w, side="left")
+                e1 = np.maximum(np.searchsorted(ts_g, comp_h, side="left"), s1)
+                hts_g = hcomp_b[hlo[g] : hlo[g + 1]]
+                hv_g = hvals_b[hlo[g] : hlo[g + 1]]
+                s2 = np.searchsorted(hts_g, comp_h, side="left")
+                e2 = np.maximum(np.searchsorted(hts_g, comp_q, side="left"), s2)
+                if fam is not None:
+                    kind = (
+                        "ts"
+                        if p.op in _ORDER_OPS
+                        else ("hist" if p.op in _HIST_OPS else "value")
+                    )
+                    ent = bucket_entries(pre, c, p.bucket, fam, kind)
+                    elo, ecomp = ent[0], ent[1]
+                    arr = ecomp[elo[g] : elo[g + 1]]
+                    av = ent[2][elo[g] : elo[g + 1]]
+                    es = np.searchsorted(arr, comp_w, side="left")
+                    ee = np.maximum(np.searchsorted(arr, comp_h, side="left"), es)
+                    if p.op in _SET_OPS:
+                        vals_g = _distinct2(av, es, ee, hv_g, s2, e2)
+                    elif p.op in _HIST_OPS:
+                        aw = ent[3][elo[g] : elo[g + 1]]
+                        kk = p.k if (p.k or p.op != Op.HISTOGRAM) else None
+                        vals_g = _hist2(av, aw, es, ee, hv_g, s2, e2, kk)
+                    else:  # order / extreme: raw-path kernel both sides
+                        kp = _as_k(p)
+                        tail_res = _kernel(kp, _ColumnSeries(arr, av), es, ee)
+                        head_res = _kernel(kp, _ColumnSeries(hts_g, hv_g), s2, e2)
+                        vals_g = _merge_order_k(p, tail_res, head_res)
+                elif p.op in (Op.MIN, Op.MAX):
+                    take_min = p.op == Op.MIN
+                    nm = "mn" if take_min else "mx"
+                    part_t = _range_minmax(bstats[nm][tlo[g] : tlo[g + 1]], s1, e1, take_min)
+                    part_h = _range_minmax(hv_g, s2, e2, take_min)
+                    vals_g = _merge_minmax(part_t, part_h, take_min)
+                else:
                     cnt_g = _range_sum(
                         np.asarray(bstats["cnt"][tlo[g] : tlo[g + 1]], np.float64), s1, e1
                     ) + (e2 - s2)
                     if p.op == Op.COUNT:
                         vals_g = [None if v <= 0 else int(v) for v in cnt_g]
-                    elif p.op in (Op.SUM, Op.AVERAGE):
+                    else:
                         sm_g = _range_sum(
                             np.asarray(bstats["sm"][tlo[g] : tlo[g + 1]], np.float64), s1, e1
                         ) + _range_sum(
@@ -859,155 +939,116 @@ def tiled_sawtooth_asof_join(
                             vals_g = [
                                 None if n0 <= 0 else float(v / n0) for v, n0 in zip(sm_g, cnt_g)
                             ]
-                    else:
-                        take_min = p.op == Op.MIN
-                        nm = "mn" if take_min else "mx"
-                        part_t = _range_minmax(bstats[nm][tlo[g] : tlo[g + 1]], s1, e1, take_min)
-                        part_h = _range_minmax(hv_g, s2, e2, take_min)
-                        vals_g = []
-                        for a, b2 in zip(part_t, part_h):
-                            if a is None:
-                                vals_g.append(b2)
-                            elif b2 is None:
-                                vals_g.append(a)
-                            else:
-                                vals_g.append(min(a, b2) if take_min else max(a, b2))
-                    bkey = str(uniques[g])
-                    for i in range(len(vals_g)):
-                        if vals_g[i] is not None:
-                            d0 = acc[i]
-                            if d0 is None:
-                                d0 = acc[i] = {}
-                            d0[bkey] = vals_g[i]
-                res = np.empty(len(q_ts), object)
-                for i, d0 in enumerate(acc):
-                    res[i] = d0
-                out[fname] = res
+                bkey = str(uniques[g])
+                for i in range(len(vals_g)):
+                    if vals_g[i] is not None:
+                        d0 = acc[i]
+                        if d0 is None:
+                            d0 = acc[i] = {}
+                        d0[bkey] = vals_g[i]
+            res = np.empty(len(q_ts), object)
+            for i, d0 in enumerate(acc):
+                res[i] = d0
+            out[fname] = res
+            continue
+
+        hcs = head_events.column(c)
+        hs = np.searchsorted(hcs.ts, comp_h, side="left")
+        he = np.maximum(np.searchsorted(hcs.ts, comp_q, side="left"), hs)
+
+        if p.op in (Op.COUNT, Op.SUM, Op.AVERAGE) or p.op in _MOMENT_OPS:
+            # tail: tiles fully inside [wstart, head)
+            ts_idx_s = np.searchsorted(tcomp_all, comp_w, side="left")
+            ts_idx_e = np.maximum(np.searchsorted(tcomp_all, comp_h, side="left"), ts_idx_s)
+            cnt_t = _range_sum(filled(f"{pre}__cnt"), ts_idx_s, ts_idx_e)
+            n = cnt_t + (he - hs)  # non-null values in window
+            if p.op == Op.COUNT:
+                out[fname] = [None if v <= 0 else int(v) for v in n]
                 continue
-
-            hcs = head_events.column(c)
-            hs = np.searchsorted(hcs.ts, comp_h, side="left")
-            he = np.maximum(np.searchsorted(hcs.ts, comp_q, side="left"), hs)
-
-            if p.op in (Op.COUNT, Op.SUM, Op.AVERAGE) or p.op in _MOMENT_OPS:
-                # tail: tiles fully inside [wstart, head_start)
-                ts_idx_s = np.searchsorted(tcomp_all, comp_w, side="left")
-                ts_idx_e = np.maximum(np.searchsorted(tcomp_all, comp_h, side="left"), ts_idx_s)
-                cnt_t = _range_sum(filled(f"{c}__cnt"), ts_idx_s, ts_idx_e)
-                n = cnt_t + (he - hs)  # non-null values in window
-                if p.op == Op.COUNT:
-                    out[fname] = [None if v <= 0 else int(v) for v in n]
-                    continue
-                if p.op == Op.SUM and isinstance(part_output_type(p, right_types[c]), T.LongType):
-                    # exact int64 path: integral tile partials and heads both
-                    # arrive as int64, so >2^53 sums (incl. the Decimal
-                    # rewrite's unscaled values) never round through float64
-                    pt = np.concatenate(([0], np.cumsum(filled(f"{c}__sum").astype(np.int64))))
-                    ph = np.concatenate(([0], np.cumsum(hcs.vals.astype(np.int64))))
-                    total_i = (pt[ts_idx_e] - pt[ts_idx_s]) + (ph[he] - ph[hs])
-                    out[fname] = [None if nv <= 0 else int(v) for v, nv in zip(total_i, n)]
-                    continue
-                hvals = hcs.vals.astype(np.float64)
-                t_sum_np = filled(f"{c}__sum").astype(np.float64)
-                sum_t = _range_sum(t_sum_np, ts_idx_s, ts_idx_e)
-                sum_h = _range_sum(hvals, hs, he)
-                total = sum_t + sum_h
-                if p.op == Op.SUM:
-                    out[fname] = [None if nv <= 0 else float(v) for v, nv in zip(total, n)]
-                    continue
-                if p.op == Op.AVERAGE:
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        avg = np.where(n > 0, total / n, np.nan)
-                    out[fname] = [None if np.isnan(v) else float(v) for v in avg]
-                    continue
-                # moments from merged raw power sums (same central-moment
-                # algebra as kernels._moments at shift 0)
-                upto = 2 if p.op == Op.VARIANCE else (3 if p.op == Op.SKEW else 4)
-                S = {1: total}
-                for pw in range(2, upto + 1):
-                    s_t = _range_sum(filled(f"{c}__pow{pw}"), ts_idx_s, ts_idx_e)
-                    p_h = _prefix(hvals, pw)
-                    S[pw] = s_t + (p_h[he] - p_h[hs])
+            if p.op == Op.SUM and isinstance(part_output_type(p, input_types[c]), T.LongType):
+                # exact int64 path: integral tile partials and heads both
+                # arrive as int64, so >2^53 sums (incl. the Decimal
+                # rewrite's unscaled values) never round through float64
+                pt = np.concatenate(([0], np.cumsum(filled(f"{pre}__sum").astype(np.int64))))
+                ph = np.concatenate(([0], np.cumsum(hcs.vals.astype(np.int64))))
+                total_i = (pt[ts_idx_e] - pt[ts_idx_s]) + (ph[he] - ph[hs])
+                out[fname] = [None if nv <= 0 else int(v) for v, nv in zip(total_i, n)]
+                continue
+            hvals = hcs.vals.astype(np.float64)
+            t_sum_np = filled(f"{pre}__sum").astype(np.float64)
+            sum_t = _range_sum(t_sum_np, ts_idx_s, ts_idx_e)
+            sum_h = _range_sum(hvals, hs, he)
+            total = sum_t + sum_h
+            if p.op == Op.SUM:
+                out[fname] = [None if nv <= 0 else float(v) for v, nv in zip(total, n)]
+                continue
+            if p.op == Op.AVERAGE:
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    mu = S[1] / n
-                    m2 = np.maximum(S[2] / n - mu**2, 0.0)
-                    if p.op == Op.VARIANCE:
-                        vals_out, bad = m2, n <= 0
-                    elif p.op == Op.SKEW:
-                        m3 = S[3] / n - 3 * mu * S[2] / n + 2 * mu**3
-                        vals_out = m3 / np.power(m2, 1.5)
-                        bad = (n < 3) | (m2 <= 0)
-                    else:
-                        m4 = S[4] / n - 4 * mu * S[3] / n + 6 * mu**2 * S[2] / n - 3 * mu**4
-                        vals_out = m4 / (m2**2) - 3.0
-                        bad = (n < 4) | (m2 <= 0)
-                res = vals_out.astype(object)
-                res[bad | (n <= 0)] = None
-                out[fname] = res
-            elif p.op in (Op.MIN, Op.MAX):
-                take_min = p.op == Op.MIN
-                tcol = f"{c}__{'min' if take_min else 'max'}"
-                tt, tv = valid_values(tile_rows.column(tcol).combine_chunks(), tcomp_all)
-                s2 = np.searchsorted(tt, comp_w, side="left")
-                e2 = np.maximum(np.searchsorted(tt, comp_h, side="left"), s2)
-                part_t = _range_minmax(tv, s2, e2, take_min)
-                part_h = _range_minmax(hcs.vals, hs, he, take_min)
-                merged = []
-                for a, b in zip(part_t, part_h):
-                    if a is None:
-                        merged.append(b)
-                    elif b is None:
-                        merged.append(a)
-                    else:
-                        merged.append(min(a, b) if take_min else max(a, b))
-                out[fname] = merged
-            elif p.op in _ORDER_OPS or p.op in _EXTREME_OPS:
-                fam = _op_family(p.op)
-                kind = "ts" if p.op in _ORDER_OPS else "value"
-                ecomp, evals = entries(f"{c}__{fam}", kind)
-                es = np.searchsorted(ecomp, comp_w, side="left")
-                ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-                # reuse the raw-path kernel on both sides, merge per op.
-                # FIRST/LAST ride their _K kernels so the list merge is uniform
-                kp = p
-                if p.op in (Op.FIRST, Op.LAST):
-                    kp = AggregationPart(
-                        p.input_column,
-                        Op.FIRST_K if p.op == Op.FIRST else Op.LAST_K,
-                        p.window,
-                        k=1,
-                    )
-                tail_res = _kernel(kp, _ColumnSeries(ecomp, evals), es, ee)
-                head_res = _kernel(kp, hcs, hs, he)
-                if p.op in (Op.FIRST, Op.LAST):
-                    merged_k = _merge_order(
-                        Op.FIRST_K if p.op == Op.FIRST else Op.LAST_K, 1, tail_res, head_res
-                    )
-                    out[fname] = [None if v is None else v[0] for v in merged_k]
+                    avg = np.where(n > 0, total / n, np.nan)
+                out[fname] = [None if np.isnan(v) else float(v) for v in avg]
+                continue
+            # moments from merged raw power sums (same central-moment
+            # algebra as kernels._moments at shift 0)
+            upto = 2 if p.op == Op.VARIANCE else (3 if p.op == Op.SKEW else 4)
+            S = {1: total}
+            for pw in range(2, upto + 1):
+                s_t = _range_sum(filled(f"{pre}__pow{pw}"), ts_idx_s, ts_idx_e)
+                p_h = _prefix(hvals, pw)
+                S[pw] = s_t + (p_h[he] - p_h[hs])
+            with np.errstate(invalid="ignore", divide="ignore"):
+                mu = S[1] / n
+                m2 = np.maximum(S[2] / n - mu**2, 0.0)
+                if p.op == Op.VARIANCE:
+                    vals_out, bad = m2, n <= 0
+                elif p.op == Op.SKEW:
+                    m3 = S[3] / n - 3 * mu * S[2] / n + 2 * mu**3
+                    vals_out = m3 / np.power(m2, 1.5)
+                    bad = (n < 3) | (m2 <= 0)
                 else:
-                    out[fname] = _merge_order(p.op, p.k, tail_res, head_res)
-            elif p.op in _SET_OPS:
-                ecomp, evals = entries(f"{c}__set", "value")
-                es = np.searchsorted(ecomp, comp_w, side="left")
-                ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-                out[fname] = _distinct2(evals, es, ee, hcs.vals, hs, he)
-            elif p.op == Op.APPROX_PERCENTILE:
-                ecomp, evals, ewts = entries(f"{c}__qsk", "qsk")
-                es = np.searchsorted(ecomp, comp_w, side="left")
-                ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-                out[fname] = _qsk2(
-                    evals, ewts, es, ee, hcs.vals, hs, he, np.asarray(p.percentiles, np.float64)
-                )
-            else:  # histogram family
-                ecomp, evals, ewts = entries(f"{c}__hist", "hist")
-                es = np.searchsorted(ecomp, comp_w, side="left")
-                ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-                k = p.k if (p.k or p.op != Op.HISTOGRAM) else None
-                out[fname] = _hist2(evals, ewts, es, ee, hcs.vals, hs, he, k)
-        return kernel_output(lt, [out[f] for f in feat_names], arrow_schema)
-
-    out = cogroup_apply(l, union, left_keys, right_keys, coarse_buckets, out_schema, kernel)
-    return apply_derivations(out, gb.derivations)
+                    m4 = S[4] / n - 4 * mu * S[3] / n + 6 * mu**2 * S[2] / n - 3 * mu**4
+                    vals_out = m4 / (m2**2) - 3.0
+                    bad = (n < 4) | (m2 <= 0)
+            res = vals_out.astype(object)
+            res[bad | (n <= 0)] = None
+            out[fname] = res
+        elif p.op in (Op.MIN, Op.MAX):
+            take_min = p.op == Op.MIN
+            tcol = f"{pre}__{'min' if take_min else 'max'}"
+            tt, tv = valid_values(tile_rows.column(tcol).combine_chunks(), tcomp_all)
+            s2 = np.searchsorted(tt, comp_w, side="left")
+            e2 = np.maximum(np.searchsorted(tt, comp_h, side="left"), s2)
+            part_t = _range_minmax(tv, s2, e2, take_min)
+            part_h = _range_minmax(hcs.vals, hs, he, take_min)
+            out[fname] = _merge_minmax(part_t, part_h, take_min)
+        elif p.op in _ORDER_OPS or p.op in _EXTREME_OPS:
+            kind = "ts" if p.op in _ORDER_OPS else "value"
+            ecomp, evals = entries(f"{pre}__{_op_family(p.op)}", kind)
+            es = np.searchsorted(ecomp, comp_w, side="left")
+            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
+            # reuse the raw-path kernel on both sides, merge per op
+            kp = _as_k(p)
+            tail_res = _kernel(kp, _ColumnSeries(ecomp, evals), es, ee)
+            head_res = _kernel(kp, hcs, hs, he)
+            out[fname] = _merge_order_k(p, tail_res, head_res)
+        elif p.op in _SET_OPS:
+            ecomp, evals = entries(f"{pre}__set", "value")
+            es = np.searchsorted(ecomp, comp_w, side="left")
+            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
+            out[fname] = _distinct2(evals, es, ee, hcs.vals, hs, he)
+        elif p.op == Op.APPROX_PERCENTILE:
+            ecomp, evals, ewts = entries(f"{pre}__qsk", "qsk")
+            es = np.searchsorted(ecomp, comp_w, side="left")
+            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
+            out[fname] = _qsk2(
+                evals, ewts, es, ee, hcs.vals, hs, he, np.asarray(p.percentiles, np.float64)
+            )
+        else:  # histogram family
+            ecomp, evals, ewts = entries(f"{pre}__hist", "hist")
+            es = np.searchsorted(ecomp, comp_w, side="left")
+            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
+            k = p.k if (p.k or p.op != Op.HISTOGRAM) else None
+            out[fname] = _hist2(evals, ewts, es, ee, hcs.vals, hs, he, k)
+    return kernel_output(lt, [out[f] for f in feat_names], arrow_schema)
 
 
 def _distinct2(

@@ -70,6 +70,9 @@ def _gb_rich():
             Aggregation("n_chars", Op.SKEW, windows=("13d",)),
             Aggregation("n_chars", Op.KURTOSIS, windows=("13d",)),
             Aggregation("text", Op.LAST_K, windows=(None,), k=2),  # unbounded: collapsed-only
+            # unbounded FIRST_K: collapsed entries older than every tile row
+            # and query, which the kernel's composite layout must cover
+            Aggregation("text", Op.FIRST_K, windows=(None,), k=2),
             # quantile sketch IR — exact here (no slice reaches 512 values)
             Aggregation("n_chars", Op.APPROX_PERCENTILE, windows=("13d",), percentiles=(0.25, 0.5, 0.75)),
         ],
@@ -111,6 +114,10 @@ def test_fetch_key_with_no_batch_ir(spark, data):
     ev2 = pd.concat([ev, post], ignore_index=True)
     qn = q.head(20).copy()
     qn["conv_id"] = "brand_new_conv"
+    # a null-key query row: exactly one output row, null features (the
+    # backfill's cardinality invariant)
+    null_q = qn.head(1).assign(conv_id=None, query_id="null_key_query")
+    qn = pd.concat([qn, null_q], ignore_index=True)
     gb = _gb()
     events = spark.createDataFrame(ev2)
     queries = spark.createDataFrame(qn)
@@ -118,6 +125,62 @@ def test_fetch_key_with_no_batch_ir(spark, data):
     got = fetch_features(queries, irs, events, gb, BATCH_END_US).toPandas()
     want = asof_join(queries, events, gb).toPandas()
     assert_frames_allclose(got, want, sort_by=["query_id"])
+    null_rows = got[got["query_id"] == "null_key_query"]
+    assert len(null_rows) == 1
+    assert null_rows[[p.output_name for p in gb.parts()]].isna().all(axis=None)
+
+
+def test_fetch_exact_above_2_53(spark):
+    """Serving is exact above 2^53: a nullable BIGINT and a DECIMAL(18,0)
+    input keep an integral type through the IR partials and the merge, so
+    SUM/MIN/MAX/LAST equal the backfill to the unit. (Double IR partials
+    served SUM 18014398509481984 for ...988 and MAX/LAST 9007199254740992
+    for ...993.)"""
+    import datetime as dt
+    from decimal import Decimal
+
+    big = 2**53 + 1
+    h = 3_600_000_000
+    d = 24 * h
+    # (key, ts offset from batchEnd, value): one tail-hop event (-6d), one
+    # collapsed (-3d/-2d), a null and two streaming rows after batchEnd
+    rows = [
+        ("a", -6 * d, 1), ("a", -3 * d, big), ("a", h // 2, None), ("a", h, 1), ("a", 2 * h, big),
+        ("b", -6 * d, big + 2), ("b", -2 * d, big), ("b", h, None), ("b", 2 * h, big + 4),
+    ]
+
+    def at(off):
+        return dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=BATCH_END_US + off)
+
+    events = spark.createDataFrame(
+        [
+            (k, n, at(off), v, None if v is None else Decimal(v))
+            for n, (k, off, v) in enumerate(rows)
+        ],
+        "k string, seq int, ts timestamp, v bigint, dv decimal(18,0)",
+    )
+    queries = spark.createDataFrame(
+        [("a", "qa1", at(3 * h)), ("a", "qa2", at(h + h // 2)), ("b", "qb1", at(3 * h))],
+        "k string, query_id string, ts timestamp",
+    )
+    gb = GroupBy(
+        keys=["k"],
+        aggregations=[
+            Aggregation(c, op, windows=("7d",))
+            for c in ("v", "dv")
+            for op in (Op.SUM, Op.MIN, Op.MAX, Op.LAST)
+        ],
+        tie_breakers=["seq"],
+        sawtooth=True,
+    )
+    irs = build_batch_irs(events, gb, BATCH_END_US)
+    got = {r["query_id"]: r.asDict() for r in fetch_features(queries, irs, events, gb, BATCH_END_US).collect()}
+    want = {r["query_id"]: r.asDict() for r in asof_join(queries, events, gb).collect()}
+    assert got == want
+    for c in ("v", "dv"):
+        assert got["qa1"][f"{c}_sum_7d"] == 2 * big + 2 == 18014398509481988
+        assert got["qa1"][f"{c}_max_7d"] == got["qa1"][f"{c}_last_7d"] == big
+        assert got["qb1"][f"{c}_min_7d"] == big
 
 
 def test_fetch_before_batch_end_raises(spark, data):
