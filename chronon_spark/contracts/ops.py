@@ -554,7 +554,9 @@ def _q_entity_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     abelian reversal through the as-of kernel, PLUS the non-abelian state
     reads (windowed MIN, UNIQUE_COUNT, LAST_K) the reference's delete-based
     mutation path cannot express — computed by the instance-replay operator
-    (operators/mutations.py entity_state_replay_asof)."""
+    (operators/mutations.py entity_state_replay_asof), whose visible
+    instances are reduced by the as-of join's own kernel through the same
+    Arrow cogroup (no second aggregation kernel)."""
     from chronon_spark.operators.mutations import entity_state_asof, entity_state_replay_asof
     from chronon_spark.api import Aggregation as _Agg, Op as _Op
 
@@ -1945,15 +1947,10 @@ FROM events GROUP BY 1
 
 
 def _q_twostack_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TwoStackLite sliding aggregator (the reference's
-    aggregator/base/TwoStackLiteAggregationBuffer.scala) driven end-to-end:
-    per conversation, events stream through one amortized-O(1) two-stack
-    buffer per (column, window) and every user turn reads (count 1h,
-    sum 7d) — must equal the oracle's direct window computation."""
-    import pandas as pd
-
-    from chronon_spark.aggregators.twostack import compute_parts_twostack
-
+    """Trailing (count 1h, sum 7d) per user turn: the sliding windows the
+    reference serves with its TwoStackLite buffer
+    (aggregator/base/TwoStackLiteAggregationBuffer.scala), answered by the
+    as-of join's prefix-sum kernel."""
     t = _transcripts(spark, sf_dir)
     gb = GroupBy(
         keys=["conv_id"],
@@ -1963,25 +1960,12 @@ def _q_twostack_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         tie_breakers=["turn_idx"],
     )
-    parts = gb.parts()
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["tus", "turn_idx"], kind="stable")
-        vals = {
-            "turn_idx": pdf["turn_idx"].to_numpy("float64"),
-            "score": pdf["score"].to_numpy("float64"),
-        }
-        q = pdf[pdf["role"] == "user"]
-        res = compute_parts_twostack(
-            pdf["tus"].to_numpy("int64"), vals, parts, q["tus"].to_numpy("int64")
-        )
-        out = q[["conv_id", "turn_idx", "tus"]].copy()
-        out["n1h"] = res["turn_idx_count_1h"]
-        out["s7"] = [None if v is None else round(float(v), 3) for v in res["score_sum_7d"]]
-        return out
-
-    return t.select("conv_id", "turn_idx", "tus", "score", "role").groupBy("conv_id").applyInPandas(
-        fn, "conv_id string, turn_idx int, tus long, n1h long, s7 double"
+    return asof_join(_user_left(t), t, gb).select(
+        "conv_id",
+        "turn_idx",
+        "tus",
+        F.col("turn_idx_count_1h").alias("n1h"),
+        F.round("score_sum_7d", 3).alias("s7"),
     )
 
 

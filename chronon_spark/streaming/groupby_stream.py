@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from chronon_spark.api import GroupBy, Op
+from chronon_spark.api import Aggregation, GroupBy, Op
 from chronon_spark.resolution import smallest_tail_hop_millis
 
 
@@ -216,23 +216,30 @@ def stream_running_features(stream: DataFrame, gb: GroupBy, time_col: str = "ts"
     in_cols = sorted({p.input_column for p in parts})
     tie = list(gb.tie_breakers)
 
+    right_types = {f.name: f.dataType for f in stream.schema.fields}
+    # inputs whose SUM is BIGINT keep BIGINT state and int64 scans (exact
+    # above 2^53); Spark hands an integral column holding nulls over as
+    # float64, which stays inexact there
+    integral = {
+        c: isinstance(part_output_type(Aggregation(c, Op.SUM).parts()[0], right_types[c]), T.LongType)
+        for c in in_cols
+    }
     state_fields = []
     for c in in_cols:
+        st_type = T.LongType() if integral[c] else T.DoubleType()
         state_fields += [
             T.StructField(f"{c}__cnt", T.LongType()),
-            T.StructField(f"{c}__sm", T.DoubleType()),
-            T.StructField(f"{c}__mn", T.DoubleType()),
-            T.StructField(f"{c}__mx", T.DoubleType()),
+            T.StructField(f"{c}__sm", st_type),
+            T.StructField(f"{c}__mn", st_type),
+            T.StructField(f"{c}__mx", st_type),
         ]
     state_schema = T.StructType(state_fields)
-    right_types = {f.name: f.dataType for f in stream.schema.fields}
     feat_fields = [
         T.StructField(p.output_name, part_output_type(p, right_types[p.input_column]), True)
         for p in parts
     ]
     out_schema = T.StructType(list(stream.schema.fields) + feat_fields)
     in_names = [f.name for f in stream.schema.fields]
-    integral = [isinstance(part_output_type(p, right_types[p.input_column]), T.LongType) for p in parts]
 
     def fn(key, pdfs, state: GroupState):
         names = [f.name for f in state_fields]
@@ -256,48 +263,44 @@ def stream_running_features(stream: DataFrame, gb: GroupBy, time_col: str = "ts"
             idx = np.searchsorted(ts_arr, ts_arr, side="left")
             stats = {}
             for c in in_cols:
-                v = pd.to_numeric(pdf[c], errors="coerce").to_numpy("float64")
-                ok = ~np.isnan(v)
-                pc = np.concatenate([[0], np.cumsum(ok)])[idx]
-                ps = np.concatenate([[0.0], np.cumsum(np.where(ok, v, 0.0))])[idx]
-                pmn = np.concatenate([[np.inf], np.minimum.accumulate(np.where(ok, v, np.inf))])[idx]
-                pmx = np.concatenate([[-np.inf], np.maximum.accumulate(np.where(ok, v, -np.inf))])[idx]
+                if integral[c]:
+                    ok = pdf[c].notna().to_numpy()
+                    v = pdf[c].fillna(0).to_numpy().astype(np.int64)
+                    zero, top, bottom = 0, np.iinfo(np.int64).max, np.iinfo(np.int64).min
+                else:
+                    v = pd.to_numeric(pdf[c], errors="coerce").to_numpy("float64")
+                    ok = ~np.isnan(v)
+                    zero, top, bottom = 0.0, np.inf, -np.inf
+                py = int if integral[c] else float
                 s_cnt, s_sm = st[f"{c}__cnt"], st[f"{c}__sm"]
                 s_mn, s_mx = st[f"{c}__mn"], st[f"{c}__mx"]
+                pc, ps = np.cumsum(ok), np.cumsum(np.where(ok, v, zero))
+                pmn = np.minimum.accumulate(np.where(ok, v, top))
+                pmx = np.maximum.accumulate(np.where(ok, v, bottom))
                 stats[c] = (
-                    pc + s_cnt,
-                    ps + (s_sm or 0.0),
-                    np.minimum(pmn, s_mn if s_mn is not None else np.inf),
-                    np.maximum(pmx, s_mx if s_mx is not None else -np.inf),
+                    np.concatenate([[0], pc])[idx] + s_cnt,
+                    np.concatenate([[zero], ps])[idx] + (s_sm or zero),
+                    np.minimum(np.concatenate([[top], pmn])[idx], top if s_mn is None else s_mn),
+                    np.maximum(np.concatenate([[bottom], pmx])[idx], bottom if s_mx is None else s_mx),
                 )
-                st[f"{c}__cnt"] = int(s_cnt + ok.sum())
-                st[f"{c}__sm"] = float((s_sm or 0.0) + np.where(ok, v, 0.0).sum())
-                bmn = v[ok].min() if ok.any() else None
-                bmx = v[ok].max() if ok.any() else None
-                st[f"{c}__mn"] = bmn if s_mn is None else (s_mn if bmn is None else min(s_mn, bmn))
-                st[f"{c}__mx"] = bmx if s_mx is None else (s_mx if bmx is None else max(s_mx, bmx))
-            for i, p in enumerate(parts):
+                if pc[-1]:
+                    st[f"{c}__cnt"] = int(s_cnt + pc[-1])
+                    st[f"{c}__sm"] = py((s_sm or zero) + ps[-1])
+                    st[f"{c}__mn"] = py(pmn[-1] if s_mn is None else min(s_mn, pmn[-1]))
+                    st[f"{c}__mx"] = py(pmx[-1] if s_mx is None else max(s_mx, pmx[-1]))
+            for p in parts:
                 cnt, sm, mn, mx = stats[p.input_column]
+                py = int if integral[p.input_column] else float
                 if p.op == Op.COUNT:
-                    vals = [None if n <= 0 else int(n) for n in cnt]
-                elif p.op == Op.SUM:
-                    vals = [
-                        None if n <= 0 else (int(round(s)) if integral[i] else float(s))
-                        for n, s in zip(cnt, sm)
-                    ]
+                    vals, py = cnt, int
                 elif p.op == Op.AVERAGE:
-                    vals = [None if n <= 0 else float(s / n) for n, s in zip(cnt, sm)]
-                elif p.op == Op.MIN:
-                    vals = [
-                        None if not np.isfinite(m) else (int(round(m)) if integral[i] else float(m))
-                        for m in mn
-                    ]
+                    vals, py = sm / np.maximum(cnt, 1), float
                 else:
-                    vals = [
-                        None if not np.isfinite(m) else (int(round(m)) if integral[i] else float(m))
-                        for m in mx
-                    ]
-                out[p.output_name] = vals
+                    vals = {Op.SUM: sm, Op.MIN: mn, Op.MAX: mx}[p.op]
+                # object dtype: a list of ints and Nones would become float64
+                out[p.output_name] = pd.Series(
+                    [None if n <= 0 else py(x) for n, x in zip(cnt, vals)], index=out.index, dtype=object
+                )
             yield out
         state.update(tuple(st[n] for n in names))
 

@@ -84,7 +84,9 @@ def _eq(a, b):
     return abs(fa - fb) <= 1e-7 + 1e-7 * abs(fb)
 
 
-@pytest.mark.parametrize("include_equal,sawtooth", [(False, False), (True, False), (False, True)])
+@pytest.mark.parametrize(
+    "include_equal,sawtooth", [(False, False), (True, False), (False, True), (True, True)]
+)
 def test_multikey_equals_perkey_all_ops(include_equal, sawtooth):
     """Every op against the per-key brute-force replay
     (tests/oracle.naive_features)."""

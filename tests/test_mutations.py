@@ -370,3 +370,71 @@ def test_replay_orphan_before_image_closes_nothing(spark):
     # the control pairing still closes: b has no live state at t(40)
     assert out["b"]["balance_state_count"] is None
     assert out["b"]["balance_state_min"] is None
+
+
+@pytest.mark.parametrize("val_type", ["bigint", "decimal(18,0)"])
+def test_replay_integral_sum_exact_above_2_53(spark, val_type):
+    """An integral SUM is an exact BIGINT on the replay path: 2^53+1 plus 2
+    has no double representation (a float sum gives 9007199254740996)."""
+    from decimal import Decimal
+
+    from chronon_spark.api import Aggregation
+    from chronon_spark.operators.mutations import entity_state_replay_asof
+
+    big = 2**53 + 1
+    v = int if val_type == "bigint" else Decimal
+    mutations = spark.createDataFrame(
+        [("a", v(big), BASE + dt.timedelta(hours=1), False), ("a", v(2), BASE + dt.timedelta(hours=2), False)],
+        f"acct string, balance {val_type}, mutation_ts timestamp, is_before boolean",
+    )
+    snapshot = spark.createDataFrame([], f"acct string, balance {val_type}")
+    left = spark.createDataFrame([("a", BASE + dt.timedelta(hours=3))], "acct string, ts timestamp")
+    out = entity_state_replay_asof(
+        left, snapshot, mutations, ["acct"], "balance", "2024-01-01",
+        [Aggregation("balance", Op.SUM, windows=(None,))],
+    )
+    assert out.schema["balance_state_sum"].dataType == T.LongType()
+    assert out.collect()[0]["balance_state_sum"] == big + 2
+
+
+def test_replay_event_ts_col(spark):
+    """``event_ts_col`` set: windows and LAST order read each instance's
+    event ts (not its mutation ts), unbounded parts see instances whose
+    event ts is after the query, and a before-image closes the insert whose
+    event ts it carries, not the first insert of its value."""
+    from chronon_spark.api import Aggregation
+    from chronon_spark.operators.mutations import entity_state_replay_asof
+
+    t = lambda m: BASE + dt.timedelta(minutes=m)  # noqa: E731
+    # (value, mutation ts, is_before, event ts)
+    rows = [
+        (1.0, t(600), False, t(540)),
+        (2.0, t(570), False, t(570)),
+        (9.0, t(600), False, t(780)),  # event ts after the query
+        (3.0, t(540), False, t(675)),
+        (4.0, t(690), False, t(480)),
+        (7.0, t(540), False, t(540)),  # P
+        (7.0, t(550), False, t(550)),  # Q
+        (7.0, t(660), True, t(550)),  # closes Q, not P
+    ]
+    mutations = spark.createDataFrame(
+        [("a", *r) for r in rows],
+        "acct string, balance double, mutation_ts timestamp, is_before boolean, event_ts timestamp",
+    )
+    snapshot = spark.createDataFrame([], "acct string, balance double, event_ts timestamp")
+    left = spark.createDataFrame([("a", t(720))], "acct string, ts timestamp")
+    got = entity_state_replay_asof(
+        left, snapshot, mutations, ["acct"], "balance", "2024-01-01",
+        [
+            Aggregation("balance", Op.LAST_K, windows=(None,), k=3),
+            Aggregation("balance", Op.MIN, windows=("1h",)),
+            Aggregation("balance", Op.COUNT, windows=("175m",)),
+        ],
+        event_ts_col="event_ts",
+    ).collect()[0]
+    # visible at 12:00: every insert but Q; event-ts order 9 (13:00), 3 (11:15), 2 (09:30)
+    assert got["balance_state_last_k3"] == [9.0, 3.0, 2.0]
+    # event ts in [11:00, 12:00): only the 3.0 (the 4.0 was mutated at 11:30 but happened at 08:00)
+    assert got["balance_state_min_1h"] == 3.0
+    # event ts in [09:05, 12:00): 2.0 and 3.0; Q (09:10) is closed, P (09:00) is outside
+    assert got["balance_state_count_175m"] == 2

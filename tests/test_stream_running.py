@@ -134,3 +134,37 @@ def test_multi_chunk_arrow_batch_parity(spark, data, tmp_path_factory):
         _compare(spark, "t_run_chunks", _batch_expected(spark, data))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_integral_running_exact_above_2_53(spark, tmp_path_factory):
+    """SUM/MIN/MAX over a non-null BIGINT column above 2^53 equal the batch
+    as-of join exactly: 2^53+1 and 2^53+3 have no double representation."""
+    import pandas as pd
+
+    big = 2**53
+    ev = pd.DataFrame(
+        {
+            "conv_id": ["a"] * 4 + ["b"] * 3,
+            "turn_idx": [0, 1, 2, 3, 0, 1, 2],
+            "ts": pd.to_datetime(["2024-01-01 00:00"]).repeat(7)
+            + pd.to_timedelta([0, 1, 2, 3, 0, 5, 9], unit="min"),
+            "v": [big + 1, big + 3, 5, big + 7, -big - 1, big + 1, 2],
+        }
+    )
+    ev["ts"] = ev["ts"].astype("datetime64[us]")
+    gb = GroupBy(
+        keys=["conv_id"],
+        aggregations=[Aggregation("v", op, windows=(None,)) for op in (Op.SUM, Op.MIN, Op.MAX)],
+        tie_breakers=["turn_idx"],
+    )
+    d = str(tmp_path_factory.mktemp("run_big"))
+    spark.createDataFrame(ev).write.parquet(f"{d}/all")
+    schema = spark.read.parquet(f"{d}/all").schema
+    stream = spark.readStream.schema(schema).option("recursiveFileLookup", "true").parquet(d)
+    _drain(stream_running_features(stream, gb), "t_run_big")
+    cols = ["v_sum", "v_min", "v_max"]
+    t = spark.read.parquet(f"{d}/all")
+    want = {(r.conv_id, r.turn_idx): [r[c] for c in cols] for r in asof_join(t, t, gb).collect()}
+    got = {(r.conv_id, r.turn_idx): [r[c] for c in cols] for r in spark.table("t_run_big").collect()}
+    assert got == want
+    assert want[("a", 3)] == [2 * big + 9, 5, big + 3]
