@@ -69,6 +69,7 @@ def run_staging_query(
     missing (the reference's unfilledRanges / skipFirstHole contract).
     """
     from chronon_spark.plans.manifest import unfilled_partitions
+    from chronon_spark.plans.table_lifecycle import rebalanced
 
     for s in setups or []:
         spark.sql(s)
@@ -87,7 +88,9 @@ def run_staging_query(
         df: DataFrame = spark.sql(rendered)
         if "ds" not in df.columns:
             raise ValueError("StagingQuery output must include a 'ds' column")
-        df.write.mode("overwrite").partitionBy("ds").parquet(os.path.join(out_path, step_key))
+        rebalanced(df, "ds").write.mode("overwrite").partitionBy("ds").parquet(
+            os.path.join(out_path, step_key)
+        )
         n = spark.read.parquet(os.path.join(out_path, step_key)).count()
         rows += n
         manifest = {

@@ -47,10 +47,20 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 META_FILE = "_table_meta.json"
 SNAPSHOTS_FILE = "_snapshots.json"
+
+
+def rebalanced(df: DataFrame, partition_col: str) -> DataFrame:
+    """``df`` shuffled so each partition value lands in one write task
+    (reference TableUtils.scala:373-400 repartitions before it writes). A
+    partitioned write straight out of an N-task stage opens N files per
+    value; with the hint AQE writes one file per value and splits a value
+    larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` across
+    tasks, so an oversize partition is never funnelled into one file."""
+    return df.hint("rebalance", partition_col)
 
 
 class SchemaEvolutionError(ValueError):
@@ -223,15 +233,16 @@ class ManagedTable:
         # commit dirs and the staged files move live. A crash mid-write
         # leaves every live partition untouched (the old single-job
         # retire-first order left all touched partitions empty-live on
-        # failure). The incoming partition list is a metadata-sized collect
-        # (calendar-bounded) needed for commit bookkeeping.
+        # failure).
         live_map = self._live_commit_map()
         version = self.current_version() + 1
         tmp_dir = os.path.join(self.path, "._insert_tmp")
         import shutil
 
         try:
-            out.write.mode("overwrite").partitionBy(self.partition_col).parquet(tmp_dir)
+            rebalanced(out, self.partition_col).write.mode("overwrite").partitionBy(
+                self.partition_col
+            ).parquet(tmp_dir)
             # commit what Spark ACTUALLY wrote: staged dir names carry
             # Spark's own partition-value escaping (null ->
             # __HIVE_DEFAULT_PARTITION__, ':' -> %3A, ...) and are reused
@@ -544,19 +555,34 @@ class CatalogTable:
             if stored is not None and stored != semantic_hash:
                 report["archived"] = self.archive()
 
-        parts = [str(r[0]) for r in df.select(self.partition_col).distinct().collect()]
+        # the written partition values come from the write itself: a
+        # separate distinct() collect would run df's whole plan (a
+        # backfill's as-of join) a second time. The observation is the last
+        # node before the write: below a shuffle, AQE can prune it when the
+        # input turns out empty and no metrics arrive. Wrapping each value in
+        # an array keeps a NULL partition value in the set.
+        obs = Observation()
+
+        def observed(out: DataFrame) -> DataFrame:
+            return out.observe(obs, F.collect_set(F.array(self.partition_col)).alias("parts"))
+
+        def written() -> list[str]:
+            return sorted(str(v[0]) for v in obs.get["parts"])
 
         if not self.exists():
             # partition column stays last (reference colOrder)
             non_part = [c for c in df.columns if c != self.partition_col]
             out = df.select(*non_part, self.partition_col)
-            w = out.writeTo(self._ident).using(self.format).partitionedBy(F.col(self.partition_col))
+            if not self._v2:
+                out = rebalanced(out, self.partition_col)
+            w = observed(out).writeTo(self._ident).using(self.format)
+            w = w.partitionedBy(F.col(self.partition_col))
             w = w.tableProperty(_HASH_PROP, semantic_hash or "")
             for k, v in (properties or {}).items():
                 w = w.tableProperty(str(k), str(v))
             w.create()
             report["created"] = True
-            report["partitions_written"] = sorted(parts)
+            report["partitions_written"] = written()
             return report
 
         table_fields = {f.name: f.dataType for f in self.schema().fields}
@@ -588,7 +614,8 @@ class CatalogTable:
 
         out = self._align(df)
         if self._v2:
-            out.writeTo(self._ident).overwritePartitions()
+            # the V2 table owns its write distribution: no rebalance
+            observed(out).writeTo(self._ident).overwritePartitions()
         else:
             # V1 path: dynamic partition overwrite via insertInto. The
             # per-write `option("partitionOverwriteMode", ...)` is NOT
@@ -604,10 +631,12 @@ class CatalogTable:
             prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
             conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             try:
-                out.write.mode("overwrite").insertInto(self._ident)
+                observed(rebalanced(out, self.partition_col)).write.mode(
+                    "overwrite"
+                ).insertInto(self._ident)
             finally:
                 conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        report["partitions_written"] = sorted(parts)
+        report["partitions_written"] = written()
         return report
 
     def read(self, version: int | None = None) -> DataFrame:

@@ -32,9 +32,15 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(max(sp, cores * 4)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE's byte-targeted coalescing collapses Python-kernel stages to
-        # ~1 task/core (the work is CPU-bound, not byte-bound) — the stage
-        # then waits on its slowest task. Keep >=4 waves for load balance.
+        # Asks AQE's coalescing for >= 4 waves, but only binds above
+        # cores*4 MB of shuffle (16 MB on 4 cores): AQE's coalescing target
+        # never drops below coalescePartitions.minPartitionSize (1 MB), and
+        # that floor wins on a smaller shuffle. So the 200k-turn benchmark's
+        # cogroup runs 5 tasks on 4 cores. More tasks would not pay there:
+        # each Python-UDF task carries ~0.22 s of fixed cost (a 10-row
+        # mapInArrow task on a warm, reused worker took 210-260 ms from
+        # launch to its first batch on a 4-core host), and 15 cogroup tasks
+        # ran the stage in 1.44 s against 0.78 s for 5.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", str(cores * 4))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

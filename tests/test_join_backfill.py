@@ -287,3 +287,52 @@ def test_step_days_chunking_equality_and_resume(spark, paths):
         c[cols].sort_values("query_id").reset_index(drop=True),
         check_like=True,
     )
+
+
+def test_range_backfill_writes_one_file_per_ds(spark, tmp_path):
+    """A range job rebalances its output by ds before the write: each ds is
+    one parquet file, not one per cogroup task, and the rows equal a
+    per-day run. The AQE coalescing floor is lowered so this small input's
+    cogroup runs several tasks, as a larger input's does."""
+    import os
+
+    import pandas as pd
+
+    ev = synth_transcripts(n_rows=1500, n_convs=15)
+    q = synth_queries(ev, n_queries=300)
+    q = q[q["ds"].isin(sorted(q["ds"].unique())[:3])]
+    ev_p, q_p = str(tmp_path / "ev.parquet"), str(tmp_path / "q.parquet")
+    ev.to_parquet(ev_p, index=False)
+    q.to_parquet(q_p, index=False)
+    gb = GroupBy(
+        keys=["conv_id"],
+        aggregations=[Aggregation("n_chars", Op.SUM, windows=("1d",))],
+        tie_breakers=["turn_idx"],
+    )
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        ranged = run_partitioned_backfill(
+            spark, ev_p, q_p, str(tmp_path / "out"), str(tmp_path / "ckpt"), gb=gb
+        )
+        per_day = run_partitioned_backfill(
+            spark, ev_p, q_p, str(tmp_path / "out_d1"), str(tmp_path / "ckpt_d1"), gb=gb,
+            step_days=1,
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert ranged["partitions_computed"] == 3 and ranged["ranges_computed"] == 1
+    assert per_day["ranges_computed"] == 3
+    parts = sorted(d for d in os.listdir(tmp_path / "out") if d.startswith("ds="))
+    assert len(parts) == 3
+    for d in parts:
+        files = [f for f in os.listdir(tmp_path / "out" / d) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    a = spark.read.parquet(str(tmp_path / "out")).toPandas()
+    b = spark.read.parquet(str(tmp_path / "out_d1")).toPandas()
+    cols = sorted(a.columns)
+    pd.testing.assert_frame_equal(
+        a[cols].sort_values("query_id").reset_index(drop=True),
+        b[cols].sort_values("query_id").reset_index(drop=True),
+    )

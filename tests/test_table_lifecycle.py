@@ -207,8 +207,16 @@ def test_expire_snapshots(spark, tmp_path):
 
 def test_compaction(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "t"))
-    df = _df(spark, [("k%d" % i, i, "2024-01-01") for i in range(40)]).repartition(8)
-    t.insert_partitions(df)
+    df = _df(spark, [("k%d" % i, i, "2024-01-01") for i in range(40)])
+    # the insert rebalances by ds into one file; cap the rows per file so
+    # the partition lands fragmented, as a drip of small writes leaves it
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        t.insert_partitions(df)
+    finally:
+        spark.conf.set(key, old)
     part = str(tmp_path / "t" / "ds=2024-01-01")
     n_before = len([f for f in os.listdir(part) if f.endswith(".parquet")])
     assert n_before >= 8
@@ -221,6 +229,51 @@ def test_compaction(spark, tmp_path):
     assert {r["v"] for r in t.read(version=1).collect()} == set(range(40))
     # idempotent: second compact is a no-op commit-wise
     assert t.compact(target_file_bytes=10**9)["partitions_compacted"] == []
+
+
+def test_insert_runs_input_once(spark, make_table):
+    """The written partition list comes from the write itself, so an insert
+    evaluates its input once per row, on create and on overwrite. A separate
+    partition-list query would run a backfill's whole as-of join twice. An
+    empty insert writes and reports nothing."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def day(i):
+        calls.add(1)
+        return f"2024-01-0{i % 3 + 1}"
+
+    t = make_table()
+    for n in (100, 60):  # create, then a dynamic overwrite of every ds
+        calls.value = 0
+        df = spark.range(n).select(F.lit("k").alias("k"), F.col("id").alias("v"), day("id").alias("ds"))
+        rep = t.insert_partitions(df)
+        assert calls.value == n
+        assert rep["partitions_written"] == ["2024-01-01", "2024-01-02", "2024-01-03"]
+        assert t.read().count() == n
+    rep = t.insert_partitions(_df(spark, []))
+    assert rep["partitions_written"] == []
+    assert t.read().count() == 60
+
+
+def test_oversize_partition_written_as_several_files(spark, tmp_path):
+    """The rebalance before the write puts a ds in one task only up to the
+    AQE advisory partition size: a larger ds is split across tasks, never
+    funnelled into one file, and every row reads back."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    n = 200_000
+    df = spark.range(n).select(F.lit("k").alias("k"), F.col("id").alias("v"), F.lit("2024-01-01").alias("ds"))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        t.insert_partitions(df)
+    finally:
+        spark.conf.set(key, old)
+    part = tmp_path / "t" / "ds=2024-01-01"
+    assert len([f for f in os.listdir(part) if f.endswith(".parquet")]) >= 2
+    got = t.read().agg(F.count("*").alias("n"), F.sum("v").alias("s")).first()
+    assert (got["n"], got["s"]) == (n, n * (n - 1) // 2)
 
 
 def test_catalog_hashless_create_then_hashed_write_no_archive(spark):
