@@ -30,6 +30,14 @@ percentiles. Total work stays O(sum of window sizes · log), but it is one
 numpy pass instead of Q python-level loop iterations; `_GATHER_BUDGET`
 chunks the queries so the flat gather stays memory-bounded (and tiles bound
 window sizes at scale).
+
+Results are typed Arrow on the way out, as the inputs are on the way in:
+every kernel returns a ``pa.Array`` of its part's output type. Scalars are
+numpy values plus a mask, lists (``_lists``) and maps (``_maps``,
+``group_map``) are built from the range lengths as offsets, and list values
+are taken from the column's Arrow values by index, never boxed into Python
+objects. A NaN in a float result is left to ``nan_to_null``, which
+``asof_join.kernel_output`` applies once per feature column.
 """
 
 from __future__ import annotations
@@ -49,22 +57,51 @@ _US_D = 86_400_000_000  # one day in micros — the largest hop size
 COMPOSITE_LIMIT = 2**62
 
 
-def _is_integral(arr: np.ndarray) -> bool:
-    return arr.dtype.kind in ("i", "u", "b")
+def _is_integral(t: pa.DataType) -> bool:
+    return pa.types.is_integer(t) or pa.types.is_boolean(t)
 
 
 class _ColumnSeries:
     """Non-null, ts-sorted values of one input column (arrays auto-exploded).
 
-    ``ts`` is int64 epoch-micros; ``vals`` the matching values. Built once per
-    (key-group, column), shared across all windows/ops on that column.
+    ``ts`` is int64 epoch-micros (composite); ``values`` the matching
+    ``pa.Array``. ``vals``, its numpy image, is read only by the ops that
+    compute on values, so FIRST/LAST(_K) over a string column never build
+    Python strings: they take from ``values``. Built once per (key-group,
+    column), shared across all windows/ops on that column.
     """
 
-    __slots__ = ("ts", "vals")
+    __slots__ = ("ts", "_values", "_vals", "_src", "_idx")
 
-    def __init__(self, ts: np.ndarray, vals: np.ndarray):
+    def __init__(self, ts: np.ndarray, values: pa.Array | None):
         self.ts = ts
-        self.vals = vals
+        self._values = values
+        self._vals = None
+        self._src: _ColumnSeries | None = None
+        self._idx = None
+
+    def take(self, idx: np.ndarray) -> _ColumnSeries:
+        """The entries at ``idx``; their values are gathered when first read,
+        numpy ones from this series' numpy image."""
+        out = _ColumnSeries(self.ts[idx], None)
+        out._src, out._idx = self, idx
+        return out
+
+    @property
+    def type(self) -> pa.DataType:
+        return self._src.type if self._values is None else self._values.type
+
+    @property
+    def values(self) -> pa.Array:
+        if self._values is None:
+            self._values = self._src.values.take(self._idx)
+        return self._values
+
+    @property
+    def vals(self) -> np.ndarray:
+        if self._vals is None:
+            self._vals = _numpy(self._values) if self._src is None else self._src.vals[self._idx]
+        return self._vals
 
     def bounds(self, q_starts: np.ndarray, q_ends_ts: np.ndarray, side: str) -> tuple[np.ndarray, np.ndarray]:
         """Map query windows to index ranges [s, e) into this column's arrays."""
@@ -121,10 +158,10 @@ class MultiKeyEventColumns:
             arr, comp = self._take(name), self.comp
             if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
                 arr, comp = _explode(arr, comp)
-            self._cols[name] = _ColumnSeries(*valid_values(arr, comp))
+            self._cols[name] = valid_series(arr, comp)
         return self._cols[name]
 
-    def pair(self, name: str, bucket: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    def pair(self, name: str, bucket: str) -> tuple[np.ndarray, np.ndarray, pa.Array]:
         """(comp, bucket_strs, vals) where BOTH value and bucket are non-null,
         in composite-ts order — the bucketed ``_grouped_kernel`` input. The
         per-bucket kernels are range-local like everything else, so grouping
@@ -133,9 +170,9 @@ class MultiKeyEventColumns:
         col, bk = self._take(name), self._take(bucket)
         mask = _is_valid(col) & _is_valid(bk)
         keep = pa.array(mask)
-        return self.comp[mask], _numpy(bk.filter(keep).cast(pa.string())), _numpy(col.filter(keep))
+        return self.comp[mask], _numpy(bk.filter(keep).cast(pa.string())), col.filter(keep)
 
-    def map_entries(self, name: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    def map_entries(self, name: str) -> tuple[np.ndarray, np.ndarray, pa.Array]:
         """(comp_repeated, map_keys, vals) of every non-null map entry, in
         composite-ts order — the per-map-key ``_grouped_kernel`` input
         (reference: row/MapColumnAggregator.scala, output Map[key -> agg])."""
@@ -143,7 +180,7 @@ class MultiKeyEventColumns:
         keys, vals = entries.field(0), entries.field(1)
         mask = _is_valid(vals)
         keep = pa.array(mask)
-        return comp[mask], _numpy(keys.filter(keep).cast(pa.string())), _numpy(vals.filter(keep))
+        return comp[mask], _numpy(keys.filter(keep).cast(pa.string())), vals.filter(keep)
 
 
 def _numpy(arr) -> np.ndarray:
@@ -157,12 +194,12 @@ def _is_valid(arr: pa.Array) -> np.ndarray:
     return _numpy(arr.is_valid())
 
 
-def valid_values(arr: pa.Array, comp: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(comp, values) of the non-null entries of ``arr``, read from its
+def valid_series(arr: pa.Array, comp: np.ndarray) -> _ColumnSeries:
+    """The non-null entries of ``arr`` at their composite ts, read from its
     validity bitmap."""
     if arr.null_count:
         comp, arr = comp[_is_valid(arr)], arr.drop_null()
-    return comp, _numpy(arr)
+    return _ColumnSeries(comp, arr)
 
 
 def _explode(arr: pa.Array, comp: np.ndarray) -> tuple[pa.Array, np.ndarray]:
@@ -193,14 +230,15 @@ def compute_parts_multikey(
     q_ts: np.ndarray,
     include_equal: bool = False,
     sawtooth: bool = False,
-) -> dict[str, np.ndarray]:
+) -> dict[str, pa.Array]:
     """Compute every AggregationPart for Q query timestamps (int64 micros)
     over MANY keys at once: queries carry their key code (< 0: null key,
     empty windows); window ranges are resolved in composite space.
-    Returns {output_name: object ndarray of length Q}. Bucketed and map-typed
-    parts run through ``_grouped_kernel`` on composite coordinates — the
-    group slicing is per (bucket|map key) across ALL entity keys, and each
-    query's range stays inside its key's segment."""
+    Returns {output_name: ``pa.Array`` of length Q, typed as the part's
+    output}. Bucketed and map-typed parts run through ``_grouped_kernel`` on
+    composite coordinates — the group slicing is per (bucket|map key) across
+    ALL entity keys, and each query's range stays inside its key's
+    segment."""
     side = "right" if include_equal else "left"
     kc = q_key_codes.astype(np.int64)
     rel_q = q_ts - mec.base
@@ -209,7 +247,7 @@ def compute_parts_multikey(
     nullkey = kc < 0
     if nullkey.any():
         comp_q = np.where(nullkey, np.int64(-1), comp_q)
-    out: dict[str, np.ndarray] = {}
+    out: dict[str, pa.Array] = {}
     for part in parts:
         w_us = None if part.window.millis is None else part.window.millis * 1000
         if w_us is None:
@@ -249,19 +287,58 @@ def _flat_ranges(starts: np.ndarray, ends: np.ndarray) -> tuple[np.ndarray, np.n
     return flat, lens
 
 
-def _split_lists(flat_vals: np.ndarray, lens: np.ndarray, empty_is_null: bool = True) -> list:
-    # python-list slicing: np.split builds one ndarray view per query (200k
-    # allocations on a hot key) — ~10x slower than slicing one materialized list
-    if not len(lens):
-        return []
-    flat = flat_vals.tolist()
-    out = []
-    pos = 0
-    for n in lens.tolist():
-        nxt = pos + n
-        out.append(None if (empty_is_null and n == 0) else flat[pos:nxt])
-        pos = nxt
+def _offsets(lens: np.ndarray) -> np.ndarray:
+    out = np.zeros(len(lens) + 1, np.int32)
+    np.cumsum(lens, out=out[1:])
     return out
+
+
+def _lists(lens: np.ndarray, values: pa.Array, null: np.ndarray) -> pa.Array:
+    """One list per query: consecutive runs of ``values``, ``lens[i]`` long
+    for query i; NULL where ``null``."""
+    return pa.ListArray.from_arrays(pa.array(_offsets(lens)), values, mask=pa.array(null, pa.bool_()))
+
+
+def _maps(lens: np.ndarray, keys: pa.Array, items: pa.Array, null: np.ndarray) -> pa.Array:
+    """One map per query from consecutive runs of (key, item) entries; a
+    NULL map (``null``, always zero entries) takes a null offset, as
+    ``MapArray`` has no mask."""
+    offsets = pa.array(_offsets(lens), mask=np.append(null, False))
+    return pa.MapArray.from_arrays(offsets, keys, items)
+
+
+def group_map(n_rows: int, groups: np.ndarray, per_group: list[pa.Array]) -> pa.Array:
+    """Map[group -> value] per query from one kernel result per group:
+    each group's non-null values, keys in ``groups`` order (first
+    appearance); NULL where no group has a value."""
+    hits = [np.flatnonzero(_is_valid(v)) for v in per_group]
+    q_idx = np.concatenate(hits)
+    order = np.argsort(q_idx, kind="stable")
+    g_idx = np.repeat(np.arange(len(hits)), [len(h) for h in hits])[order]
+    items = pa.concat_arrays([v.take(h) for v, h in zip(per_group, hits)]).take(order)
+    lens = np.bincount(q_idx, minlength=n_rows)
+    return _maps(lens, pa.array(np.asarray(groups)[g_idx], pa.string()), items, lens == 0)
+
+
+def nan_to_null(arr: pa.Array) -> pa.Array:
+    """The engine's NaN rule: a NaN in a float output reads NULL, at any
+    depth of a list or map (Spark's pandas conversion did the same)."""
+    t = arr.type
+    if pa.types.is_floating(t):
+        nan = pc.is_nan(arr)
+        return pc.if_else(nan, pa.scalar(None, t), arr) if pc.any(nan).as_py() else arr
+    if pa.types.is_map(t):
+        items = nan_to_null(arr.items)
+        if items is arr.items:
+            return arr
+        child = pa.StructArray.from_arrays([arr.keys, items], fields=[t.key_field, t.item_field])
+    elif pa.types.is_list(t):
+        child = nan_to_null(arr.values)
+        if child is arr.values:
+            return arr
+    else:
+        return arr
+    return pa.Array.from_buffers(t, len(arr), arr.buffers()[:2], arr.null_count, arr.offset, [child])
 
 
 def _prefix(vals: np.ndarray, power: int = 1, shift: float = 0.0) -> np.ndarray:
@@ -272,6 +349,12 @@ def _prefix(vals: np.ndarray, power: int = 1, shift: float = 0.0) -> np.ndarray:
     out[0] = 0.0
     np.cumsum(v, out=out[1:])
     return out
+
+
+def int_range_sum(vals: np.ndarray, s: np.ndarray, e: np.ndarray) -> np.ndarray:
+    """Exact int64 sums of ``vals`` over each range [s, e)."""
+    p = np.concatenate(([0], np.cumsum(vals.astype(np.int64))))
+    return p[e] - p[s]
 
 
 def _sparse_table(vals: np.ndarray, take_min: bool) -> list[np.ndarray]:
@@ -286,15 +369,16 @@ def _sparse_table(vals: np.ndarray, take_min: bool) -> list[np.ndarray]:
     return tables
 
 
-def _sparse_query(tables: list[np.ndarray], s: np.ndarray, e: np.ndarray, take_min: bool) -> np.ndarray:
-    out = np.empty(len(s), object)
+def range_extreme(vals: np.ndarray, s: np.ndarray, e: np.ndarray, take_min: bool) -> np.ndarray:
+    """MIN or MAX of ``vals`` over each range [s, e), by sparse table; an
+    empty range's slot holds an arbitrary value (the caller masks it)."""
+    tables = _sparse_table(vals, take_min)
     n = e - s
-    out[n <= 0] = None
-    if not len(tables) or not len(tables[0]):
-        out[:] = None
+    out = np.zeros(len(s), vals.dtype)
+    pos = n > 0
+    if not pos.any():
         return out
     j = np.zeros(len(s), np.int64)
-    pos = n > 0
     j[pos] = np.floor(np.log2(n[pos])).astype(np.int64)
     for jj in np.unique(j[pos]):
         m = pos & (j == jj)
@@ -329,135 +413,144 @@ def _moments(cs: _ColumnSeries, s: np.ndarray, e: np.ndarray, upto: int):
     return res
 
 
-def _masked(vals: np.ndarray, null_mask: np.ndarray) -> np.ndarray:
-    out = vals.astype(object)
-    out[null_mask] = None
-    return out
-
-
-def _kernel(part: AggregationPart, cs: _ColumnSeries, s: np.ndarray, e: np.ndarray):
-    """Compute one AggregationPart over index ranges; returns object ndarray/list."""
+def _kernel(part: AggregationPart, cs: _ColumnSeries, s: np.ndarray, e: np.ndarray) -> pa.Array:
+    """Compute one AggregationPart over index ranges [s, e) of ``cs``: a
+    ``pa.Array`` of the part's output type, NULL for an empty range (and
+    where the op has no value, e.g. SKEW under 3 values). Scalars are typed
+    values plus a mask; lists and maps take their offsets from the range
+    lengths and their values from ``cs.values`` by index."""
     op = part.op
     n = e - s
     empty = n <= 0
-    if op in (Op.COUNT,):
-        return _masked(n.astype(np.int64), empty)
+    if op == Op.COUNT:
+        return pa.array(n.astype(np.int64), mask=empty)
     if op == Op.SUM:
-        if _is_integral(cs.vals):
-            p = np.concatenate(([0], np.cumsum(cs.vals.astype(np.int64))))
-            return _masked(p[e] - p[s], empty)
+        if _is_integral(cs.type):
+            return pa.array(int_range_sum(cs.vals, s, e), pa.int64(), mask=empty)
         p = _prefix(cs.vals)
-        return _masked(p[e] - p[s], empty)
+        return pa.array(p[e] - p[s], pa.float64(), mask=empty)
     if op == Op.AVERAGE:
         p = _prefix(cs.vals)
         with np.errstate(invalid="ignore"):
-            return _masked(np.divide(p[e] - p[s], n, out=np.full(len(n), np.nan), where=n > 0), empty)
+            avg = np.divide(p[e] - p[s], n, out=np.full(len(n), np.nan), where=n > 0)
+        return pa.array(avg, pa.float64(), mask=empty)
     if op in (Op.MIN, Op.MAX):
-        tables = _sparse_table(cs.vals, op == Op.MIN)
-        return _sparse_query(tables, s, e, op == Op.MIN)
+        return pa.array(range_extreme(cs.vals, s, e, op == Op.MIN), cs.type, mask=empty)
     if op == Op.VARIANCE:
         mo = _moments(cs, s, e, 2)
-        return _masked(mo["m2"], empty)
+        return pa.array(mo["m2"], pa.float64(), mask=empty)
     if op == Op.SKEW:
         mo = _moments(cs, s, e, 3)
         with np.errstate(invalid="ignore", divide="ignore"):
             g1 = mo["m3"] / np.power(mo["m2"], 1.5)
-        return _masked(g1, empty | (n < 3) | (mo["m2"] <= 0))
+        return pa.array(g1, pa.float64(), mask=empty | (n < 3) | (mo["m2"] <= 0))
     if op == Op.KURTOSIS:
         mo = _moments(cs, s, e, 4)
         with np.errstate(invalid="ignore", divide="ignore"):
             g2 = mo["m4"] / (mo["m2"] ** 2) - 3.0
-        return _masked(g2, empty | (n < 4) | (mo["m2"] <= 0))
-    if op == Op.FIRST:
-        idx = np.minimum(s, len(cs.vals) - 1) if len(cs.vals) else s
-        return _masked(cs.vals[idx] if len(cs.vals) else np.empty(len(s), object), empty)
-    if op == Op.LAST:
-        idx = np.maximum(e - 1, 0)
-        return _masked(cs.vals[idx] if len(cs.vals) else np.empty(len(s), object), empty)
+        return pa.array(g2, pa.float64(), mask=empty | (n < 4) | (mo["m2"] <= 0))
+    if op in (Op.FIRST, Op.LAST):
+        idx = s if op == Op.FIRST else e - 1
+        idx = np.clip(idx, 0, max(len(cs.ts) - 1, 0))
+        return cs.values.take(pa.array(idx, mask=empty))
     if op == Op.FIRST_K:
         flat, lens = _flat_ranges(s, np.minimum(e, s + part.k))
-        return _split_lists(cs.vals[flat], lens)
+        return _lists(lens, cs.values.take(flat), empty)
     if op == Op.LAST_K:
         # most-recent-first: gather e-1, e-2, ... down to max(s, e-k)
-        starts = np.maximum(s, e - part.k)
-        lens = (e - starts).astype(np.int64)
-        total = int(lens.sum())
-        if total:
-            offs = np.repeat(np.cumsum(lens) - lens, lens)
-            flat = np.repeat(e - 1, lens) - (np.arange(total, dtype=np.int64) - offs)
-            return _split_lists(cs.vals[flat], lens)
-        return _split_lists(np.empty(0, object), lens)
+        lens = (e - np.maximum(s, e - part.k)).astype(np.int64)
+        offs = np.repeat(np.cumsum(lens) - lens, lens)
+        flat = np.repeat(e - 1, lens) - (np.arange(int(lens.sum()), dtype=np.int64) - offs)
+        return _lists(lens, cs.values.take(flat), empty)
     if op == Op.UNIQUE_COUNT or op == Op.APPROX_UNIQUE_COUNT:
-        out = np.empty(len(s), object)
+        cnt = np.zeros(len(s), np.int64)
         for lo, hi in _query_chunks(n):
-            seg, lens, vals = _gather_sorted(cs.vals, s[lo:hi], e[lo:hi])
-            runs = _run_starts(seg, vals)
-            cnt = np.bincount(seg[runs], minlength=hi - lo)
-            out[lo:hi] = _masked(cnt.astype(np.int64), lens <= 0)
-        return out
-    if op in (Op.TOP_K, Op.BOTTOM_K):
-        out = np.empty(len(s), object)
+            seg, _, vals, _ = _gather_sorted(cs.vals, s[lo:hi], e[lo:hi])
+            cnt[lo:hi] = np.bincount(seg[_run_starts(seg, vals)], minlength=hi - lo)
+        return pa.array(cnt, mask=empty)
+    if op in (Op.TOP_K, Op.BOTTOM_K, Op.UNIQUE_TOP_K):
+        # per chunk: the sorted positions to keep, as indices into cs
+        klens, picks = [], []
         for lo, hi in _query_chunks(n):
-            seg, lens, vals = _gather_sorted(cs.vals, s[lo:hi], e[lo:hi])
+            seg, lens, vals, src = _gather_sorted(cs.vals, s[lo:hi], e[lo:hi])
+            if op == Op.UNIQUE_TOP_K:  # distinct values, ascending per seg
+                runs = _run_starts(seg, vals)
+                seg, src = seg[runs], src[runs]
+                lens = np.bincount(seg, minlength=hi - lo).astype(np.int64)
             off = np.cumsum(lens) - lens
             if op == Op.BOTTOM_K:
-                flat, klens = _flat_ranges(off, off + np.minimum(lens, part.k))
-                out[lo:hi] = _obj_array(_split_lists(vals[flat] if len(vals) else vals, klens))
+                idx, kl = _flat_ranges(off, off + np.minimum(lens, part.k))
             else:
-                out[lo:hi] = _tail_desc(vals, off, lens, part.k)
-        return out
+                idx, kl = _tail_desc(off, lens, part.k)
+            klens.append(kl)
+            picks.append(src[idx])
+        return _lists(np.concatenate(klens), cs.values.take(np.concatenate(picks)), empty)
     if op in (Op.HISTOGRAM, Op.APPROX_FREQUENT_K, Op.APPROX_HEAVY_HITTERS_K):
-        out = np.empty(len(s), object)
         # HISTOGRAM truncates to the k most frequent when k is set (reference
         # finalize-time truncation, SimpleAggregators.scala:303-322);
         # APPROX_FREQUENT_K always keeps k (ItemsSketch is exact at this
         # state size — NO_FALSE_NEGATIVES at fixture scale)
         k = part.k if (part.k or op != Op.HISTOGRAM) else None
         svals = cs.vals.astype(str)
+        runs_seg, runs_val, runs_cnt = [], [], []
         for lo, hi in _query_chunks(n):
-            seg, lens, vals = _gather_sorted(svals, s[lo:hi], e[lo:hi])
+            seg, _, vals, _ = _gather_sorted(svals, s[lo:hi], e[lo:hi])
             runs = _run_starts(seg, vals)
-            run_seg, run_val = seg[runs], vals[runs]
-            bounds = np.concatenate([np.flatnonzero(runs), [len(seg)]])
-            run_cnt = np.diff(bounds).astype(np.int64)
-            out[lo:hi] = hist_finalize(run_seg, run_val, run_cnt, hi - lo, k, lens <= 0)
-        return out
-    if op == Op.UNIQUE_TOP_K:
-        out = np.empty(len(s), object)
-        for lo, hi in _query_chunks(n):
-            seg, lens, vals = _gather_sorted(cs.vals, s[lo:hi], e[lo:hi])
-            runs = _run_starts(seg, vals)
-            useg, uvals = seg[runs], vals[runs]  # distinct, ascending per seg
-            ulens = np.bincount(useg, minlength=hi - lo).astype(np.int64)
-            uoff = np.cumsum(ulens) - ulens
-            res = _tail_desc(uvals, uoff, ulens, part.k)
-            res[lens <= 0] = None  # distinguish empty window from no values
-            out[lo:hi] = res
-        return out
+            runs_seg.append(seg[runs] + lo)
+            runs_val.append(vals[runs])
+            runs_cnt.append(np.diff(np.append(np.flatnonzero(runs), len(seg))))
+        return hist_finalize(
+            np.concatenate(runs_seg), np.concatenate(runs_val), np.concatenate(runs_cnt), len(s), k, empty
+        )
     if op == Op.APPROX_PERCENTILE:
-        out = np.empty(len(s), object)
         qs = np.asarray(part.percentiles, np.float64)
+        rows = []
         for lo, hi in _query_chunks(n):
-            seg, lens, vals = _gather_sorted(cs.vals.astype(np.float64), s[lo:hi], e[lo:hi])
-            off = (np.cumsum(lens) - lens).astype(np.float64)
-            cols = []
-            for q in qs:
-                # linear interpolation at q*(n-1) — identical to np.quantile
-                pos = q * np.maximum(lens - 1, 0)
-                fl = np.floor(pos)
-                frac = pos - fl
-                i0 = np.clip(off + fl, 0, max(len(vals) - 1, 0)).astype(np.int64)
-                i1 = np.clip(i0 + 1, 0, max(len(vals) - 1, 0))
-                hi_ok = (fl + 1) <= np.maximum(lens - 1, 0)
-                v0 = vals[i0] if len(vals) else np.zeros(hi - lo)
-                v1 = np.where(hi_ok, vals[i1] if len(vals) else 0.0, v0)
-                cols.append(v0 * (1 - frac) + v1 * frac)
-            stacked = np.stack(cols, axis=1) if cols else np.zeros((hi - lo, 0))
-            out[lo:hi] = _obj_array(
-                [None if lens[i] <= 0 else [float(x) for x in stacked[i]] for i in range(hi - lo)]
-            )
-        return out
+            _, lens, vals, _ = _gather_sorted(cs.vals.astype(np.float64), s[lo:hi], e[lo:hi])
+            rows.append(weighted_percentiles(lens, vals, np.ones(len(vals)), qs))
+        return percentile_lists(np.concatenate(rows), empty)
     raise NotImplementedError(f"op {op}")
+
+
+def weighted_percentiles(lens: np.ndarray, vals: np.ndarray, wts: np.ndarray, qs: np.ndarray) -> np.ndarray:
+    """(segments x percentiles) estimates over values sorted by (segment,
+    value), ``lens[i]`` of them in segment i, each with a weight: value j
+    covers ranks [c_{j-1}, c_j) of its segment's cumulative weight c, and
+    the estimate interpolates linearly at rank q*(W-1). With unit weights
+    this is np.quantile's linear interpolation exactly, so the raw kernel
+    and the tiled sketch (weights n/K) share it."""
+    m = len(lens)
+    cum = np.cumsum(wts)
+    idx_end = np.cumsum(lens)
+    idx_start = idx_end - lens
+    nonz = lens > 0
+    w_start = np.zeros(m)
+    W = np.zeros(m)
+    if len(cum):
+        w_start[nonz] = np.where(idx_start[nonz] > 0, cum[idx_start[nonz] - 1], 0.0)
+        W[nonz] = cum[idx_end[nonz] - 1] - w_start[nonz]
+    top = np.maximum(W - 1, 0)
+
+    def at_rank(r):
+        if not len(vals):
+            return np.zeros(m)
+        idx = np.searchsorted(cum, w_start + np.minimum(r, top), side="right")
+        return vals[np.clip(np.clip(idx, idx_start, np.maximum(idx_end - 1, idx_start)), 0, len(vals) - 1)]
+
+    cols = []
+    for q in qs:
+        t = q * top
+        t0 = np.floor(t)
+        frac = t - t0
+        cols.append(at_rank(t0) * (1 - frac) + at_rank(t0 + 1) * frac)
+    return np.stack(cols, axis=1) if cols else np.zeros((m, 0))
+
+
+def percentile_lists(rows: np.ndarray, null: np.ndarray) -> pa.Array:
+    """One list<double> per query from a (queries x percentiles) array;
+    NULL where ``null``."""
+    lens = np.where(null, 0, rows.shape[1])
+    return _lists(lens, pa.array(rows[~null].ravel(), pa.float64()), null)
 
 
 def hist_finalize(
@@ -467,28 +560,21 @@ def hist_finalize(
     n_rows: int,
     k: int | None,
     empty_mask: np.ndarray,
-) -> np.ndarray:
-    """Assemble per-segment value->count dicts from (segment, value, count)
-    runs, applying the reference's deterministic finalize-time truncation
-    (count desc, value asc; SimpleAggregators.scala:303-322). Shared by the
-    raw-event kernel (weight 1 per occurrence) and the tiled path (per-tile
-    pre-counted weights)."""
+) -> pa.Array:
+    """Per-segment value -> count maps from (segment, value, count) runs
+    sorted by (segment, value), applying the reference's deterministic
+    finalize-time truncation (count desc, value asc;
+    SimpleAggregators.scala:303-322); keys stay value-ascending. Shared by
+    the raw-event kernel (weight 1 per occurrence) and the tiled path
+    (per-tile pre-counted weights)."""
     if k is not None and len(run_seg):
         order = np.lexsort((run_val, -run_cnt, run_seg))
-        run_seg, run_val, run_cnt = run_seg[order], run_val[order], run_cnt[order]
-        rank = np.arange(len(run_seg)) - np.searchsorted(run_seg, run_seg, side="left")
-        keep = rank < k
+        rank = np.arange(len(order)) - np.searchsorted(run_seg[order], run_seg[order], side="left")
+        keep = np.zeros(len(order), bool)
+        keep[order[rank < k]] = True
         run_seg, run_val, run_cnt = run_seg[keep], run_val[keep], run_cnt[keep]
-    counts_per_seg = np.bincount(run_seg, minlength=n_rows) if len(run_seg) else np.zeros(n_rows, np.int64)
-    cuts = np.cumsum(counts_per_seg)[:-1]
-    vs = np.split(run_val, cuts)
-    csplit = np.split(run_cnt.astype(np.int64), cuts)
-    return _obj_array(
-        [
-            None if empty_mask[i] else dict(sorted(zip(vs[i].tolist(), csplit[i].tolist())))
-            for i in range(n_rows)
-        ]
-    )
+    lens = np.bincount(run_seg, minlength=n_rows)
+    return _maps(lens, pa.array(run_val, pa.string()), pa.array(run_cnt, pa.int64()), empty_mask)
 
 
 # chunk budget: bounds the gathered flat array (sum of window sizes) per pass
@@ -498,8 +584,10 @@ _GATHER_BUDGET = 8_000_000
 def _query_chunks(n: np.ndarray):
     """Yield [lo, hi) query slices whose total window volume stays under the
     gather budget (worst-case Q·W memory is bounded; asymptotics unchanged,
-    the win is replacing Q python loops with vectorized passes)."""
+    the win is replacing Q python loops with vectorized passes). Zero
+    queries yield one empty slice, so every caller has a typed result."""
     if not len(n):
+        yield 0, 0
         return
     cum = np.cumsum(np.maximum(n, 0))
     lo = 0
@@ -511,23 +599,15 @@ def _query_chunks(n: np.ndarray):
         lo = min(hi, len(n))
 
 
-def _obj_array(items: list) -> np.ndarray:
-    """Object ndarray from a python list WITHOUT numpy's 2D broadcast of
-    equal-length inner lists."""
-    arr = np.empty(len(items), object)
-    for i, x in enumerate(items):
-        arr[i] = x
-    return arr
-
-
 def _gather_sorted(vals: np.ndarray, s: np.ndarray, e: np.ndarray):
     """Gather every query's window into one flat array and sort by
-    (segment, value): one vectorized lexsort replaces per-query np.sort."""
+    (segment, value): one vectorized lexsort replaces per-query np.sort.
+    Returns (seg, lens, sorted values, their indices into ``vals``)."""
     flat, lens = _flat_ranges(s, e)
     seg = np.repeat(np.arange(len(s), dtype=np.int64), lens)
-    v = vals[flat] if len(flat) else vals[:0]
+    v = vals[flat]
     order = np.lexsort((v, seg))
-    return seg[order], lens, v[order]
+    return seg[order], lens, v[order], flat[order]
 
 
 def _run_starts(seg: np.ndarray, vals: np.ndarray) -> np.ndarray:
@@ -540,63 +620,44 @@ def _run_starts(seg: np.ndarray, vals: np.ndarray) -> np.ndarray:
     return first
 
 
-def _tail_desc(vals: np.ndarray, off: np.ndarray, lens: np.ndarray, k: int) -> np.ndarray:
-    """Per segment of an ascending-sorted flat array: the last min(k, len)
-    values in DESCENDING order (top-k)."""
+def _tail_desc(off: np.ndarray, lens: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per segment of an ascending-sorted flat array: the positions of its
+    last min(k, len) values in DESCENDING order (top-k), and their counts."""
     klens = np.minimum(lens, k).astype(np.int64)
     total = int(klens.sum())
-    if total == 0:
-        return _obj_array(_split_lists(np.empty(0, object), klens))
     offs = np.repeat(np.cumsum(klens) - klens, klens)
     idx = np.repeat(off + lens - 1, klens) - (np.arange(total, dtype=np.int64) - offs)
-    return _obj_array(_split_lists(vals[idx], klens))
+    return idx, klens
 
 
 def _grouped_kernel(
     part: AggregationPart,
     ts: np.ndarray,
     group_vals: np.ndarray,
-    vals: np.ndarray,
+    vals: pa.Array,
     q_starts: np.ndarray,
     q_ts: np.ndarray,
     side: str,
-) -> np.ndarray:
+) -> pa.Array:
     """Run one part's kernel per group value (bucket or map key), assembling
-    Map[group -> aggregate] per query; NULL when no group has data.
+    a ``MapArray`` of group -> aggregate per query (``group_map``); NULL
+    when no group has data.
 
     Group slicing is ONE factorize + stable argsort (within-group ts order
     preserved, so the searchsorted bounds stay valid) instead of a boolean
-    scan per group — O(N log N) total where the scan form was O(N·B).
-    Dict assembly touches only queries whose kernel value is non-NULL
-    (flatnonzero), so sparse buckets cost proportional to their hits, not
-    to Q. Group iteration order is factorize's first-appearance order —
-    identical to the pd.unique order of the scan form, so map key order
-    (and any downstream serialization) is unchanged."""
-    res = np.empty(len(q_ts), object)
-    res[:] = None
-    if not len(ts):
-        return res
+    scan per group — O(N log N) total where the scan form was O(N·B). Map
+    keys follow factorize's first-appearance order, the pd.unique order of
+    the scan form."""
     codes, uniques = pd.factorize(group_vals)
     order = np.argsort(codes, kind="stable")
-    sorted_codes = codes[order]
-    bounds = np.searchsorted(sorted_codes, np.arange(len(uniques) + 1))
-    ts_s, vals_s = ts[order], vals[order]
-    acc: list[dict | None] = [None] * len(q_ts)
+    bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
+    ts_s, vals_s = ts[order], vals.take(order)
+    per_group = []
     for g in range(len(uniques)):
         lo, hi = int(bounds[g]), int(bounds[g + 1])
-        cs = _ColumnSeries(ts_s[lo:hi], vals_s[lo:hi])
-        s, e = cs.bounds(q_starts, q_ts, side)
-        kv = _kernel(part, cs, s, e)
-        key = str(uniques[g])
-        # element-wise `kv != None` is unsafe here: list-output kernels put
-        # ndarrays in kv, whose __ne__ broadcasts — the stray truthiness let
-        # None-valued bucket keys leak into the map for order/extreme ops
-        nonnull = np.fromiter((v is not None for v in kv), bool, len(kv))
-        for i in np.flatnonzero(nonnull):
-            d = acc[i]
-            if d is None:
-                d = acc[i] = {}
-            d[key] = kv[i]
-    for i, d in enumerate(acc):
-        res[i] = d
-    return res
+        cs = _ColumnSeries(ts_s[lo:hi], vals_s.slice(lo, hi - lo))
+        per_group.append(_kernel(part, cs, *cs.bounds(q_starts, q_ts, side)))
+    if not per_group:  # no group has data: the item type from an empty run
+        nothing = np.zeros(len(q_ts), np.int64)
+        per_group.append(_kernel(part, _ColumnSeries(ts_s, vals_s), nothing, nothing))
+    return group_map(len(q_ts), uniques, per_group)

@@ -438,7 +438,6 @@ def _merge(
         parts=list(parts),
         feat_names=[f.name for f in feat_fields],
         stat_prefixes=[f"__p{i}" for i in range(len(parts))],
-        input_types=input_types,
         tie_cols=tie_cols,
         arrow_schema=to_arrow_schema(out_schema),
         hop_us=hop_us,

@@ -39,6 +39,7 @@ from chronon_spark.aggregators.kernels import (
     MultiKeyEventColumns,
     composite_layout,
     compute_parts_multikey,
+    nan_to_null,
 )
 from chronon_spark.api import Accuracy, GroupBy, Join, JoinPart
 from chronon_spark.types import part_output_type
@@ -224,14 +225,19 @@ def asof_join(
     return apply_derivations(out, gb.derivations)
 
 
-def kernel_output(lt: pa.Table, feats: list, schema: pa.Schema) -> pa.Table:
+def kernel_output(lt: pa.Table, feats: list[pa.Array], schema: pa.Schema) -> pa.Table:
     """The batch result: the left columns of ``schema`` passed through from
-    ``lt``, then one Arrow column per feature built from the kernel's values
-    (NaN -> NULL, as Spark's pandas conversion did)."""
+    ``lt``, then the kernels' feature arrays. Each must already be a
+    ``pa.Array`` of its field's type (a ``TypeError`` names the column
+    otherwise); the one rule applied here is ``kernels.nan_to_null``."""
     fields = list(schema)
     n_left = len(fields) - len(feats)
     cols = [lt.column(f.name).cast(f.type) for f in fields[:n_left]]
-    cols += [pa.array(v, type=f.type, from_pandas=True) for v, f in zip(feats, fields[n_left:])]
+    for v, f in zip(feats, fields[n_left:]):
+        if not isinstance(v, pa.Array) or not v.type.equals(f.type):
+            got = v.type if isinstance(v, pa.Array) else type(v).__name__
+            raise TypeError(f"feature column {f.name!r}: expected a pa.Array of {f.type}, got {got}")
+        cols.append(nan_to_null(v))
     return pa.Table.from_arrays(cols, schema=schema)
 
 

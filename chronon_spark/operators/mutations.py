@@ -24,13 +24,13 @@ attribute) are the LAST after-image — plain `Op.LAST` over the
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window as SqlWindow, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from chronon_spark.aggregators.decimal import _integral_decimal
 from chronon_spark.aggregators.kernels import (
     MultiKeyEventColumns,
-    _ColumnSeries,
     _flat_ranges,
     _kernel,
     _query_chunks,
@@ -323,8 +323,9 @@ def replay_parts(
     q_codes: np.ndarray,
     q_ts: np.ndarray,
     whole_key: bool,
-) -> list[list]:
-    """Every part over each query's VISIBLE instances, one list per part.
+) -> list[pa.Array]:
+    """Every part over each query's VISIBLE instances, one typed
+    ``pa.Array`` per part.
 
     ``mec`` holds the batch's instances (``__val``, ``__vf``, ``__vt`` with
     open ends at ``_OPEN``) sorted by (key code, event ts, ``__val``,
@@ -343,7 +344,7 @@ def replay_parts(
     null = kc < 0
     seg = np.where(null, 0, kc * mec.block)
     q_comp = seg + (q_ts - mec.base)
-    out: list[list] = [[] for _ in parts]
+    pieces: list[list[pa.Array]] = [[] for _ in parts]
     w_us = [None if p.window.millis is None else p.window.millis * 1000 for p in parts]
     for w in dict.fromkeys(w_us):
         if w is not None:
@@ -357,11 +358,10 @@ def replay_parts(
             flat, lens = _flat_ranges(s[a:b], e[a:b])
             t = np.repeat(q_ts[a:b], lens)
             keep = (vf[flat] < t) & (vt[flat] >= t)
-            kept = flat[keep]
             ck = np.concatenate(([0], np.cumsum(keep)))
             ends = np.cumsum(lens)
             ks, ke = ck[ends - lens], ck[ends]
-            cs = _ColumnSeries(inst.ts[kept], inst.vals[kept])
+            cs = inst.take(flat[keep])
             for i in group:
-                out[i].extend(_kernel(parts[i], cs, ks, ke))
-    return out
+                pieces[i].append(_kernel(parts[i], cs, ks, ke))
+    return [pa.concat_arrays(p) for p in pieces]

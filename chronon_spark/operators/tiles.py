@@ -33,9 +33,11 @@ Spark-first:
 3. **Kernel** — tiles and head events enter the cogroup as one union frame
    (marker column). Scalar partials merge as range sums / sparse-table
    min-max; collection IRs are flattened to (composite_ts, value[, weight])
-   entry arrays ONCE per column and served by the SAME vectorized kernels as
-   the raw path (`aggregators/kernels._kernel`), then merged with the head's
-   exact result per op — the reference's `lambdaAggregateIr` merge of
+   entry arrays ONCE per column. Per query, the tail entries and then the
+   head events are gathered into one contiguous range (``_tail_head``) and
+   run through the SAME vectorized kernel as the raw path
+   (`aggregators/kernels._kernel`); the histogram and percentile sketches
+   use the same gather — the reference's `lambdaAggregateIr` merge of
    collapsed IR + tail hops (SawtoothOnlineAggregator.scala:86-126).
    ``ir_merge_kernel`` is the engine's one IR-merge kernel: the serving
    fetch (jobs/upload.py) runs it too, with each key's batch IR reshaped
@@ -72,7 +74,11 @@ Moment-op caveat: raw power sums lose precision when |mean| >> stddev
 (kernels._moments) do not. Equivalence holds to ~1e-9 relative at realistic
 magnitudes; for pathological columns keep moments on the plain path.
 
-When to use which (measured, local[32]):
+When to use which. The numbers below are history: measured at local[32]
+on an older tree, before the Arrow kernel boundary. On a 4-core host, the
+traced benchmark input (perfbench, 200k turns) builds 173k tile rows, so
+little is pre-aggregated there, and a tiled call takes about 1.6x a plain
+call.
 - many keys + queries sparse in (key, hop): tiled wins — 4M events / 2000
   keys / 2000 queries: 8.5 s vs 21 s plain (the cogroup moves 80k tile rows
   + the 2.5% of raw events in query hops instead of all 4M raw rows);
@@ -104,10 +110,13 @@ from chronon_spark.aggregators.kernels import (
     _prefix,
     _query_chunks,
     _run_starts,
-    _sparse_query,
-    _sparse_table,
+    group_map,
     hist_finalize,
-    valid_values,
+    int_range_sum,
+    percentile_lists,
+    range_extreme,
+    valid_series,
+    weighted_percentiles,
 )
 from chronon_spark.api import AggregationPart, GroupBy, Op
 from chronon_spark.operators.asof_join import (
@@ -508,37 +517,6 @@ def _range_sum(vals: np.ndarray, s: np.ndarray, e: np.ndarray) -> np.ndarray:
     return p[e] - p[s]
 
 
-def _range_minmax(vals: np.ndarray, s: np.ndarray, e: np.ndarray, take_min: bool) -> np.ndarray:
-    return _sparse_query(_sparse_table(vals, take_min), s, e, take_min)
-
-
-def _merge_order(op: Op, k: int | None, tail: np.ndarray, head: np.ndarray) -> list:
-    """Merge the tail (tiles) and head kernel results per query for order /
-    extreme ops. tail is strictly earlier in time than head."""
-    out = []
-    if op == Op.FIRST:
-        return [t if t is not None else h for t, h in zip(tail, head)]
-    if op == Op.LAST:
-        return [h if h is not None else t for t, h in zip(tail, head)]
-    for t, h in zip(tail, head):
-        if t is None and h is None:
-            out.append(None)
-            continue
-        t = t or []
-        h = h or []
-        if op == Op.FIRST_K:
-            out.append((t + h)[:k])
-        elif op == Op.LAST_K:  # most-recent-first
-            out.append((h + t)[:k])
-        elif op == Op.TOP_K:
-            out.append(sorted(t + h, reverse=True)[:k])
-        elif op == Op.BOTTOM_K:
-            out.append(sorted(t + h)[:k])
-        else:  # UNIQUE_TOP_K: distinct union, desc, k
-            out.append(sorted(set(t) | set(h), reverse=True)[:k])
-    return out
-
-
 def tiled_sawtooth_asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -653,7 +631,6 @@ def tiled_sawtooth_asof_join(
         parts=list(parts),
         feat_names=[f.name for f in feat_fields],
         stat_prefixes=[p.input_column for p in parts],
-        input_types=right_types,
         tie_cols=tie_cols,
         arrow_schema=to_arrow_schema(out_schema),
         hop_us=hop_us,
@@ -662,25 +639,67 @@ def tiled_sawtooth_asof_join(
     return apply_derivations(out, gb.derivations)
 
 
-def _as_k(p: AggregationPart) -> AggregationPart:
-    """FIRST/LAST as their k=1 list ops, so the tail/head merge is uniform."""
-    if p.op not in (Op.FIRST, Op.LAST):
-        return p
-    return AggregationPart(p.input_column, Op.FIRST_K if p.op == Op.FIRST else Op.LAST_K, p.window, k=1)
+def _tail_head(
+    es: np.ndarray, ee: np.ndarray, hs: np.ndarray, he: np.ndarray, n_tail: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The tail+head gather: every query's tail entries [es, ee) then its
+    head events [hs, he) (offset by ``n_tail``) as one contiguous run of
+    indices into concat(tail, head). Returns (flat indices, per-query run
+    lengths)."""
+    starts = np.column_stack([es, hs + n_tail]).ravel()
+    flat, lens = _flat_ranges(starts, np.column_stack([ee, he + n_tail]).ravel())
+    return flat, lens.reshape(-1, 2).sum(axis=1)
 
 
-def _merge_order_k(p: AggregationPart, tail: list, head: list) -> list:
-    """``_merge_order`` of part ``p``; FIRST/LAST unwrap their k=1 lists."""
-    if p.op in (Op.FIRST, Op.LAST):
-        return [None if v is None else v[0] for v in _merge_order(_as_k(p).op, 1, tail, head)]
-    return _merge_order(p.op, p.k, tail, head)
+def _merged_kernel(
+    p: AggregationPart,
+    tail: _ColumnSeries,
+    es: np.ndarray,
+    ee: np.ndarray,
+    head: _ColumnSeries,
+    hs: np.ndarray,
+    he: np.ndarray,
+) -> pa.Array:
+    """Order, extreme and set ops over tail entries then head events: each
+    query's two ranges are gathered into one (``_tail_head``) and run
+    through the raw kernel ``_kernel``; tail entries precede head events in
+    time. FIRST(_K) keeps the first k of each side, LAST(_K) the last k."""
+    if p.op in _ORDER_OPS:
+        k = 1 if p.op in (Op.FIRST, Op.LAST) else p.k
+        if p.op in (Op.FIRST, Op.FIRST_K):
+            ee, he = np.minimum(ee, es + k), np.minimum(he, hs + k)
+        else:
+            es, hs = np.maximum(es, ee - k), np.maximum(hs, he - k)
+    tv = tail.values if tail.type == head.type else tail.values.cast(head.type)
+    both = _ColumnSeries(np.concatenate([tail.ts, head.ts]), pa.concat_arrays([tv, head.values]))
+    pieces = []
+    for lo, hi in _query_chunks((ee - es) + (he - hs)):
+        flat, lens = _tail_head(es[lo:hi], ee[lo:hi], hs[lo:hi], he[lo:hi], len(tail.ts))
+        e = np.cumsum(lens)
+        pieces.append(_kernel(p, both.take(flat), e - lens, e))
+    return pa.concat_arrays(pieces)
 
 
-def _merge_minmax(tail, head, take_min: bool) -> list:
-    return [
-        h if t is None else (t if h is None else (min(t, h) if take_min else max(t, h)))
-        for t, h in zip(tail, head)
-    ]
+def _merged_extreme(
+    tail: _ColumnSeries,
+    ts_: np.ndarray,
+    te: np.ndarray,
+    head: _ColumnSeries,
+    hs: np.ndarray,
+    he: np.ndarray,
+    take_min: bool,
+) -> pa.Array:
+    """MIN or MAX over tail partials [ts_, te) and head events [hs, he):
+    typed values and validity merged with np.where. The head value wins
+    only when strictly smaller (larger), so an unordered NaN pair keeps the
+    tail's."""
+    tv = range_extreme(tail.vals, ts_, te, take_min)
+    hv = range_extreme(head.vals, hs, he, take_min)
+    tnull, hnull = te <= ts_, he <= hs
+    both = ~tnull & ~hnull
+    pick_h = tnull.copy()
+    pick_h[both] = (hv[both] < tv[both]) if take_min else (hv[both] > tv[both])
+    return pa.array(np.where(pick_h, hv, tv), head.type, mask=tnull & hnull)
 
 
 def ir_merge_kernel(
@@ -694,7 +713,6 @@ def ir_merge_kernel(
     parts: list[AggregationPart],
     feat_names: list[str],
     stat_prefixes: list[str],
-    input_types: dict[str, T.DataType],
     tie_cols: list[str],
     arrow_schema: pa.Schema,
     hop_us: int | None = None,
@@ -713,6 +731,12 @@ def ir_merge_kernel(
     ``[head, q)``, where ``head = max(head start, wstart)`` and the head
     start is ``head_start_us`` when given, else the ``hop_us`` floor of the
     query ts. Unbounded windows take every tile row of the key.
+
+    Scalar partials merge as range sums (MIN/MAX: ``_merged_extreme``);
+    order, extreme and set ops gather each query's tail entries and head
+    events into one range for the raw kernel (``_merged_kernel``), and the
+    histogram and percentile sketches use the same gather. Every feature is
+    a ``pa.Array`` of its ``arrow_schema`` field type.
 
     Whole-batch in composite-index space: code·block + (ts−base) makes every
     searchsorted resolve ALL keys of the Arrow batch at once (same layout as
@@ -744,10 +768,10 @@ def ir_merge_kernel(
     entry_cache: dict[str, tuple] = {}
 
     def entries(stat_col: str, kind: str) -> tuple:
-        """Flatten one tile collection column into sorted entry arrays.
+        """Flatten one tile collection column into sorted entries.
 
-        kind='ts'    -> (comp_by_orig_ts, values) ordered by (ts, ties)
-        kind='value' -> (tile_comp, values)
+        kind='ts'    -> series of values at their own (ts, ties) order
+        kind='value' -> series of values at their tile's comp
         kind='hist'  -> (tile_comp, values, weights)
         kind='qsk'   -> (tile_comp, samples, weights)
         Entry-level ts bounds equal tile-level inclusion because window
@@ -769,11 +793,11 @@ def ir_merge_kernel(
                 comp = np.repeat(tile_code_base, lens) + (_numpy(flat.field("t")) - base)
                 ties = [_numpy(flat.field(f"b{i}")) for i in range(n_ties)]
                 order = np.lexsort(tuple(reversed([comp] + ties)))
-                out = (comp[order], _numpy(flat.field("v"))[order])
+                out = _ColumnSeries(comp[order], flat.field("v").take(order))
             elif kind == "hist":  # comp already ascending (tiles sorted)
                 out = (np.repeat(tcomp_all, lens), _numpy(flat.field("__v")), _numpy(flat.field("__c")))
             else:  # value entries: bound by the tile's own comp
-                out = (np.repeat(tcomp_all, lens), _numpy(flat))
+                out = _ColumnSeries(np.repeat(tcomp_all, lens), flat)
         entry_cache[stat_col] = out
         return out
 
@@ -795,7 +819,7 @@ def ir_merge_kernel(
         tord = np.lexsort((tcomp_e, tcd))
         tcomp_e, tcd = tcomp_e[tord], tcd[tord]
         stats = {
-            nm: _numpy(flat.field(nm))[tord]
+            nm: flat.field(nm).take(tord)
             for nm in ("cnt", "sm", "mn", "mx")
             if flat.type.get_field_index(nm) >= 0
         }
@@ -803,7 +827,7 @@ def ir_merge_kernel(
         # the bucket gives the raw kernel's exact event order per bucket:
         # per-bucket first/last(_k) match the plain grouped path
         hord = np.argsort(hcd, kind="stable")
-        hcomp_b, hvals_b, hcd = hcomp_b[hord], hvals_b[hord], hcd[hord]
+        hcomp_b, hvals_b, hcd = hcomp_b[hord], hvals_b.take(hord), hcd[hord]
         nb = len(uniques)
         tlo = np.searchsorted(tcd, np.arange(nb + 1))
         hlo = np.searchsorted(hcd, np.arange(nb + 1))
@@ -816,8 +840,9 @@ def ir_merge_kernel(
     def bucket_entries(pre: str, c: str, b: str, fam: str, kind: str) -> tuple:
         """Flatten one per-bucket collection IR column (each element
         tagged with its bucket, `{pre}__bk_{fam}__{b}`) into arrays laid
-        out bucket-contiguously (same layouts as `entries`, plus an
-        `elo` offset table indexing each bucket's slice). Bucket codes
+        out bucket-contiguously: an `elo` offset table indexing each
+        bucket's slice, the entries' comp, their values (Arrow; numpy
+        strings for 'hist') and, for 'hist', their weights. Bucket codes
         come from bucket_series' factorize so slices line up with the
         scalar IRs and the head slices."""
         ck = (pre, b, fam)
@@ -835,13 +860,13 @@ def ir_merge_kernel(
             comp = np.repeat(tile_code_base, lens) + (_numpy(flat.field("t")) - base)
             ties = [_numpy(flat.field(f"b{i}")) for i in range(n_ties)]
             order = np.lexsort(tuple(reversed([ebkt, comp] + ties)))
-            out_t: tuple = (comp[order], _numpy(flat.field("v"))[order])
+            out_t: tuple = (comp[order], flat.field("v").take(order))
         else:
             order = np.lexsort((tcomp_rep, ebkt))
             if kind == "hist":
                 out_t = (tcomp_rep[order], _numpy(flat.field("__v"))[order], _numpy(flat.field("__c"))[order])
             else:  # plain value entries, bound by their tile's comp
-                out_t = (tcomp_rep[order], _numpy(flat.field("v"))[order])
+                out_t = (tcomp_rep[order], flat.field("v").take(order))
         elo = np.searchsorted(ebkt[order], np.arange(len(uniques) + 1))
         res = (elo, *out_t)
         bucket_entry_cache[ck] = res
@@ -858,8 +883,13 @@ def ir_merge_kernel(
     def comp_at(ts: np.ndarray) -> np.ndarray:
         return np.where(nullkey, np.int64(0), kbase + np.clip(ts - base, 0, block - 1))
 
-    out: dict[str, object] = {}
+    def ranges(ts: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        s = np.searchsorted(ts, lo, side="left")
+        return s, np.maximum(np.searchsorted(ts, hi, side="left"), s)
+
+    out: dict[str, pa.Array] = {}
     for p, fname, pre in zip(parts, feat_names, stat_prefixes):
+        typ = arrow_schema.field(fname).type
         if p.window.millis is None:  # unbounded: from the key's segment start
             wstart = np.full(len(q_ts), base, np.int64)
         else:
@@ -870,132 +900,85 @@ def ir_merge_kernel(
         # day after batchEnd) reads head events only
         comp_h = comp_at(np.maximum(head_start, wstart))
         c = p.input_column
+        k = p.k if (p.k or p.op != Op.HISTOGRAM) else None  # histogram truncation
 
         if p.bucket is not None:
             # Map[bucket -> agg]: per-bucket tile IRs merged with
             # bucket-masked head events; iteration is per BUCKET (each
             # pass vectorized over all queries), the same shape as
             # kernels._grouped_kernel. Scalars merge range partials;
-            # collection IRs reuse the SAME raw-path kernels per bucket.
+            # collection IRs reuse the SAME merges as unbucketed parts.
             uniques, tcomp_e, bstats, tlo, hcomp_b, hvals_b, hlo = bucket_series(pre, c, p.bucket)
             fam = _op_family(p.op)
-            integral = isinstance(part_output_type(p, input_types[c]).valueType, T.LongType)
-            acc: list = [None] * len(q_ts)
+            if fam is not None:
+                kind = "ts" if p.op in _ORDER_OPS else ("hist" if p.op in _HIST_OPS else "value")
+                elo, ecomp, evals, *ewts = bucket_entries(pre, c, p.bucket, fam, kind)
+            per_group = []
             for g in range(len(uniques)):
-                ts_g = tcomp_e[tlo[g] : tlo[g + 1]]
-                s1 = np.searchsorted(ts_g, comp_w, side="left")
-                e1 = np.maximum(np.searchsorted(ts_g, comp_h, side="left"), s1)
-                hts_g = hcomp_b[hlo[g] : hlo[g + 1]]
-                hv_g = hvals_b[hlo[g] : hlo[g + 1]]
-                s2 = np.searchsorted(hts_g, comp_h, side="left")
-                e2 = np.maximum(np.searchsorted(hts_g, comp_q, side="left"), s2)
+                head = _ColumnSeries(hcomp_b[hlo[g] : hlo[g + 1]], hvals_b[hlo[g] : hlo[g + 1]])
+                s2, e2 = ranges(head.ts, comp_h, comp_q)
                 if fam is not None:
-                    kind = (
-                        "ts"
-                        if p.op in _ORDER_OPS
-                        else ("hist" if p.op in _HIST_OPS else "value")
-                    )
-                    ent = bucket_entries(pre, c, p.bucket, fam, kind)
-                    elo, ecomp = ent[0], ent[1]
-                    arr = ecomp[elo[g] : elo[g + 1]]
-                    av = ent[2][elo[g] : elo[g + 1]]
-                    es = np.searchsorted(arr, comp_w, side="left")
-                    ee = np.maximum(np.searchsorted(arr, comp_h, side="left"), es)
-                    if p.op in _SET_OPS:
-                        vals_g = _distinct2(av, es, ee, hv_g, s2, e2)
-                    elif p.op in _HIST_OPS:
-                        aw = ent[3][elo[g] : elo[g + 1]]
-                        kk = p.k if (p.k or p.op != Op.HISTOGRAM) else None
-                        vals_g = _hist2(av, aw, es, ee, hv_g, s2, e2, kk)
-                    else:  # order / extreme: raw-path kernel both sides
-                        kp = _as_k(p)
-                        tail_res = _kernel(kp, _ColumnSeries(arr, av), es, ee)
-                        head_res = _kernel(kp, _ColumnSeries(hts_g, hv_g), s2, e2)
-                        vals_g = _merge_order_k(p, tail_res, head_res)
-                elif p.op in (Op.MIN, Op.MAX):
-                    take_min = p.op == Op.MIN
-                    nm = "mn" if take_min else "mx"
-                    part_t = _range_minmax(bstats[nm][tlo[g] : tlo[g + 1]], s1, e1, take_min)
-                    part_h = _range_minmax(hv_g, s2, e2, take_min)
-                    vals_g = _merge_minmax(part_t, part_h, take_min)
-                else:
-                    cnt_g = _range_sum(
-                        np.asarray(bstats["cnt"][tlo[g] : tlo[g + 1]], np.float64), s1, e1
-                    ) + (e2 - s2)
-                    if p.op == Op.COUNT:
-                        vals_g = [None if v <= 0 else int(v) for v in cnt_g]
+                    eg = slice(elo[g], elo[g + 1])
+                    es, ee = ranges(ecomp[eg], comp_w, comp_h)
+                    if p.op in _HIST_OPS:
+                        per_group.append(_hist2(evals[eg], ewts[0][eg], es, ee, head.vals, s2, e2, k))
                     else:
-                        sm_g = _range_sum(
-                            np.asarray(bstats["sm"][tlo[g] : tlo[g + 1]], np.float64), s1, e1
-                        ) + _range_sum(
-                            hv_g.astype(np.float64) if len(hv_g) else np.empty(0, np.float64), s2, e2
-                        )
-                        if p.op == Op.SUM:
-                            vals_g = [
-                                None if n0 <= 0 else (int(round(v)) if integral else float(v))
-                                for v, n0 in zip(sm_g, cnt_g)
-                            ]
-                        else:
-                            vals_g = [
-                                None if n0 <= 0 else float(v / n0) for v, n0 in zip(sm_g, cnt_g)
-                            ]
-                bkey = str(uniques[g])
-                for i in range(len(vals_g)):
-                    if vals_g[i] is not None:
-                        d0 = acc[i]
-                        if d0 is None:
-                            d0 = acc[i] = {}
-                        d0[bkey] = vals_g[i]
-            res = np.empty(len(q_ts), object)
-            for i, d0 in enumerate(acc):
-                res[i] = d0
-            out[fname] = res
+                        tail = _ColumnSeries(ecomp[eg], evals[eg])
+                        per_group.append(_merged_kernel(p, tail, es, ee, head, s2, e2))
+                    continue
+                tg = slice(tlo[g], tlo[g + 1])
+                s1, e1 = ranges(tcomp_e[tg], comp_w, comp_h)
+                if p.op in (Op.MIN, Op.MAX):
+                    nm = "mn" if p.op == Op.MIN else "mx"
+                    tail = _ColumnSeries(tcomp_e[tg], bstats[nm][tg])
+                    per_group.append(_merged_extreme(tail, s1, e1, head, s2, e2, p.op == Op.MIN))
+                    continue
+                cnt_g = int_range_sum(_numpy(bstats["cnt"][tg]), s1, e1) + (e2 - s2)
+                vals_g = cnt_g
+                if p.op != Op.COUNT:
+                    sm_g = _range_sum(_numpy(bstats["sm"][tg]), s1, e1) + _range_sum(head.vals, s2, e2)
+                    if p.op == Op.AVERAGE:
+                        vals_g = np.divide(sm_g, cnt_g, out=np.zeros(len(sm_g)), where=cnt_g > 0)
+                    else:  # bucketed tile sums are double: an integral SUM rounds back
+                        vals_g = np.round(sm_g).astype(np.int64) if pa.types.is_integer(typ.item_type) else sm_g
+                per_group.append(pa.array(vals_g, typ.item_type, mask=cnt_g <= 0))
+            out[fname] = group_map(len(q_ts), uniques, per_group) if per_group else pa.nulls(len(q_ts), typ)
             continue
 
         hcs = head_events.column(c)
-        hs = np.searchsorted(hcs.ts, comp_h, side="left")
-        he = np.maximum(np.searchsorted(hcs.ts, comp_q, side="left"), hs)
+        hs, he = ranges(hcs.ts, comp_h, comp_q)
 
         if p.op in (Op.COUNT, Op.SUM, Op.AVERAGE) or p.op in _MOMENT_OPS:
             # tail: tiles fully inside [wstart, head)
-            ts_idx_s = np.searchsorted(tcomp_all, comp_w, side="left")
-            ts_idx_e = np.maximum(np.searchsorted(tcomp_all, comp_h, side="left"), ts_idx_s)
-            cnt_t = _range_sum(filled(f"{pre}__cnt"), ts_idx_s, ts_idx_e)
-            n = cnt_t + (he - hs)  # non-null values in window
+            ts_idx_s, ts_idx_e = ranges(tcomp_all, comp_w, comp_h)
+            n = int_range_sum(filled(f"{pre}__cnt"), ts_idx_s, ts_idx_e) + (he - hs)  # non-null values
             if p.op == Op.COUNT:
-                out[fname] = [None if v <= 0 else int(v) for v in n]
+                out[fname] = pa.array(n, typ, mask=n <= 0)
                 continue
-            if p.op == Op.SUM and isinstance(part_output_type(p, input_types[c]), T.LongType):
+            if p.op == Op.SUM and pa.types.is_integer(typ):
                 # exact int64 path: integral tile partials and heads both
                 # arrive as int64, so >2^53 sums (incl. the Decimal
                 # rewrite's unscaled values) never round through float64
-                pt = np.concatenate(([0], np.cumsum(filled(f"{pre}__sum").astype(np.int64))))
-                ph = np.concatenate(([0], np.cumsum(hcs.vals.astype(np.int64))))
-                total_i = (pt[ts_idx_e] - pt[ts_idx_s]) + (ph[he] - ph[hs])
-                out[fname] = [None if nv <= 0 else int(v) for v, nv in zip(total_i, n)]
+                total_i = int_range_sum(filled(f"{pre}__sum"), ts_idx_s, ts_idx_e)
+                out[fname] = pa.array(total_i + int_range_sum(hcs.vals, hs, he), typ, mask=n <= 0)
                 continue
             hvals = hcs.vals.astype(np.float64)
-            t_sum_np = filled(f"{pre}__sum").astype(np.float64)
-            sum_t = _range_sum(t_sum_np, ts_idx_s, ts_idx_e)
-            sum_h = _range_sum(hvals, hs, he)
-            total = sum_t + sum_h
+            total = _range_sum(filled(f"{pre}__sum"), ts_idx_s, ts_idx_e) + _range_sum(hvals, hs, he)
             if p.op == Op.SUM:
-                out[fname] = [None if nv <= 0 else float(v) for v, nv in zip(total, n)]
+                out[fname] = pa.array(total, typ, mask=n <= 0)
                 continue
-            if p.op == Op.AVERAGE:
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    avg = np.where(n > 0, total / n, np.nan)
-                out[fname] = [None if np.isnan(v) else float(v) for v in avg]
-                continue
-            # moments from merged raw power sums (same central-moment
-            # algebra as kernels._moments at shift 0)
-            upto = 2 if p.op == Op.VARIANCE else (3 if p.op == Op.SKEW else 4)
-            S = {1: total}
-            for pw in range(2, upto + 1):
-                s_t = _range_sum(filled(f"{pre}__pow{pw}"), ts_idx_s, ts_idx_e)
-                p_h = _prefix(hvals, pw)
-                S[pw] = s_t + (p_h[he] - p_h[hs])
             with np.errstate(invalid="ignore", divide="ignore"):
+                if p.op == Op.AVERAGE:
+                    out[fname] = pa.array(total / n, typ, mask=n <= 0)
+                    continue
+                # moments from merged raw power sums (same central-moment
+                # algebra as kernels._moments at shift 0)
+                upto = 2 if p.op == Op.VARIANCE else (3 if p.op == Op.SKEW else 4)
+                S = {1: total}
+                for pw in range(2, upto + 1):
+                    s_t = _range_sum(filled(f"{pre}__pow{pw}"), ts_idx_s, ts_idx_e)
+                    p_h = _prefix(hvals, pw)
+                    S[pw] = s_t + (p_h[he] - p_h[hs])
                 mu = S[1] / n
                 m2 = np.maximum(S[2] / n - mu**2, 0.0)
                 if p.op == Op.VARIANCE:
@@ -1008,80 +991,24 @@ def ir_merge_kernel(
                     m4 = S[4] / n - 4 * mu * S[3] / n + 6 * mu**2 * S[2] / n - 3 * mu**4
                     vals_out = m4 / (m2**2) - 3.0
                     bad = (n < 4) | (m2 <= 0)
-            res = vals_out.astype(object)
-            res[bad | (n <= 0)] = None
-            out[fname] = res
+            out[fname] = pa.array(vals_out, typ, mask=bad | (n <= 0))
         elif p.op in (Op.MIN, Op.MAX):
             take_min = p.op == Op.MIN
-            tcol = f"{pre}__{'min' if take_min else 'max'}"
-            tt, tv = valid_values(tile_rows.column(tcol).combine_chunks(), tcomp_all)
-            s2 = np.searchsorted(tt, comp_w, side="left")
-            e2 = np.maximum(np.searchsorted(tt, comp_h, side="left"), s2)
-            part_t = _range_minmax(tv, s2, e2, take_min)
-            part_h = _range_minmax(hcs.vals, hs, he, take_min)
-            out[fname] = _merge_minmax(part_t, part_h, take_min)
-        elif p.op in _ORDER_OPS or p.op in _EXTREME_OPS:
-            kind = "ts" if p.op in _ORDER_OPS else "value"
-            ecomp, evals = entries(f"{pre}__{_op_family(p.op)}", kind)
-            es = np.searchsorted(ecomp, comp_w, side="left")
-            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-            # reuse the raw-path kernel on both sides, merge per op
-            kp = _as_k(p)
-            tail_res = _kernel(kp, _ColumnSeries(ecomp, evals), es, ee)
-            head_res = _kernel(kp, hcs, hs, he)
-            out[fname] = _merge_order_k(p, tail_res, head_res)
-        elif p.op in _SET_OPS:
-            ecomp, evals = entries(f"{pre}__set", "value")
-            es = np.searchsorted(ecomp, comp_w, side="left")
-            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-            out[fname] = _distinct2(evals, es, ee, hcs.vals, hs, he)
+            tcol = tile_rows.column(f"{pre}__{'min' if take_min else 'max'}").combine_chunks()
+            tail = valid_series(tcol, tcomp_all)
+            out[fname] = _merged_extreme(tail, *ranges(tail.ts, comp_w, comp_h), hcs, hs, he, take_min)
         elif p.op == Op.APPROX_PERCENTILE:
             ecomp, evals, ewts = entries(f"{pre}__qsk", "qsk")
-            es = np.searchsorted(ecomp, comp_w, side="left")
-            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-            out[fname] = _qsk2(
-                evals, ewts, es, ee, hcs.vals, hs, he, np.asarray(p.percentiles, np.float64)
-            )
-        else:  # histogram family
+            es, ee = ranges(ecomp, comp_w, comp_h)
+            out[fname] = _qsk2(evals, ewts, es, ee, hcs.vals, hs, he, np.asarray(p.percentiles, np.float64))
+        elif p.op in _HIST_OPS:
             ecomp, evals, ewts = entries(f"{pre}__hist", "hist")
-            es = np.searchsorted(ecomp, comp_w, side="left")
-            ee = np.maximum(np.searchsorted(ecomp, comp_h, side="left"), es)
-            k = p.k if (p.k or p.op != Op.HISTOGRAM) else None
+            es, ee = ranges(ecomp, comp_w, comp_h)
             out[fname] = _hist2(evals, ewts, es, ee, hcs.vals, hs, he, k)
+        else:  # order, extreme and set ops: raw kernel over tail + head
+            tail = entries(f"{pre}__{_op_family(p.op)}", "ts" if p.op in _ORDER_OPS else "value")
+            out[fname] = _merged_kernel(p, tail, *ranges(tail.ts, comp_w, comp_h), hcs, hs, he)
     return kernel_output(lt, [out[f] for f in feat_names], arrow_schema)
-
-
-def _distinct2(
-    evals: np.ndarray,
-    es: np.ndarray,
-    ee: np.ndarray,
-    hvals: np.ndarray,
-    hs: np.ndarray,
-    he: np.ndarray,
-) -> np.ndarray:
-    """Distinct count over the union of two index-range families (tile-set
-    entries + head events) — one segmented lexsort per chunk, like the raw
-    kernel's UNIQUE_COUNT but gathering from both sides."""
-    n = (ee - es) + (he - hs)
-    out = np.empty(len(n), object)
-    for lo, hi in _query_chunks(n):
-        f1, l1 = _flat_ranges(es[lo:hi], ee[lo:hi])
-        f2, l2 = _flat_ranges(hs[lo:hi], he[lo:hi])
-        seg = np.concatenate(
-            [np.repeat(np.arange(hi - lo, dtype=np.int64), l1), np.repeat(np.arange(hi - lo, dtype=np.int64), l2)]
-        )
-        vals = np.concatenate(
-            [evals[f1] if len(f1) else evals[:0], hvals[f2] if len(f2) else hvals[:0]]
-        )
-        if len(vals):
-            order = np.lexsort((vals, seg))
-            seg, vals = seg[order], vals[order]
-        runs = _run_starts(seg, vals)
-        cnt = np.bincount(seg[runs], minlength=hi - lo) if len(seg) else np.zeros(hi - lo, np.int64)
-        chunk = cnt.astype(object)
-        chunk[(l1 + l2) <= 0] = None
-        out[lo:hi] = chunk
-    return out
 
 
 def _hist2(
@@ -1093,33 +1020,29 @@ def _hist2(
     hs: np.ndarray,
     he: np.ndarray,
     k: int | None,
-) -> np.ndarray:
+) -> pa.Array:
     """Weighted histogram over tile (value, count) entries + weight-1 head
-    events; finalize (incl. deterministic k-truncation) shared with the raw
-    kernel via kernels.hist_finalize."""
+    events, gathered per query by ``_tail_head``; finalize (incl.
+    deterministic k-truncation) shared with the raw kernel via
+    kernels.hist_finalize."""
     n = (ee - es) + (he - hs)
-    out = np.empty(len(n), object)
-    hstr = hvals.astype(str) if len(hvals) else np.empty(0, object)
+    vals_all = np.concatenate([evals.astype(str), hvals.astype(str)])
+    wts_all = np.concatenate([ewts.astype(np.int64), np.ones(len(hvals), np.int64)])
+    runs_seg, runs_val, runs_cnt = [], [], []
     for lo, hi in _query_chunks(n):
-        f1, l1 = _flat_ranges(es[lo:hi], ee[lo:hi])
-        f2, l2 = _flat_ranges(hs[lo:hi], he[lo:hi])
-        seg = np.concatenate(
-            [np.repeat(np.arange(hi - lo, dtype=np.int64), l1), np.repeat(np.arange(hi - lo, dtype=np.int64), l2)]
-        )
-        vals = np.concatenate(
-            [evals[f1].astype(str) if len(f1) else np.empty(0, object), hstr[f2] if len(f2) else np.empty(0, object)]
-        )
-        wts = np.concatenate([ewts[f1] if len(f1) else ewts[:0], np.ones(len(f2), np.int64)])
-        if len(vals):
-            order = np.lexsort((vals, seg))
-            seg, vals, wts = seg[order], vals[order], wts[order]
+        flat, lens = _tail_head(es[lo:hi], ee[lo:hi], hs[lo:hi], he[lo:hi], len(evals))
+        seg = np.repeat(np.arange(hi - lo, dtype=np.int64), lens)
+        vals, wts = vals_all[flat], wts_all[flat]
+        order = np.lexsort((vals, seg))
+        seg, vals, wts = seg[order], vals[order], wts[order]
         runs = _run_starts(seg, vals)
-        run_seg, run_val = seg[runs], vals[runs]
         wprefix = np.concatenate(([0], np.cumsum(wts)))
-        bounds = np.concatenate([np.flatnonzero(runs), [len(seg)]]) if len(seg) else np.array([0])
-        run_cnt = (wprefix[bounds[1:]] - wprefix[bounds[:-1]]).astype(np.int64) if len(run_seg) else np.empty(0, np.int64)
-        out[lo:hi] = hist_finalize(run_seg, run_val, run_cnt, hi - lo, k, (l1 + l2) <= 0)
-    return out
+        runs_seg.append(seg[runs] + lo)
+        runs_val.append(vals[runs])
+        runs_cnt.append(np.diff(wprefix[np.append(np.flatnonzero(runs), len(seg))]))
+    return hist_finalize(
+        np.concatenate(runs_seg), np.concatenate(runs_val), np.concatenate(runs_cnt), len(n), k, n <= 0
+    )
 
 
 def _qsk2(
@@ -1131,57 +1054,20 @@ def _qsk2(
     hs: np.ndarray,
     he: np.ndarray,
     qs: np.ndarray,
-) -> np.ndarray:
+) -> pa.Array:
     """Weighted-quantile estimate over tile sketch samples (weight n/K) +
-    exact head events (weight 1). Sample i covers ranks [c_{i-1}, c_i); the
-    estimate linearly interpolates at rank q*(W-1) — with all weights 1 this
-    reduces EXACTLY to the raw kernel's interpolation, so the sketch is only
-    approximate where tiles actually compacted."""
+    exact head events (weight 1), gathered per query by ``_tail_head``
+    (kernels.weighted_percentiles): with all weights 1 it is EXACTLY the
+    raw kernel's interpolation, so the sketch is only approximate where
+    tiles actually compacted."""
     n = (ee - es) + (he - hs)
-    out = np.empty(len(n), object)
+    vals_all = np.concatenate([evals, hvals.astype(np.float64)])
+    wts_all = np.concatenate([ewts.astype(np.float64), np.ones(len(hvals))])
+    rows = []
     for lo, hi in _query_chunks(n):
-        m = hi - lo
-        f1, l1 = _flat_ranges(es[lo:hi], ee[lo:hi])
-        f2, l2 = _flat_ranges(hs[lo:hi], he[lo:hi])
-        seg = np.concatenate(
-            [np.repeat(np.arange(m, dtype=np.int64), l1), np.repeat(np.arange(m, dtype=np.int64), l2)]
-        )
-        hseg = (hvals[f2] if len(f2) else hvals[:0]).astype(np.float64)
-        vals = np.concatenate([evals[f1] if len(f1) else evals[:0], hseg])
-        wts = np.concatenate([ewts[f1] if len(f1) else ewts[:0], np.ones(len(f2))])
-        if len(vals):
-            order = np.lexsort((vals, seg))
-            seg, vals, wts = seg[order], vals[order], wts[order]
-        cum = np.cumsum(wts)
-        counts = np.bincount(seg, minlength=m) if len(seg) else np.zeros(m, np.int64)
-        idx_end = np.cumsum(counts)
-        idx_start = idx_end - counts
-        nonz = counts > 0
-        segw_start = np.zeros(m)
-        W = np.zeros(m)
-        if len(cum):
-            segw_start[nonz] = np.where(idx_start[nonz] > 0, cum[idx_start[nonz] - 1], 0.0)
-            W[nonz] = cum[idx_end[nonz] - 1] - segw_start[nonz]
-        cols = []
-        for q in qs:
-            t = q * np.maximum(W - 1, 0)
-
-            def rank_val(tt):
-                tgt = segw_start + np.minimum(tt, np.maximum(W - 1, 0))
-                idx = np.searchsorted(cum, tgt, side="right") if len(cum) else np.zeros(m, np.int64)
-                idx = np.clip(idx, idx_start, np.maximum(idx_end - 1, idx_start))
-                return vals[np.clip(idx, 0, max(len(vals) - 1, 0))] if len(vals) else np.zeros(m)
-
-            t0 = np.floor(t)
-            frac = t - t0
-            cols.append(rank_val(t0) * (1 - frac) + rank_val(t0 + 1) * frac)
-        stacked = np.stack(cols, axis=1) if cols else np.zeros((m, 0))
-        out[lo:hi] = _obj_from_rows(stacked, nonz)
-    return out
-
-
-def _obj_from_rows(stacked: np.ndarray, nonz: np.ndarray) -> np.ndarray:
-    res = np.empty(len(nonz), object)
-    for i in range(len(nonz)):
-        res[i] = [float(x) for x in stacked[i]] if nonz[i] else None
-    return res
+        flat, lens = _tail_head(es[lo:hi], ee[lo:hi], hs[lo:hi], he[lo:hi], len(evals))
+        seg = np.repeat(np.arange(hi - lo, dtype=np.int64), lens)
+        vals, wts = vals_all[flat], wts_all[flat]
+        order = np.lexsort((vals, seg))
+        rows.append(weighted_percentiles(lens, vals[order], wts[order], qs))
+    return percentile_lists(np.concatenate(rows), n <= 0)

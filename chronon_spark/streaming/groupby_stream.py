@@ -218,8 +218,7 @@ def stream_running_features(stream: DataFrame, gb: GroupBy, time_col: str = "ts"
 
     right_types = {f.name: f.dataType for f in stream.schema.fields}
     # inputs whose SUM is BIGINT keep BIGINT state and int64 scans (exact
-    # above 2^53); Spark hands an integral column holding nulls over as
-    # float64, which stays inexact there
+    # above 2^53)
     integral = {
         c: isinstance(part_output_type(Aggregation(c, Op.SUM).parts()[0], right_types[c]), T.LongType)
         for c in in_cols
@@ -240,6 +239,19 @@ def stream_running_features(stream: DataFrame, gb: GroupBy, time_col: str = "ts"
     ]
     out_schema = T.StructType(list(stream.schema.fields) + feat_fields)
     in_names = [f.name for f in stream.schema.fields]
+    # Spark hands an integer column that holds nulls to pandas as float64,
+    # which rounds above 2^53: each non-key one crosses as a non-null int64
+    # plus a null flag, and fn rebuilds the nullable column
+    carried = {
+        f.name: f"__null_{f.name}"
+        for f in stream.schema.fields
+        if isinstance(f.dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
+        and f.name not in gb.keys
+    }
+    carrier = stream.select(
+        *[F.coalesce(c, F.lit(0)).cast("long").alias(c) if c in carried else c for c in in_names],
+        *[F.col(c).isNull().alias(flag) for c, flag in carried.items()],
+    )
 
     def fn(key, pdfs, state: GroupState):
         names = [f.name for f in state_fields]
@@ -254,6 +266,8 @@ def stream_running_features(stream: DataFrame, gb: GroupBy, time_col: str = "ts"
         # events (violating strict ts' < ts)
         chunks = [p for p in pdfs if len(p)]
         for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
+            for c, flag in carried.items():
+                pdf[c] = pd.arrays.IntegerArray(pdf[c].to_numpy(np.int64), pdf[flag].to_numpy(bool))
             pdf = pdf.sort_values([time_col] + tie, kind="stable").reset_index(drop=True)
             out = pdf[in_names].copy()
             # strict ts' < ts, same as the batch as-of kernel: a row sees only
@@ -304,7 +318,7 @@ def stream_running_features(stream: DataFrame, gb: GroupBy, time_col: str = "ts"
             yield out
         state.update(tuple(st[n] for n in names))
 
-    return stream.groupBy(*gb.keys).applyInPandasWithState(
+    return carrier.groupBy(*gb.keys).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from chronon_spark.api import AggregationPart, GroupBy, Op
 from chronon_spark.resolution import tail_hop_millis
@@ -65,6 +66,15 @@ def _agg_slice(part: AggregationPart, vals: pd.Series) -> object:
     if op == Op.APPROX_PERCENTILE:
         return [float(x) for x in np.quantile(v.astype(np.float64), list(part.percentiles))]
     raise NotImplementedError(op)
+
+
+def pylist(arr: pa.Array) -> list:
+    """A kernel result (a typed ``pa.Array``) as Python values, maps as
+    dicts — the shape ``_agg_slice`` returns."""
+    vals = arr.to_pylist()
+    if pa.types.is_map(arr.type):
+        return [None if v is None else dict(v) for v in vals]
+    return vals
 
 
 def naive_features(

@@ -21,7 +21,7 @@ from chronon_spark.aggregators.kernels import (
     compute_parts_multikey,
 )
 from chronon_spark.api import Aggregation, GroupBy, Op
-from tests.oracle import _agg_slice
+from tests.oracle import _agg_slice, pylist
 from chronon_spark.resolution import tail_hop_millis
 
 OPS = [
@@ -67,12 +67,13 @@ def stream(draw):
 
 def _compute(events, parts, q_ts, include_equal, sawtooth):
     """The composite-index kernel on one key (``events`` a ``pa.Table``):
-    all-zero key codes."""
+    all-zero key codes; its typed results read back as Python values."""
     r_ts = events.column("__ts_us").to_numpy()
     base, block = composite_layout(q_ts, r_ts)
     mec = MultiKeyEventColumns(events, np.zeros(len(r_ts), np.int64), r_ts, [], base, block)
     q_codes = np.zeros(len(q_ts), np.int64)
-    return compute_parts_multikey(mec, parts, q_codes, q_ts, include_equal, sawtooth)
+    feats = compute_parts_multikey(mec, parts, q_codes, q_ts, include_equal, sawtooth)
+    return {name: pylist(arr) for name, arr in feats.items()}
 
 
 def _oracle(part, ev_ts, vals, q, include_equal, sawtooth):

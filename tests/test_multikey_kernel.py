@@ -20,7 +20,7 @@ from chronon_spark.aggregators.kernels import (
 from chronon_spark.api import Aggregation, GroupBy, Op
 from chronon_spark.operators.asof_join import composite_apply
 from chronon_spark.sources.synth import synth_queries, synth_transcripts
-from tests.oracle import _agg_slice, naive_features
+from tests.oracle import _agg_slice, naive_features, pylist
 
 ALL_OPS_GB = GroupBy(
     keys=["conv_id"],
@@ -50,7 +50,8 @@ ALL_OPS_GB = GroupBy(
 
 def _multikey(ev, q, parts, include_equal, sawtooth):
     """The kernel over the events as a ``pa.Table`` (nulls in its validity
-    bitmaps), keys factorized across queries and events."""
+    bitmaps), keys factorized across queries and events; its typed results
+    read back as Python values."""
     joint = pd.concat([q["conv_id"], ev["conv_id"]], ignore_index=True)
     codes = pd.factorize(joint)[0]
     lcodes, rcodes = codes[: len(q)], codes[len(q) :]
@@ -59,7 +60,8 @@ def _multikey(ev, q, parts, include_equal, sawtooth):
     base, block = composite_layout(q_ts, r_ts)
     events = pa.Table.from_pandas(ev, preserve_index=False)
     mec = MultiKeyEventColumns(events, rcodes, r_ts, ["turn_idx"], base, block)
-    return compute_parts_multikey(mec, parts, lcodes, q_ts, include_equal, sawtooth)
+    feats = compute_parts_multikey(mec, parts, lcodes, q_ts, include_equal, sawtooth)
+    return {name: pylist(arr) for name, arr in feats.items()}
 
 
 def _null(x):
@@ -199,7 +201,7 @@ def test_overflow_split_matches_oracle():
         mec = MultiKeyEventColumns(rt, rc, rt.column("__ts_us").to_numpy(), [], base, block)
         feats = compute_parts_multikey(mec, parts, lc, lt.column("__ts_us").to_numpy())
         for p in parts:
-            lt = lt.append_column(p.output_name, pa.array(feats[p.output_name], from_pandas=True))
+            lt = lt.append_column(p.output_name, feats[p.output_name])
         return lt
 
     lt = pa.Table.from_pandas(q, preserve_index=False)

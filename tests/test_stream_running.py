@@ -168,3 +168,40 @@ def test_integral_running_exact_above_2_53(spark, tmp_path_factory):
     got = {(r.conv_id, r.turn_idx): [r[c] for c in cols] for r in spark.table("t_run_big").collect()}
     assert got == want
     assert want[("a", 3)] == [2 * big + 9, 5, big + 3]
+
+
+def test_nullable_bigint_running_exact(spark, tmp_path_factory):
+    """A BIGINT column holding nulls stays exact above 2^53: the operator
+    passes it through unchanged, and SUM/MIN/MAX equal the batch as-of join
+    (Spark's pandas conversion hands such a column over as float64, which
+    read 2^53+1 back as 2^53)."""
+    import datetime as dt
+
+    big = 2**53 + 1
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("a", 0, big), ("a", 1, None), ("a", 2, 3)]
+    ev = spark.createDataFrame(
+        [(k, n, t0 + dt.timedelta(minutes=n), v) for k, n, v in rows],
+        "conv_id string, turn_idx int, ts timestamp, v bigint",
+    )
+    gb = GroupBy(
+        keys=["conv_id"],
+        aggregations=[Aggregation("v", op, windows=(None,)) for op in (Op.SUM, Op.MIN, Op.MAX)],
+        tie_breakers=["turn_idx"],
+    )
+    d = str(tmp_path_factory.mktemp("run_null_big"))
+    ev.write.parquet(f"{d}/all")
+    schema = spark.read.parquet(f"{d}/all").schema
+    stream = spark.readStream.schema(schema).option("recursiveFileLookup", "true").parquet(d)
+    _drain(stream_running_features(stream, gb), "t_run_null_big")
+    cols = ["v", "v_sum", "v_min", "v_max"]
+    t = spark.read.parquet(f"{d}/all")
+    want = {r.turn_idx: [r[c] for c in cols] for r in asof_join(t, t, gb).collect()}
+    got = {r.turn_idx: [r[c] for c in cols] for r in spark.table("t_run_null_big").collect()}
+    assert got == want
+    assert want == {
+        0: [big, None, None, None],
+        1: [None, big, big, big],
+        2: [3, big, big, big],
+    }
+
