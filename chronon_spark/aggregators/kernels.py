@@ -357,21 +357,30 @@ def int_range_sum(vals: np.ndarray, s: np.ndarray, e: np.ndarray) -> np.ndarray:
     return p[e] - p[s]
 
 
+def pick_extreme(a: np.ndarray, b: np.ndarray, take_min: bool) -> np.ndarray:
+    """Elementwise MIN or MAX of ``a`` and ``b`` under Spark's ordering,
+    where NaN sorts above every number: MIN skips a NaN unless both are NaN
+    (``np.fmin``), MAX returns NaN when either is (``np.maximum``)."""
+    if a.dtype.kind == "f" or b.dtype.kind == "f":
+        return np.fmin(a, b) if take_min else np.maximum(a, b)
+    return np.where((a <= b) if take_min else (a >= b), a, b)
+
+
 def _sparse_table(vals: np.ndarray, take_min: bool) -> list[np.ndarray]:
     tables = [vals]
     k = 1
     while (1 << k) <= len(vals):
         prev = tables[-1]
         half = 1 << (k - 1)
-        a, b = prev[:-half], prev[half:]
-        tables.append(np.where((a <= b) if take_min else (a >= b), a, b))
+        tables.append(pick_extreme(prev[:-half], prev[half:], take_min))
         k += 1
     return tables
 
 
 def range_extreme(vals: np.ndarray, s: np.ndarray, e: np.ndarray, take_min: bool) -> np.ndarray:
-    """MIN or MAX of ``vals`` over each range [s, e), by sparse table; an
-    empty range's slot holds an arbitrary value (the caller masks it)."""
+    """MIN or MAX of ``vals`` over each range [s, e), by sparse table
+    (``pick_extreme``'s NaN rule); an empty range's slot holds an arbitrary
+    value (the caller masks it)."""
     tables = _sparse_table(vals, take_min)
     n = e - s
     out = np.zeros(len(s), vals.dtype)
@@ -383,9 +392,7 @@ def range_extreme(vals: np.ndarray, s: np.ndarray, e: np.ndarray, take_min: bool
     for jj in np.unique(j[pos]):
         m = pos & (j == jj)
         t = tables[jj]
-        a = t[s[m]]
-        b = t[e[m] - (1 << jj)]
-        out[m] = np.where((a <= b) if take_min else (a >= b), a, b)
+        out[m] = pick_extreme(t[s[m]], t[e[m] - (1 << jj)], take_min)
     return out
 
 

@@ -47,6 +47,14 @@ NOT uploadable: bucketed non-scalar ops, fractional DECIMAL inputs
 
 Valid fetch range: ``batchEndTs <= queryTs < batchEndTs + tailBuffer`` (after
 that the reference re-uploads a fresh batch; we assert the same contract).
+Streaming rows and stream tiles outside that range reach no query and are
+not scanned.
+
+Design rule: the plans are built as SQL text. Each expression is one
+``selectExpr``/``F.expr`` string, parsed once by the JVM, instead of a
+``Column`` tree assembled one py4j round trip at a time. Every column name
+in the text goes through ``operators/tiles.sql_name``, and the only other
+values interpolated are Python ints.
 """
 
 from __future__ import annotations
@@ -59,7 +67,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from chronon_spark.aggregators.decimal import rewrite_decimal_inputs
 from chronon_spark.api import GroupBy, Op
 from chronon_spark.operators.asof_join import cogroup_apply, ensure_ts_us
-from chronon_spark.operators.tiles import ir_merge_kernel, ir_tile_column, qsk_agg_expr
+from chronon_spark.operators.tiles import ir_merge_kernel, ir_tile_column, qsk_agg_expr, sql_name
 from chronon_spark.resolution import tail_hop_millis
 from chronon_spark.types import part_output_type
 
@@ -140,45 +148,40 @@ def build_batch_irs(
     parts = _check(gb)
     _check_alignment(parts, batch_end_ts_us)
     buf_us = tail_buffer_ms * 1000
-    ev = ensure_ts_us(_integral_inputs(events, gb), gb.time_column).where(F.col(_TS_US) < batch_end_ts_us)
-    for k in gb.keys:
-        ev = ev.where(F.col(k).isNotNull())
-    tie_cols = [t for t in gb.tie_breakers if t in events.columns and t not in gb.keys]
+    keys = [sql_name(k) for k in gb.keys]
+    ev = ensure_ts_us(_integral_inputs(events, gb), gb.time_column).where(
+        " AND ".join([f"{_TS_US} < {batch_end_ts_us}", *(f"{k} IS NOT NULL" for k in keys)])
+    )
+    ties = [sql_name(t) for t in gb.tie_breakers if t in events.columns and t not in gb.keys]
 
-    def entry_struct(c: str, cond):
-        fields = [F.col(_TS_US).alias("t")]
-        fields += [F.col(t).alias(f"b{i}") for i, t in enumerate(tie_cols)]
-        fields.append(F.col(c).alias("v"))
-        return F.when(cond & F.col(c).isNotNull(), F.struct(*fields))
-
-    def part_aggs(p, cond) -> list[tuple[str, object]]:
+    def part_aggs(p, cond: str) -> list[tuple[str, str]]:
         """(field, partial aggregate) of part ``p`` over the events where
         ``cond`` holds; histogram and bucketed parts build theirs in a
         two-level aggregation instead."""
-        val = F.when(cond, F.col(p.input_column))
+        c = sql_name(p.input_column)
+        val = f"CASE WHEN {cond} THEN {c} END"
         aggs = []
         if p.op in (Op.COUNT, Op.SUM, Op.AVERAGE) or p.op in _MOMENT_OPS:
-            aggs.append(("cnt", F.count(val)))
+            aggs.append(("cnt", f"count({val})"))
         if p.op in (Op.SUM, Op.AVERAGE) or p.op in _MOMENT_OPS:
-            aggs.append(("sm", F.sum(val)))  # input type, as in the tiles
+            aggs.append(("sm", f"sum({val})"))  # input type, as in the tiles
         if p.op in _MOMENT_OPS:
-            aggs += [
-                (f"p{pw}", F.sum(F.pow(val.cast("double"), F.lit(pw))))
-                for pw in range(2, _pow_upto(p.op) + 1)
-            ]
+            aggs += [(f"p{pw}", f"sum(pow(CAST({val} AS DOUBLE), {pw}))") for pw in range(2, _pow_upto(p.op) + 1)]
         if p.op == Op.MIN:
-            aggs.append(("mn", F.min(val)))
+            aggs.append(("mn", f"min({val})"))
         if p.op == Op.MAX:
-            aggs.append(("mx", F.max(val)))
+            aggs.append(("mx", f"max({val})"))
         if p.op in _ORDER_OPS:
-            ents = F.collect_list(entry_struct(p.input_column, cond))
-            asc = p.op in (Op.FIRST, Op.FIRST_K)
-            aggs.append(("ent", F.slice(F.sort_array(ents, asc=asc), 1, _entry_k(p))))
+            fields = ", ".join([f"{_TS_US} AS t", *(f"{t} AS b{i}" for i, t in enumerate(ties)), f"{c} AS v"])
+            ents = f"collect_list(CASE WHEN ({cond}) AND {c} IS NOT NULL THEN struct({fields}) END)"
+            asc = "true" if p.op in (Op.FIRST, Op.FIRST_K) else "false"
+            aggs.append(("ent", f"slice(sort_array({ents}, {asc}), 1, {_entry_k(p)})"))
         if p.op in _EXTREME_OPS:
-            coll = F.collect_set(val) if p.op == Op.UNIQUE_TOP_K else F.collect_list(val)
-            aggs.append(("ext", F.slice(F.sort_array(coll, asc=p.op == Op.BOTTOM_K), 1, p.k)))
+            coll = "collect_set" if p.op == Op.UNIQUE_TOP_K else "collect_list"
+            asc = "true" if p.op == Op.BOTTOM_K else "false"
+            aggs.append(("ext", f"slice(sort_array({coll}({val}), {asc}), 1, {int(p.k)})"))
         if p.op in _SET_OPS:
-            aggs.append(("st", F.collect_set(val)))
+            aggs.append(("st", f"collect_set({val})"))
         if p.op == Op.APPROX_PERCENTILE:
             aggs.append(("qsk", qsk_agg_expr(val, 512)))
         return aggs
@@ -186,47 +189,24 @@ def build_batch_irs(
     # collapsed: one conditional-aggregate pass (whole-stage codegen, map-side
     # combine — the 100 TB bulk of history reduces to one row per key here)
     aggs = []
-    hist_parts: list[tuple[int, object]] = []
-    bucket_parts: list[tuple[int, object]] = []
+    bucket_parts: list[tuple[int, str]] = []
+    hist_parts: list[tuple[int, str]] = []
     for i, p in enumerate(parts):
         if p.window.millis is None:
-            cond = F.lit(True)
+            cond = "true"
         else:
-            tail = batch_end_ts_us - p.window.millis * 1000
-            cond = F.col(_TS_US) >= F.lit(tail + buf_us)
+            cond = f"{_TS_US} >= {batch_end_ts_us - p.window.millis * 1000 + buf_us}"
         if p.bucket:
             bucket_parts.append((i, cond))  # per-bucket IRs built below (two-level agg)
         elif p.op in _HIST_OPS:
             hist_parts.append((i, cond))
         else:
-            aggs += [a.alias(f"__c{i}_{f}") for f, a in part_aggs(p, cond)]
-    if not aggs:  # every part bucketed/hist: keep a row-count anchor
-        aggs = [F.count(F.lit(1)).alias("__ir_rows")]
-    out = ev.groupBy(*gb.keys).agg(*aggs)
-    for i, cond in bucket_parts:
-        p = parts[i]
-        c, b = p.input_column, p.bucket
-        st_aggs, st_fields = _bucket_scalar_aggs(p, F.col(c))
-        bk = (
-            ev.where(cond & F.col(c).isNotNull() & F.col(b).isNotNull())
-            .select(*gb.keys, F.col(b).cast("string").alias("__b"), c)
-            .groupBy(*gb.keys, "__b")
-            .agg(*st_aggs)
-            .groupBy(*gb.keys)
-            .agg(F.collect_list(F.struct("__b", *st_fields)).alias(f"__c{i}_bk"))
-        )
-        out = out.join(bk, on=gb.keys, how="full")
-    for i, cond in hist_parts:
-        c = parts[i].input_column
-        vc = (
-            ev.where(cond & F.col(c).isNotNull())
-            .select(*gb.keys, F.col(c).cast("string").alias("__v"))
-            .groupBy(*gb.keys, "__v")
-            .agg(F.count("*").alias("__n"))
-            .groupBy(*gb.keys)
-            .agg(F.collect_list(F.struct("__v", "__n")).alias(f"__c{i}_hmap"))
-        )
-        out = out.join(vc, on=gb.keys, how="full")
+            aggs += [F.expr(f"{a} AS {sql_name(f'__c{i}_{f}')}") for f, a in part_aggs(p, cond)]
+    # every part bucketed/hist: keep a row-count anchor
+    out = ev.groupBy(*keys).agg(*(aggs or [F.expr("count(1) AS __ir_rows")]))
+    for i, cond in bucket_parts + hist_parts:
+        name = f"__c{i}_{'bk' if parts[i].bucket else 'hmap'}"
+        out = out.join(_two_level(ev, gb, parts[i], cond, [], name), on=gb.keys, how="full")
 
     # tail hops: ONE slice scan + ONE two-level aggregation PER HOP SIZE —
     # a per-part pipeline would re-scan the tail slice P times (at 100 TB
@@ -241,114 +221,79 @@ def build_batch_irs(
             continue
         hop_us = tail_hop_millis(p.window.millis) * 1000
         tail = batch_end_ts_us - p.window.millis * 1000
-        c = F.col(p.input_column)
         # >= tail: an event exactly at batchEnd - window must land in the tail
         # hops (collapsed starts at tail + buf), or fetch undercounts vs the
         # sawtooth backfill whose hop-rounded window start is inclusive;
         # hops below a query's rounded wstart are filtered at fetch time
         if p.bucket or p.op in _HIST_OPS:
-            sl = ev.where(
-                (F.col(_TS_US) >= tail) & (F.col(_TS_US) < min(tail + buf_us, batch_end_ts_us))
-            ).withColumn("__hop", (F.col(_TS_US) / F.lit(hop_us)).cast("long") * F.lit(hop_us))
-            if p.bucket:
-                st_aggs, st_fields = _bucket_scalar_aggs(p, c)
-                hops = (
-                    sl.where(c.isNotNull() & F.col(p.bucket).isNotNull())
-                    .select(*gb.keys, "__hop", F.col(p.bucket).cast("string").alias("__b"), p.input_column)
-                    .groupBy(*gb.keys, "__hop", "__b")
-                    .agg(*st_aggs)
-                    .groupBy(*gb.keys, "__hop")
-                    .agg(F.collect_list(F.struct("__b", *st_fields)).alias("bk"))
-                    .groupBy(*gb.keys)
-                    .agg(
-                        F.sort_array(F.collect_list(F.struct(F.col("__hop").alias("hop"), "bk"))).alias(
-                            f"__tails_{i}"
-                        )
-                    )
-                )
-            else:
-                hops = (
-                    sl.where(c.isNotNull())
-                    .select(*gb.keys, "__hop", c.cast("string").alias("__v"))
-                    .groupBy(*gb.keys, "__hop", "__v")
-                    .agg(F.count("*").alias("__n"))
-                    .groupBy(*gb.keys, "__hop")
-                    .agg(F.collect_list(F.struct("__v", "__n")).alias("hmap"))
-                    .groupBy(*gb.keys)
-                    .agg(
-                        F.sort_array(F.collect_list(F.struct(F.col("__hop").alias("hop"), "hmap"))).alias(
-                            f"__tails_{i}"
-                        )
-                    )
-                )
+            sl = _hop_slice(ev, tail, min(tail + buf_us, batch_end_ts_us), hop_us)
+            field = "bk" if p.bucket else "hmap"
+            hops = _two_level(sl, gb, p, "true", ["__hop"], field).groupBy(*keys).agg(
+                F.expr(f"sort_array(collect_list(struct(__hop AS hop, {field}))) AS {sql_name(f'__tails_{i}')}")
+            )
             out = out.join(hops, on=gb.keys, how="full")
             continue
         hop_groups.setdefault(hop_us, []).append(i)
 
     for hop_us, idxs in hop_groups.items():
         tails = {i: batch_end_ts_us - parts[i].window.millis * 1000 for i in idxs}
-        lo = min(tails.values())
-        hi = min(max(tails.values()) + buf_us, batch_end_ts_us)
-        sl = ev.where((F.col(_TS_US) >= lo) & (F.col(_TS_US) < hi)).withColumn(
-            "__hop", (F.col(_TS_US) / F.lit(hop_us)).cast("long") * F.lit(hop_us)
-        )
+        sl = _hop_slice(ev, min(tails.values()), min(max(tails.values()) + buf_us, batch_end_ts_us), hop_us)
         lvl1: list = []  # per-part partial aggregates over (keys, hop)
-        lvl2: list = []  # per-part (presence cond, tail field names)
+        lvl2: list = []  # per-part tail columns
         for i in idxs:
-            cond = (F.col(_TS_US) >= tails[i]) & (
-                F.col(_TS_US) < min(tails[i] + buf_us, batch_end_ts_us)
-            )
-            fields = part_aggs(parts[i], cond)
-            lvl1 += [a.alias(f"__t{i}_{f}") for f, a in fields]
-            lvl2.append((i, _present(fields[0][0], F.col(f"__t{i}_{fields[0][0]}")), [f for f, _ in fields]))
-        per_hop = sl.groupBy(*gb.keys, "__hop").agg(*lvl1)
-        # collect_list drops nulls: a (key, hop) row where THIS part saw no
-        # in-range values contributes no tail entry (same as the old per-part
-        # pipeline, whose slice filter kept the row out entirely)
-        hops = per_hop.groupBy(*gb.keys).agg(
-            *[
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            present,
-                            F.struct(
-                                F.col("__hop").alias("hop"),
-                                *[F.col(f"__t{i}_{f}").alias(f) for f in names],
-                            ),
-                        )
-                    )
-                ).alias(f"__tails_{i}")
-                for i, present, names in lvl2
-            ]
-        )
+            cond = f"{_TS_US} >= {tails[i]} AND {_TS_US} < {min(tails[i] + buf_us, batch_end_ts_us)}"
+            fields = [(f, sql_name(f"__t{i}_{f}"), a) for f, a in part_aggs(parts[i], cond)]
+            lvl1 += [F.expr(f"{a} AS {name}") for _, name, a in fields]
+            # collect_list drops nulls: a (key, hop) row where THIS part saw
+            # no in-range values contributes no tail entry
+            entry = ", ".join(["__hop AS hop", *(f"{name} AS {f}" for f, name, _ in fields)])
+            present = _present(fields[0][0], fields[0][1])
+            tails_i = sql_name(f"__tails_{i}")
+            lvl2.append(F.expr(f"sort_array(collect_list(CASE WHEN {present} THEN struct({entry}) END)) AS {tails_i}"))
+        hops = sl.groupBy(*keys, "__hop").agg(*lvl1).groupBy(*keys).agg(*lvl2)
         out = out.join(hops, on=gb.keys, how="full")
     return out
 
 
-def _present(field: str, col):
+def _hop_slice(ev: DataFrame, lo: int, hi: int, hop_us: int) -> DataFrame:
+    """The events in ``[lo, hi)`` with their hop start ``__hop``."""
+    return ev.where(f"{_TS_US} >= {lo} AND {_TS_US} < {hi}").selectExpr(
+        "*", f"CAST({_TS_US} / {hop_us} AS BIGINT) * {hop_us} AS __hop"
+    )
+
+
+def _two_level(ev: DataFrame, gb: GroupBy, p, cond: str, group: list[str], name: str) -> DataFrame:
+    """A bucketed or histogram part's IR per (keys, *group) as column
+    ``name``: per-bucket scalar partials (the sum stays double, as in the
+    bucketed tiles) or value counts, collected into an array of structs from
+    a (keys, *group, bucket or value) aggregation."""
+    keys = [*(sql_name(k) for k in gb.keys), *group]
+    c = sql_name(p.input_column)
+    if p.bucket:
+        b = sql_name(p.bucket)
+        aggs = {"cnt": f"count({c})"}
+        if p.op in (Op.SUM, Op.AVERAGE):
+            aggs["sm"] = f"sum(CAST({c} AS DOUBLE))"
+        if p.op == Op.MIN:
+            aggs["mn"] = f"min({c})"
+        if p.op == Op.MAX:
+            aggs["mx"] = f"max({c})"
+        pre = ev.where(f"{cond} AND {c} IS NOT NULL AND {b} IS NOT NULL")
+        pre, fields = pre.selectExpr(*keys, f"CAST({b} AS STRING) AS __b", c), ["__b", *aggs]
+    else:
+        pre = ev.where(f"{cond} AND {c} IS NOT NULL").selectExpr(*keys, f"CAST({c} AS STRING) AS __v")
+        aggs, fields = {"__n": "count(1)"}, ["__v", "__n"]
+    per = pre.groupBy(*keys, fields[0]).agg(*[F.expr(f"{a} AS {f}") for f, a in aggs.items()])
+    return per.groupBy(*keys).agg(F.expr(f"collect_list(struct({', '.join(fields)})) AS {sql_name(name)}"))
+
+
+def _present(field: str, col: str) -> str:
     """A (key, hop) partial that saw at least one in-range value."""
     if field == "cnt":
-        return col > 0
+        return f"{col} > 0"
     if field in ("ent", "ext", "st"):
-        return F.size(col) > 0
-    return col.isNotNull()
-
-
-def _bucket_scalar_aggs(p, c):
-    """Scalar partial exprs + struct field names for one bucketed part; the
-    per-bucket sum stays double, as in the bucketed tiles."""
-    st_aggs = [F.count(c).alias("cnt")]
-    st_fields = ["cnt"]
-    if p.op in (Op.SUM, Op.AVERAGE):
-        st_aggs.append(F.sum(c.cast("double")).alias("sm"))
-        st_fields.append("sm")
-    if p.op == Op.MIN:
-        st_aggs.append(F.min(c).alias("mn"))
-        st_fields.append("mn")
-    if p.op == Op.MAX:
-        st_aggs.append(F.max(c).alias("mx"))
-        st_fields.append("mx")
-    return st_aggs, st_fields
+        return f"size({col}) > 0"
+    return f"{col} IS NOT NULL"
 
 
 def _check_alignment(parts, batch_end_ts_us: int) -> None:
@@ -381,26 +326,25 @@ def _ir_tiles(batch_irs: DataFrame, gb: GroupBy, parts: list, batch_end_ts_us: i
             i, field = col[3:].split("_", 1)
             names.append((int(i), field))
 
-    def tile_row(ts, lo, tail_part=None, e=None):
-        cols = [ts.alias(_TS_US), lo.alias(_LO_US)]
+    def tile_row(ts: str, lo: str, tail_part: int | None = None) -> str:
+        cols = [f"{ts} AS {_TS_US}", f"{lo} AS {_LO_US}"]
         for j, field in names:
-            stat, x = ir_tile_column(parts[j], field, e[field] if j == tail_part else F.col(f"__c{j}_{field}"))
+            src = f"__e.{sql_name(field)}" if j == tail_part else sql_name(f"__c{j}_{field}")
+            stat, x = ir_tile_column(parts[j], field, src)
             if tail_part is not None and j != tail_part:
-                x = F.when(F.lit(False), x)  # typed null: another part's row
-            cols.append(x.alias(f"__p{j}__{stat}"))
-        return F.struct(*cols)
+                x = f"CASE WHEN false THEN {x} END"  # typed null: another part's row
+            cols.append(f"{x} AS {sql_name(f'__p{j}__{stat}')}")
+        return f"struct({', '.join(cols)})"
 
-    def tail_row(i, hop_i):  # factory: Spark HOF lambdas take exactly one argument
-        return lambda e: tile_row(e["hop"] + (hop_i - 1), F.lit(None).cast("long"), i, e)
-
-    ent_t = [F.array_min(F.transform(F.col(f"__c{j}_ent"), lambda x: x["t"])) for j, f in names if f == "ent"]
-    lo = ent_t[0] if len(ent_t) == 1 else (F.least(*ent_t) if ent_t else F.lit(None).cast("long"))
-    rows = [F.array(tile_row(F.lit(batch_end_ts_us - 1), lo))]
+    ent_t = [f"array_min(transform({sql_name(f'__c{j}_ent')}, __x -> __x.t))" for j, f in names if f == "ent"]
+    lo = ent_t[0] if len(ent_t) == 1 else (f"least({', '.join(ent_t)})" if ent_t else "CAST(NULL AS BIGINT)")
+    rows = [f"array({tile_row(str(batch_end_ts_us - 1), lo)})"]
     for i, p in enumerate(parts):
         if p.window.millis is not None:
             hop_i = tail_hop_millis(p.window.millis) * 1000
-            rows.append(F.transform(F.coalesce(F.col(f"__tails_{i}"), F.array()), tail_row(i, hop_i)))
-    return batch_irs.select(*gb.keys, F.inline(F.concat(*rows)))
+            row = tile_row(f"__e.hop + {hop_i - 1}", "CAST(NULL AS BIGINT)", i)
+            rows.append(f"transform(coalesce({sql_name(f'__tails_{i}')}, array()), __e -> {row})")
+    return batch_irs.selectExpr(*[sql_name(k) for k in gb.keys], f"inline(concat({', '.join(rows)}))")
 
 
 def _merge(
@@ -420,13 +364,16 @@ def _merge(
     ``head_start_us``, else at the ``hop_us`` floor of the query ts."""
     tie_cols = [t for t in gb.tie_breakers if t in heads.columns and t not in gb.keys]
     head_cols = sorted({p.input_column for p in parts} | {p.bucket for p in parts if p.bucket} | set(tie_cols))
-    for k in gb.keys:
-        heads = heads.where(F.col(k).isNotNull())
-    heads = heads.select(*gb.keys, _TS_US, *head_cols)
-    union = tiles.withColumn("__is_tile", F.lit(True)).unionByName(
-        heads.withColumn("__is_tile", F.lit(False)), allowMissingColumns=True
+    heads = heads.where(" AND ".join(f"{sql_name(k)} IS NOT NULL" for k in gb.keys)).selectExpr(
+        *[sql_name(c) for c in [*gb.keys, _TS_US, *head_cols]], "false AS __is_tile"
     )
-    union = union.select(*[F.col(c).alias(f"__r_{c}") for c in union.columns])
+    union = tiles.selectExpr("*", "true AS __is_tile").unionByName(heads, allowMissingColumns=True)
+    # the cogroup reads its inputs back by name (PySpark's ``df[name]``),
+    # which a dot or a backtick breaks: such a column crosses as ``__w{j}``
+    # and the kernel takes its name back
+    wire = {c: f"__w{j}" if "." in c or "`" in c else c for j, c in enumerate(union.columns)}
+    union = union.selectExpr(*[f"{sql_name(c)} AS {sql_name('__r_' + w)}" for c, w in wire.items()])
+    names = {w: c for c, w in wire.items()}
 
     input_types = {f.name: f.dataType for f in heads.schema.fields}
     feat_fields = [
@@ -459,7 +406,7 @@ def _merge(
                 "exceeded — rebuild IRs with a later batchEnd or a larger "
                 "tail_buffer_ms"
             )
-        return merge(lt, rt, lcodes, rcodes, base, block)
+        return merge(lt, rt.rename_columns([names.get(c, c) for c in rt.column_names]), lcodes, rcodes, base, block)
 
     l = ensure_ts_us(queries, left_time_column)
     return cogroup_apply(l, union, gb.keys, gb.keys, "auto", out_schema, kernel, lo_column=_LO_US)
@@ -481,12 +428,14 @@ def fetch_features(
 
     The kernel is the tiled backfill's (operators/tiles.ir_merge_kernel):
     the IR table becomes its tile rows (``_ir_tiles``) and the streaming rows
-    at/after batchEnd its head events, with the head starting at batchEnd.
+    in the valid range its head events, with the head starting at batchEnd.
     One output row per query row, null features for a null key."""
     parts = _check(gb)
     _check_alignment(parts, batch_end_ts_us)
+    # the head scan stops at the valid range's end: a later row reaches no
+    # query, and a query there raises in the kernel
     heads = ensure_ts_us(_integral_inputs(streaming, gb), gb.time_column).where(
-        F.col(_TS_US) >= batch_end_ts_us
+        f"{_TS_US} >= {batch_end_ts_us} AND {_TS_US} < {batch_end_ts_us + tail_buffer_ms * 1000}"
     )
     tiles = _ir_tiles(batch_irs, gb, parts, batch_end_ts_us)
     return _merge(
@@ -530,35 +479,30 @@ def fetch_features_tiled(
     hop_us = 1000 * min(tail_hop_millis(p.window.millis) for p in parts)
 
     q = ensure_ts_us(queries, left_time_column)
-    n_misaligned = q.where(F.pmod(F.col(_TS_US), F.lit(hop_us)) != 0).limit(1).count()
-    if n_misaligned:
+    if q.where(f"pmod({_TS_US}, {hop_us}) != 0").limit(1).count():
         raise ValueError(
             f"tiled fetch needs tile-aligned query timestamps (multiples of {hop_us}us); "
             "use fetch_features (raw streaming rows) for arbitrary timestamps"
         )
 
     ir = _ir_tiles(batch_irs, gb, parts, batch_end_ts_us)
-    st = stream_tiles.withColumn(
-        "__hop_us", F.unix_micros(F.col("tile_start").cast("timestamp"))
-    ).where(F.col("__hop_us") >= batch_end_ts_us)
-    cols = [*gb.keys, (F.col("__hop_us") + (hop_us - 1)).alias(_TS_US)]
+    hop_start = "unix_micros(CAST(tile_start AS TIMESTAMP))"
+    cols = [*(sql_name(k) for k in gb.keys), f"{hop_start} + {hop_us - 1} AS {_TS_US}"]
     for f in ir.schema.fields:
         if not f.name.startswith("__p"):
             continue
         i, stat = f.name[3:].split("__", 1)
-        src = F.col(f"{parts[int(i)].input_column}__{stat}")
+        src = sql_name(f"{parts[int(i)].input_column}__{stat}")
         if stat.startswith("bk__"):
             # stream bucket IRs carry the union of stats across the parts
             # sharing (col, bucket): keep this part's fields
-            src = F.transform(src, _struct_fields(f.dataType.elementType))
-        cols.append(src.alias(f.name))
-    tiles = ir.unionByName(st.select(*cols), allowMissingColumns=True)
+            fields = ", ".join(f"__s.{sql_name(g.name)} AS {sql_name(g.name)}" for g in f.dataType.elementType.fields)
+            src = f"transform({src}, __s -> struct({fields}))"
+        cols.append(f"{src} AS {sql_name(f.name)}")
+    valid_end_us = batch_end_ts_us + tail_buffer_ms * 1000
+    st = stream_tiles.where(f"{hop_start} >= {batch_end_ts_us} AND {hop_start} < {valid_end_us}")
+    tiles = ir.unionByName(st.selectExpr(*cols), allowMissingColumns=True)
     heads = ensure_ts_us(_integral_inputs(events_like, gb).limit(0), gb.time_column)
     return _merge(
         queries, tiles, heads, gb, parts, batch_end_ts_us, left_time_column, tail_buffer_ms, hop_us=hop_us
     )
-
-
-def _struct_fields(t: T.StructType):
-    """Spark HOF lambda: the fields of struct type ``t`` out of a wider struct."""
-    return lambda e: F.struct(*[e[f.name].alias(f.name) for f in t.fields])

@@ -114,6 +114,7 @@ from chronon_spark.aggregators.kernels import (
     hist_finalize,
     int_range_sum,
     percentile_lists,
+    pick_extreme,
     range_extreme,
     valid_series,
     weighted_percentiles,
@@ -241,21 +242,26 @@ def _tile_bucket_stats(
     return out
 
 
-def qsk_agg_expr(col, K: int):
-    """Quantile-sketch partial: sorted values, systematically sampled to K
-    with a uniform per-sample weight n/K (one-level KLL compactor). Shared by
-    the tile builder and the batch-IR upload; NULL when no values. The input
-    column expression may carry a conditional (upload's collapsed slice)."""
-    arr = F.sort_array(F.collect_list(col.cast("double")))
-    n = F.size(arr)
-    sampled = F.when(n <= K, arr).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(K - 1)),
-            lambda i: F.element_at(arr, ((i * n) / F.lit(K)).cast("int") + 1),
-        )
+def sql_name(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-wrapped, inner backticks
+    doubled. Every column name put into SQL text goes through here."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def qsk_agg_expr(col: str, K: int) -> str:
+    """Quantile-sketch partial as SQL text: sorted values, systematically
+    sampled to K with a uniform per-sample weight n/K (one-level KLL
+    compactor). Shared by the tile builder and the batch-IR upload; NULL
+    when no values. ``col`` is SQL text and may carry a conditional
+    (upload's collapsed slice)."""
+    arr = f"sort_array(collect_list(CAST({col} AS DOUBLE)))"
+    n = f"size({arr})"
+    sampled = (
+        f"CASE WHEN {n} <= {K} THEN {arr} ELSE transform(sequence(0, {K - 1}), "
+        f"__i -> element_at({arr}, CAST((__i * {n}) / {K} AS INT) + 1)) END"
     )
-    w = F.when(n <= K, F.lit(1.0)).otherwise(n.cast("double") / F.lit(K))
-    return F.when(n > 0, F.struct(sampled.alias("s"), w.alias("w")))
+    w = f"CASE WHEN {n} <= {K} THEN 1.0D ELSE CAST({n} AS DOUBLE) / {K} END"
+    return f"CASE WHEN {n} > 0 THEN struct({sampled} AS s, {w} AS w) END"
 
 
 def validate_tiled_spec(gb: GroupBy) -> list:
@@ -334,7 +340,7 @@ def tile_agg_exprs(
         if "set" in stats:
             aggs.append(F.collect_set(c).alias(f"{c}__set"))
         if "qsk" in stats:
-            aggs.append(qsk_agg_expr(F.col(c), int(stats["qsk"])).alias(f"{c}__qsk"))
+            aggs.append(F.expr(qsk_agg_expr(sql_name(c), int(stats["qsk"]))).alias(f"{c}__qsk"))
         if "hist" in stats:
             hist_cols.append(c)
     return aggs, hist_cols
@@ -345,12 +351,13 @@ def tile_agg_exprs(
 _IR_TILE_STATS = {"cnt": "cnt", "sm": "sum", "mn": "min", "mx": "max", "st": "set", "qsk": "qsk"}
 
 
-def ir_tile_column(p: AggregationPart, field: str, col) -> tuple[str, object]:
-    """One batch-IR field of part ``p`` (a collapsed column or a tail-hop
-    struct field, jobs/upload.build_batch_irs) as ``(stat, expr)``: the tile
-    stat the IR-merge kernel reads and the value in the tile format above."""
+def ir_tile_column(p: AggregationPart, field: str, col: str) -> tuple[str, str]:
+    """One batch-IR field of part ``p`` (SQL text of a collapsed column or a
+    tail-hop struct field, jobs/upload.build_batch_irs) as ``(stat, expr)``:
+    the tile stat the IR-merge kernel reads and, as SQL text, the value in
+    the tile format above."""
     if field == "hmap":  # value counts: __n -> __c
-        return "hist", F.transform(col, lambda e: F.struct(e["__v"].alias("__v"), e["__n"].alias("__c")))
+        return "hist", f"transform({col}, __h -> struct(__h.__v AS __v, __h.__n AS __c))"
     if field == "bk":
         return f"bk__{p.bucket}", col
     if field in ("ent", "ext"):
@@ -690,16 +697,13 @@ def _merged_extreme(
     take_min: bool,
 ) -> pa.Array:
     """MIN or MAX over tail partials [ts_, te) and head events [hs, he):
-    typed values and validity merged with np.where. The head value wins
-    only when strictly smaller (larger), so an unordered NaN pair keeps the
-    tail's."""
+    typed values and validity merged under Spark's NaN ordering
+    (``kernels.pick_extreme``), the rule the tile partials were built by."""
     tv = range_extreme(tail.vals, ts_, te, take_min)
     hv = range_extreme(head.vals, hs, he, take_min)
     tnull, hnull = te <= ts_, he <= hs
-    both = ~tnull & ~hnull
-    pick_h = tnull.copy()
-    pick_h[both] = (hv[both] < tv[both]) if take_min else (hv[both] > tv[both])
-    return pa.array(np.where(pick_h, hv, tv), head.type, mask=tnull & hnull)
+    merged = np.where(hnull, tv, pick_extreme(tv, hv, take_min))
+    return pa.array(np.where(tnull, hv, merged), head.type, mask=tnull & hnull)
 
 
 def ir_merge_kernel(

@@ -74,17 +74,12 @@ _NAN_ROWS = [
 ]
 _NONE5 = [None] * 5
 # [sum, average, min, max, last] per query. A NaN result reads NULL on every
-# path. MIN/MAX over a NaN depend on the path: the event kernels compare
-# with numpy (a NaN loses or wins by position), the batch IR takes Spark's
-# min/max (NaN is the largest value).
-_NAN_KERNEL = {
-    "a0": [None, None, 4.0, 4.0, 4.0], "a1": [None, None, 2.0, 4.0, 2.0],
-    "b0": [7.0, 3.5, 2.0, 5.0, 5.0], "b1": _NONE5,
-    "c0": _NONE5, "c1": _NONE5, "d0": _NONE5, "d1": _NONE5,
-}
-_NAN_FETCH = {
+# path. MIN and MAX follow Spark's ordering, where NaN sorts above every
+# number, on every path: MIN skips a NaN unless every value is NaN, MAX is
+# NaN (so NULL) when any value is.
+_NAN_WANT = {
     "a0": [None, None, 1.0, None, 4.0], "a1": [None, None, 1.0, None, 2.0],
-    "b0": [7.0, 3.5, 2.0, 5.0, 5.0], "b1": [None, None, 2.0, 5.0, None],
+    "b0": [7.0, 3.5, 2.0, 5.0, 5.0], "b1": [None, None, 2.0, None, None],
     "c0": [None, None, 7.0, None, None], "c1": [None, None, 7.0, None, None],
     "d0": _NONE5, "d1": _NONE5,
 }
@@ -92,7 +87,8 @@ _NAN_FETCH = {
 
 def test_nan_inputs_read_null(spark):
     """A NaN result of SUM, AVERAGE, MIN, MAX or LAST over a DOUBLE input
-    comes back NULL, never NaN, on the plain, tiled and fetch paths."""
+    comes back NULL, never NaN, and the plain, tiled and fetch paths all
+    give the same answers."""
     import datetime as dt
 
     import pandas as pd
@@ -129,7 +125,7 @@ def test_nan_inputs_read_null(spark):
     def rows(df):
         return {r["qid"]: [r[c] for c in cols] for r in df.collect()}
 
-    assert rows(asof_join(queries, events, gb)) == _NAN_KERNEL
-    assert rows(tiled_sawtooth_asof_join(queries, events, gb)) == _NAN_KERNEL
+    assert rows(asof_join(queries, events, gb)) == _NAN_WANT
+    assert rows(tiled_sawtooth_asof_join(queries, events, gb)) == _NAN_WANT
     irs = build_batch_irs(events, gb, batch_end)
-    assert rows(fetch_features(queries, irs, events, gb, batch_end)) == _NAN_FETCH
+    assert rows(fetch_features(queries, irs, events, gb, batch_end)) == _NAN_WANT
